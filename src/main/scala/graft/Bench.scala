@@ -10,25 +10,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // parallelism floor for compute-dense tiny shuffles (round-16):
-      // AQE coalescing is bytes-based, so gram-explosion / pair-join /
-      // posting-scoring stages fed by byte-tiny shuffles collapsed to
-      // ONE task (0.3-1.0 s single-task stages across a dozen
-      // queries). 16k only binds when per-core shuffle bytes < 1 MB —
-      // at production shuffle sizes the advisory target governs.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "16k"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl", "graft.BenchFs")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // per-scheme fs-op counting for the driver-metadata channel;
+    // SparkConf picks the property up when the session is built
+    System.setProperty("spark.hadoop.fs.file.impl", "graft.BenchFs")
+    val spark = GraftSession.local(cpus.toInt)
     // warmup: exercise scan + shuffle + codegen paths once
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().collect()
@@ -142,7 +127,7 @@ object Bench {
     // round-14 DRIVER-METADATA channel, round-15 fix: job wall is the
     // UNION of in-flight job intervals (active-job refcount), not the
     // SUM — LmStream/TrainStream land independent stores CONCURRENTLY
-    // (SessionConfGate.inParallel), so summed walls overlap and
+    // (StreamSessions.inParallel), so summed walls overlap and
     // driver_s clamped to 0 on exactly the streaming queries the
     // channel was built to attribute (round-14 ADVICE). run wall minus
     // union-busy wall = time NO job was running: FS metadata, plan

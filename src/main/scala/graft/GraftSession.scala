@@ -2,7 +2,10 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session + table-loading helpers shared by Verify/Bench/tests.
+/** The only session factory (Verify, Bench, the probes and the tests
+  * all build through [[local]]; streams and maintainer steps clone its
+  * session through [[graft.streaming.StreamSessions]]), plus
+  * table-loading helpers.
   *
   * Tuned for the local[32] harness but written for cluster scale:
   * shuffle partitions follow core count (a real deployment sets this to

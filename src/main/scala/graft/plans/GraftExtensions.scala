@@ -4,8 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** Engine extensions, installed with
-  * `SparkSession.builder.withExtensions(GraftExtensions.apply)` (or
+/** Engine extensions, installed by [[graft.GraftSession.local]] (or
   * `spark.sql.extensions=graft.plans.GraftExtensions`).
   *
   * Registers the engine's native expressions so SQL and

@@ -85,7 +85,7 @@ final case class LmStream(id: String, text: Column, n: Int,
     * are the right layout for every later probe. */
   def bootstrap(oldDocs: DataFrame, root: String): Unit =
     // independent stores; see processBatch for the concurrency note
-    SessionConfGate.inParallel(
+    StreamSessions.inParallel(
       () => VersionedStore.upsert(
         CorpusSignals.lmRawCounts(oldDocs, text, n)
           .withColumn("last_epoch", lit(-1L)),
@@ -134,18 +134,11 @@ final case class LmStream(id: String, text: Column, n: Int,
     * detected from the staged output inside deltaUpsert (nothing
     * commits), and MOR commits never mutate the files a concurrent
     * plan reads. */
-  def processBatch(batch: DataFrame, epoch: Long, root: String): Unit = {
-    val spark = batch.sparkSession
-    // session-global toggles — serialized across maintainers by the
-    // process-wide gate; micro-batch shuffle sizing rides along (the
-    // only remaining shuffle in the step is the batch-gram count)
-    SessionConfGate.withMicroBatchConf(spark) {
-      processBatchInner(batch, epoch, root)
-    }
-  }
-
-  private def processBatchInner(batch: DataFrame, epoch: Long,
-                                root: String): Unit = {
+  def processBatch(landed: DataFrame, epoch: Long, root: String): Unit = {
+    // AQE off and micro-batch shuffle sizing on a session clone (the
+    // only remaining shuffle in the step is the batch-gram count); the
+    // caller's session is never touched
+    val batch = StreamSessions.step(landed)
     val spark = batch.sparkSession
     val tag = s"e$epoch"
     // rule 1: a ledger whose tag is already committed is SKIPPED on
@@ -169,7 +162,7 @@ final case class LmStream(id: String, text: Column, n: Int,
     // docs ledger is APPEND-ONLY (an id lands in exactly one committed
     // epoch), so the probe skips newest-wins resolution — a plain
     // pruned scan, no per-batch window shuffle
-    val (prior, priorExact) = SessionConfGate.labeled(spark,
+    val (prior, priorExact) = StreamSessions.labeled(spark,
         s"lm e$epoch: docs novelty probe") {
       if (VersionedStore.currentEpoch(docsDir(root)) == 0L)
         probeLedger(spark, docsDir(root), batch.select(col(id)), docsSchema)
@@ -186,7 +179,7 @@ final case class LmStream(id: String, text: Column, n: Int,
     // one materialization of the batch grams (the count aggregation is
     // the step's only shuffle — inherently so); the merge below reuses
     // it as a broadcast build side
-    val rawB = SessionConfGate.labeled(spark, s"lm e$epoch: batch grams") {
+    val rawB = StreamSessions.labeled(spark, s"lm e$epoch: batch grams") {
       CorpusSignals.lmRawCounts(novel, text, n)
         .withColumnRenamed("cnt_gram", "_cnt_b").localCheckpoint()
     }
@@ -204,7 +197,7 @@ final case class LmStream(id: String, text: Column, n: Int,
         // back into the left join. Atomic commits mean these are
         // always the exact pre-batch totals on a replay that reaches
         // this point (a committed attempt was skipped by the tag).
-        val (curProbe, curExact) = SessionConfGate.labeled(spark,
+        val (curProbe, curExact) = StreamSessions.labeled(spark,
             s"lm e$epoch: counts probe") {
           probeLedger(spark, countsDir(root),
             rawB.select("context", "word"), CountsSchema)
@@ -237,15 +230,15 @@ final case class LmStream(id: String, text: Column, n: Int,
     // detects the empty batch from the staged output and commits
     // nothing, and MOR writes never touch the existing files the
     // frames' own probe plans read.
-    SessionConfGate.inParallel(
+    StreamSessions.inParallel(
       () => if (merged != null)
-        SessionConfGate.labeled(spark, s"lm e$epoch: counts delta land") {
+        StreamSessions.labeled(spark, s"lm e$epoch: counts delta land") {
           VersionedStore.deltaUpsert(merged, Seq("context", "word"),
             countsDir(root), nBuckets = nBuckets, tag = tag,
             keysUnique = true)
         },
       () => if (docsDelta != null)
-        SessionConfGate.labeled(spark, s"lm e$epoch: docs delta land") {
+        StreamSessions.labeled(spark, s"lm e$epoch: docs delta land") {
           VersionedStore.deltaUpsert(docsDelta, Seq(id), docsDir(root),
             nBuckets = nBuckets, tag = tag, keysUnique = true)
         })
@@ -253,7 +246,7 @@ final case class LmStream(id: String, text: Column, n: Int,
     // threshold; every ~MaxDeltas epochs it folds a bucket's chain
     // back to one bloom'd base (bounding probe opens). Batches are
     // serialized per stream, so the inline call never races a write.
-    SessionConfGate.labeled(spark, s"lm e$epoch: compaction policy") {
+    StreamSessions.labeled(spark, s"lm e$epoch: compaction policy") {
       maintain(spark, root)
     }
   }

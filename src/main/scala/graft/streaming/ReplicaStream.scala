@@ -52,20 +52,17 @@ object ReplicaStream {
     * source row columns + `_op` + `_change_epoch`. */
   def applyFacts(batch: DataFrame, replicaRoot: String, keyCols: Seq[String],
                  nBuckets: Int): Unit = {
-    val spark = batch.sparkSession
-    SessionConfGate.withMicroBatchConf(spark) {
-      val mat = batch.localCheckpoint()
-      val epochs = mat.select("_change_epoch").distinct()
-        .collect().map(_.getLong(0)).sorted
-      epochs.foreach { e =>
-        val tag = s"src$e"
-        if (VersionedStore.taggedEpoch(replicaRoot, tag).isEmpty) {
-          VersionedStore.deltaApply(
-            mat.filter(col("_change_epoch") === e).drop("_change_epoch"),
-            keyCols, replicaRoot, opCol = "_op", nBuckets = nBuckets,
-            tag = tag, preMaterialized = true)
-          ()
-        }
+    val mat = StreamSessions.step(batch).localCheckpoint()
+    val epochs = mat.select("_change_epoch").distinct()
+      .collect().map(_.getLong(0)).sorted
+    epochs.foreach { e =>
+      val tag = s"src$e"
+      if (VersionedStore.taggedEpoch(replicaRoot, tag).isEmpty) {
+        VersionedStore.deltaApply(
+          mat.filter(col("_change_epoch") === e).drop("_change_epoch"),
+          keyCols, replicaRoot, opCol = "_op", nBuckets = nBuckets,
+          tag = tag, preMaterialized = true)
+        ()
       }
     }
   }

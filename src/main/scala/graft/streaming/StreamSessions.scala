@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftSessionShim, SparkSession}
 
-/** Micro-batch-sized session for STREAMING queries (round-17).
+/** The one place a micro-batch session is made.
   *
   * A stateful stream's state-store partition count is pinned from
   * `spark.sql.shuffle.partitions` when its checkpoint is created, and
@@ -14,35 +14,90 @@ import org.apache.spark.sql.SparkSession
   * 1144 fs ops and 32 near-empty state tasks per batch at 32 session
   * cores; the identical stream at 8 state partitions pays ~a quarter.
   * The stateless foreachBatch maintainers hit the same wall through
-  * their per-batch aggregations ([[SessionConfGate.withMicroBatchConf]]
-  * already bounds the ones that adopt it).
+  * their per-batch aggregations.
   *
-  * Every graft stream builder therefore plans against a SESSION CLONE
-  * whose shuffle partitioning is sized to micro-batch volume, not to
-  * the host session's cores:
+  * Two session shapes, both CLONES of the caller's session:
   *
-  *  - the count comes from `spark.graft.stream.statePartitions`
-  *    (default 8, matching the micro-batch shuffle sizing the
-  *    maintainers use) — a deployment sizes it to expected keyed-state
-  *    cardinality and per-batch volume, NOT to cluster width;
-  *  - a RESUMED checkpoint keeps whatever partition count its metadata
-  *    pinned (Spark ignores the conf then), so this only shapes new
-  *    checkpoints;
-  *  - results are partition-count-invariant by construction
-  *    (aggregations / keyed state), so this is layout, not semantics;
-  *  - the clone shares the SparkContext and extensions; only SQL conf
-  *    diverges, so host-session queries keep corpus-scale settings.
+  *  - [[microBatch]]: every graft stream builder plans against it —
+  *    shuffle partitions = [[StatePartitions]], AQE as the host has it;
+  *  - [[step]]: the maintainer steps ([[TrainStream]], [[LmStream]],
+  *    [[ReplicaStream]]) run on it — the same, with AQE off.
+  *
+  * A clone copies the parent's RUNTIME SQL conf (overrides set after
+  * the session was built, such as `spark.graft.store.validateUnique`,
+  * catalogs and the session time zone, reach every batch) and shares the
+  * SparkContext, extensions and cache; only the two settings above
+  * differ from the parent. The parent is never mutated, so concurrent
+  * maintainers and host queries never see each other's settings and
+  * need no lock. A RESUMED checkpoint keeps whatever partition count
+  * its metadata pinned (Spark ignores the conf then); results are
+  * partition-count-invariant by construction (aggregations / keyed
+  * state), so this is layout, not semantics.
   */
 object StreamSessions {
 
-  /** Conf key for the state/shuffle partition count streaming plans
-    * use; sized to keyed-state cardinality and micro-batch volume. */
-  val StatePartitionsKey = "spark.graft.stream.statePartitions"
+  /** State/shuffle partition count of every streaming plan and
+    * maintainer step: sized to micro-batch volume, not cluster width. */
+  val StatePartitions = 8
 
-  def microBatch(spark: SparkSession): SparkSession = {
-    val n = spark.conf.get(StatePartitionsKey, "8")
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", n)
-    ss
+  private val AqeKey = "spark.sql.adaptive.enabled"
+  private val PartitionsKey = "spark.sql.shuffle.partitions"
+
+  private def cloneWith(spark: SparkSession, conf: (String, String)*): SparkSession = {
+    val clone = GraftSessionShim.cloneSession(spark)
+    conf.foreach { case (k, v) => clone.conf.set(k, v) }
+    clone
+  }
+
+  def microBatch(spark: SparkSession): SparkSession =
+    cloneWith(spark, PartitionsKey -> StatePartitions.toString)
+
+  /** `batch` bound to a session that plans a maintainer step: AQE off
+    * and micro-batch shuffle sizing. Every frame of a step is
+    * model- or batch-sized with its joins already broadcast by hint,
+    * so runtime re-planning cannot improve a stage — but it
+    * materializes each query stage as its own scheduler job, tripling
+    * the per-batch job count (TrainJobCountSpec pins it; Spark itself
+    * disables AQE inside streaming plans, and foreachBatch bodies are
+    * where it sneaks back). With AQE off, the host's corpus-scale
+    * partition count would run each batch-sized aggregation as mostly
+    * empty tasks, hence the sizing. Idempotent: a frame whose session
+    * already plans that way is returned as is. */
+  def step(batch: DataFrame): DataFrame = {
+    val s = batch.sparkSession
+    if (s.conf.get(AqeKey) == "false" &&
+        s.conf.get(PartitionsKey) == StatePartitions.toString) batch
+    else GraftSessionShim.rebind(batch, cloneWith(s, AqeKey -> "false",
+      PartitionsKey -> StatePartitions.toString))
+  }
+
+  /** Label the jobs `body` submits (the optimization guide's §1.5
+    * discipline — a maintainer batch fans into many small actions and
+    * an unlabeled UI/bench timeline cannot attribute them). Thread-
+    * local, saved and restored, so a maintainer's label never leaks
+    * into the host application's own jobs. */
+  def labeled[A](spark: SparkSession, desc: String)(body: => A): A = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(prev)
+  }
+
+  /** Run independent store writes concurrently on short-lived threads
+    * (Spark schedules concurrent jobs from one session fine; frames
+    * from one [[step]] session plan under the same micro-batch
+    * settings on both sides). Rethrows the first failure. */
+  def inParallel(tasks: (() => Unit)*): Unit = {
+    if (tasks.sizeIs <= 1) { tasks.foreach(_.apply()); return }
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val threads = tasks.zipWithIndex.map { case (t, i) =>
+      new Thread(() => {
+        try t()
+        catch { case e: Throwable => failure.compareAndSet(null, e) }
+      }, s"graft-batch-writer-$i")
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    if (failure.get() != null) throw failure.get()
   }
 }

@@ -135,29 +135,12 @@ final case class TrainStream(id: String, featurize: DataFrame => DataFrame,
     * and norm together, the fused-probe pattern applyOps uses); and
     * the model-sized frames (effective weights, per-id errors, current
     * ledger) join with explicit broadcast hints so no shuffle stage —
-    * and no AQE stage-job — materializes for them. */
-  def processBatch(batch: DataFrame, epoch: Long, root: String): Unit = {
-    val spark = batch.sparkSession
-    // AQE off for the step, restored after: every frame in this plan
-    // is model- or micro-batch-sized with its joins ALREADY broadcast
-    // by hint, so runtime re-planning cannot improve a stage — but it
-    // materializes each query stage as its own scheduler job, tripling
-    // the per-batch job count a high-frequency trainer pays
-    // (TrainJobCountSpec pins the count; Spark itself disables AQE
-    // inside streaming plans — foreachBatch bodies are where it
-    // sneaks back). The toggle is session-global, so it runs under
-    // the process-wide [[SessionConfGate]]: two maintainers sharing a
-    // session must not interleave set/restore. Micro-batch shuffle
-    // sizing rides along — with AQE off, the session's corpus-scale
-    // partition count would run each batch-sized aggregation as
-    // mostly-empty tasks.
-    SessionConfGate.withMicroBatchConf(spark) {
-      processBatchInner(batch, epoch, root)
-    }
-  }
-
-  private def processBatchInner(batch: DataFrame, epoch: Long,
-                                root: String): Unit = {
+    * and no AQE stage-job — materializes for them. The step runs on
+    * the landed frame rebound to an AQE-off micro-batch session clone
+    * ([[StreamSessions.step]]); the caller's session is never
+    * touched, so concurrent maintainers need no lock. */
+  def processBatch(landed: DataFrame, epoch: Long, root: String): Unit = {
+    val batch = StreamSessions.step(landed)
     val spark = batch.sparkSession
     val docsSchema = StructType(Seq(batch.schema(id),
       StructField("epoch", LongType)))
@@ -166,7 +149,7 @@ final case class TrainStream(id: String, featurize: DataFrame => DataFrame,
     // pruned, ids pushed), the epoch filter keeps the current epoch's
     // own crashed-attempt rows novel, and the batch anti-joins the
     // batch-sized hit set broadcast — no Exchange, opens f(batch)
-    val (prior, priorExact) = SessionConfGate.labeled(spark,
+    val (prior, priorExact) = StreamSessions.labeled(spark,
         s"train e$epoch: docs novelty probe") {
       probeDocs(spark, root, batch.select(col(id)), docsSchema)
     }
@@ -177,7 +160,7 @@ final case class TrainStream(id: String, featurize: DataFrame => DataFrame,
       if (priorExact) landedPrior
       else landedPrior
         .join(broadcast(batch.select(col(id))), Seq(id), "left_semi")
-    val novel = SessionConfGate.labeled(spark,
+    val novel = StreamSessions.labeled(spark,
         s"train e$epoch: novel batch") {
       batch.join(broadcast(landedHit), Seq(id), "left_anti")
         .localCheckpoint() // feeds n, feats, labels across the store swap
@@ -206,7 +189,7 @@ final case class TrainStream(id: String, featurize: DataFrame => DataFrame,
       .agg(sum(col("_x") * coalesce(col("_we"), lit(0L))).cast("long").as("_s"),
         sum(col("_x") * col("_x")).cast("long").as("_rn"))
       .persist(lvl)
-    val maxRowNorm2 = SessionConfGate.labeled(spark,
+    val maxRowNorm2 = StreamSessions.labeled(spark,
         s"train e$epoch: score + stability bound") {
       sums.agg(coalesce(max(col("_rn")), lit(0L)).cast("long"))
         .collect()(0).getLong(0)
@@ -253,8 +236,8 @@ final case class TrainStream(id: String, featurize: DataFrame => DataFrame,
     // frame, so the two stores stay independent and land concurrently
     // (the crash matrix already covers either store failing first).
     val docTag = s"e$epoch"
-    SessionConfGate.inParallel(
-      () => SessionConfGate.labeled(spark, s"train e$epoch: weights land") {
+    StreamSessions.inParallel(
+      () => StreamSessions.labeled(spark, s"train e$epoch: weights land") {
         Sinks.upsertPartitioned(merged, Seq("b"), wDir(root),
           nBuckets = 1)
       },
@@ -266,7 +249,7 @@ final case class TrainStream(id: String, featurize: DataFrame => DataFrame,
         // micro-batch (a contract violation lands duplicate identical
         // (id, epoch) rows, which newest-wins resolves to the same
         // content either way)
-        SessionConfGate.labeled(spark, s"train e$epoch: docs delta land") {
+        StreamSessions.labeled(spark, s"train e$epoch: docs delta land") {
           VersionedStore.deltaUpsert(
             novel.select(col(id)).withColumn("epoch", lit(epoch)),
             Seq(id), docsDir(root), nBuckets = docBuckets, tag = docTag,
@@ -274,7 +257,7 @@ final case class TrainStream(id: String, featurize: DataFrame => DataFrame,
         })
     // compaction policy AFTER the epoch landed (metadata-only below
     // the MaxDeltas threshold) — bounds the next batches' probe fan-in
-    SessionConfGate.labeled(spark, s"train e$epoch: compaction policy") {
+    StreamSessions.labeled(spark, s"train e$epoch: compaction policy") {
       maintain(spark, root)
     }
     // unpersist in finally (round-15): an ABORTED batch — the

@@ -529,12 +529,14 @@ class NormalizeLifecycleSpec extends SparkSpec {
     // outDir's PARENT is an existing FILE -> the parquet write throws
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$root/blocked"), "not a dir")
-    val before = spark.sparkContext.getPersistentRDDs.size
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     intercept[Exception] {
       graft.sources.InventoryReader.normalizeInventory(
         spark, s"$root/inv/*.csv.gz", s"$root/blocked/out")
     }
-    assert(spark.sparkContext.getPersistentRDDs.size == before,
+    // added ids, not raw sizes: the ContextCleaner may reap an earlier
+    // suite's dead localCheckpoint between the two reads
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
       "failed normalize orphaned the scan cache")
   }
 
@@ -543,12 +545,12 @@ class NormalizeLifecycleSpec extends SparkSpec {
     TestFixtures.writeS3InventoryGz(s"$root/inv", "s0",
       TestFixtures.defaultInventoryRows,
       malformedLines = Seq("\"oops\""))
-    val before = spark.sparkContext.getPersistentRDDs.size
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val back = graft.sources.InventoryReader.normalizeToParquet(
       spark, s"$root/inv/*.csv.gz", s"$root/pq")
     assert(back.count() == 7)
     assert(spark.read.text(s"$root/pq.corrupt").count() == 1)
-    assert(spark.sparkContext.getPersistentRDDs.size == before)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$root/pq/Bucket=srcb")))
   }

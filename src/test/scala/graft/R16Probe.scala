@@ -12,8 +12,8 @@ package graft
   *     iterative CC, streaming maintainers) attribute their wall to
   *     specific actions instead of a single opaque number.
   *
-  * Session shape mirrors Bench exactly (local[$SPARK_GRAFT_CPUS],
-  * shuffle partitions = cpus, AQE on, UI off) so the numbers transfer.
+  * Session: `GraftSession.local($SPARK_GRAFT_CPUS)`, as Bench builds it,
+  * so the numbers transfer.
   */
 object R16Probe {
   def main(args: Array[String]): Unit = {
@@ -24,18 +24,7 @@ object R16Probe {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outDir = java.nio.file.Paths.get("plans/r16")
     java.nio.file.Files.createDirectories(outDir)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "16k"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     // warmup identical to Bench
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().collect()

@@ -35,6 +35,39 @@ class Round17Spec extends SparkSpec {
       assert(e.getMessage.contains("MORE THAN ONE upsert row"),
         s"expected the dup-fence message, got: ${e.getMessage}")
     } finally spark.conf.unset("spark.graft.store.validateUnique")
+    // stream case: the host's RUNTIME overrides (the fence and a time
+    // zone) must reach a foreachBatch store write on the micro-batch
+    // session clone, not just a batch write on the host session
+    val tzKey = "spark.sql.session.timeZone"
+    val prevTz = spark.conf.get(tzKey)
+    dup.coalesce(1).write.parquet(s"$root/landing")
+    spark.conf.set("spark.graft.store.validateUnique", "true")
+    spark.conf.set(tzKey, "America/Los_Angeles")
+    val seenTz = new java.util.concurrent.atomic.AtomicReference[String]
+    try {
+      val q = graft.streaming.StreamSessions.microBatch(spark).readStream
+        .schema("k BIGINT, v BIGINT").parquet(s"$root/landing")
+        .writeStream
+        .option("checkpointLocation", s"$root/ckpt")
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          seenTz.set(b.sparkSession.conf.get(tzKey))
+          VersionedStore.deltaUpsert(b, Seq("k"), s"$root/s3",
+            nBuckets = 2, keysUnique = true)
+          ()
+        }
+        .start()
+      val e = try intercept[Exception](q.processAllAvailable())
+        finally q.stop()
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(_.contains("MORE THAN ONE upsert row")),
+        s"expected the dup-fence message in the stream, got: $msgs")
+      assert(seenTz.get == "America/Los_Angeles",
+        s"host time-zone override did not reach the batch: ${seenTz.get}")
+    } finally {
+      spark.conf.unset("spark.graft.store.validateUnique")
+      spark.conf.set(tzKey, prevTz)
+    }
     // production shape (fence off): a CONTRACT-HONORING batch lands
     // with the staging write as its only action and reads back exactly
     val ok = Seq((1L, 10L), (2L, 20L)).toDF("k", "v")
