@@ -4636,11 +4636,12 @@ object Queries {
 
   // ------------------------------------------- DSv2 store batch-get probe
   /** The J2 sent-message ledger probed THROUGH the DataSource V2 store
-    * ([[graft.connectors.GraftStoreSource]]): a landing batch's bounded
-    * key set IN-probes the ledger, and the pushed key filters prune the
-    * scan to only the hash buckets those keys live in (the DynamoDB
-    * batch-get shape — StoreSourceSpec pins the pruned-plan contract;
-    * this query pins the END-TO-END answer against the oracle). */
+    * ([[graft.connectors.GraftVStoreSource]]): a landing batch's
+    * bounded key set IN-probes the ledger, and the pushed key filters
+    * prune the scan to only the bucket chains those keys live in (the
+    * DynamoDB batch-get shape — StoreSourceSpec pins the pruned-plan
+    * contract; this query pins the END-TO-END answer against the
+    * oracle). */
   private def qStoreProbe(s: SparkSession, dir: String): DataFrame = {
     val root = fixPath("dsv2probe", dir)
     val store = root + "/ledger"
@@ -4649,22 +4650,22 @@ object Queries {
     val li = t(s, dir, "lineitem")
     // build-once fixture (ivfPqIndexFor's pattern): the steady state a
     // bench run measures is the PROBE against an existing ledger, not
-    // the ledger build
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "_BUILT"))) {
+    // the ledger build. Gated on the commit log, not a marker file: a
+    // fixture dir left by an older layout has no commits and rebuilds
+    if (graft.sinks.VersionedStore.currentEpoch(store) == 0L) {
       deleteTree(root)
-      graft.sinks.Sinks.upsertPartitioned(
+      graft.sinks.VersionedStore.upsert(
         li.filter(col("l_suppkey") % 10 === 0).select(
           msgId.as("msg_id"), col("l_orderkey").as("sent_order"),
           col("l_linenumber").as("sent_line")),
         Seq("msg_id"), store, nBuckets = 32)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(root, "_BUILT"))
     }
     // batch-get contract: the probe side is a BOUNDED literal key set
     // (the landing micro-batch's ids), so the IN list is plan-time data
     val batchKeys = li.filter(col("l_orderkey") % 199 === 0)
       .select(msgId.as("k")).distinct()
       .orderBy("k").collect().map(_.getString(0)).toSeq
-    s.read.format("graft-store").load(store)
+    s.read.format("graft-vstore").option("path", store).load()
       .filter(col("msg_id").isin(batchKeys: _*))
       .orderBy("msg_id")
   }
@@ -4689,18 +4690,17 @@ object Queries {
   private def qStoreAgg(s: SparkSession, dir: String): DataFrame = {
     val root = fixPath("dsv2agg", dir)
     val store = root + "/metrics"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "_BUILT"))) {
+    if (graft.sinks.VersionedStore.currentEpoch(store) == 0L) {
       deleteTree(root)
-      graft.sinks.Sinks.upsertPartitioned(
+      graft.sinks.VersionedStore.upsert(
         t(s, dir, "orders").select(
           col("o_orderkey").as("k"),
           when(col("o_orderkey") % 7 === 0, lit(null))
             .otherwise(col("o_custkey")).as("cust"),
           col("o_totalprice").as("price")),
         Seq("k"), store, nBuckets = 32)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(root, "_BUILT"))
     }
-    s.read.format("graft-store").load(store).agg(
+    s.read.format("graft-vstore").option("path", store).load().agg(
       count(lit(1)).as("n_rows"), count(col("cust")).as("n_cust"),
       min(col("cust")).as("min_cust"), max(col("cust")).as("max_cust"),
       min(col("price")).as("min_price"), max(col("price")).as("max_price"))

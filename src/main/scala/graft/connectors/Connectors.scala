@@ -87,9 +87,14 @@ final case class ParquetStore(dir: String) extends KeyedStore {
   def upsert(batch: DataFrame, keyCols: Seq[String]): Unit =
     graft.sinks.Sinks.upsertParquet(batch, keyCols, dir)
 
+  /** `_SUCCESS` is probed through the store's own Hadoop filesystem,
+    * as [[graft.sinks.Sinks.upsertParquet]] writes it, so a
+    * scheme-qualified root (`file:`, `s3a://`) reads back too. */
   def read(spark: SparkSession): Option[DataFrame] = {
     graft.sinks.Sinks.recoverStore(dir)
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS")))
+    val success = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
+    if (success.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(success))
       Some(spark.read.parquet(dir))
     else None
   }

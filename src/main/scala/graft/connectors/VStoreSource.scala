@@ -15,7 +15,7 @@ import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sinks.{DataSkipping, Sinks, VersionedStore}
+import graft.sinks.{DataSkipping, VersionedStore}
 
 /** The MVCC [[VersionedStore]] as a DataSource V2 TABLE — the SQL
   * surface of the store family: any snapshot is addressable without
@@ -29,7 +29,8 @@ import graft.sinks.{DataSkipping, Sinks, VersionedStore}
   *
   *  - **key pushdown** — `EqualTo`/`In` on the key columns replay the
   *    writer's Murmur3 hash and plan only those keys' bucket chains
-  *    (the [[GraftStoreSource]] posture on the versioned layout);
+  *    (the DynamoDB batch-get shape: a probe costs O(key buckets), not
+  *    O(store));
   *  - **data skipping** — range/equality comparisons consult the
   *    per-generation `_cstats` manifests and drop whole chains whose
   *    stats exclude the predicate (filters stay residual: pruning is
@@ -42,7 +43,7 @@ import graft.sinks.{DataSkipping, Sinks, VersionedStore}
   *    emits surviving delta rows — no shuffle, no driver involvement;
   *  - **snapshot schema** — the table serves `schemaAsOf(epoch)`;
   *    generations written before an additive evolution read the new
-  *    columns as null (`tolerateMissing` projection);
+  *    columns as null (the shared [[BucketReader]] projection);
   *  - **statistics** — real post-pruning sizeInBytes, so a small
   *    snapshot auto-broadcasts in joins.
   *
@@ -129,8 +130,7 @@ private[connectors] final case class VStoreScanBuilder(
   private var aggSchema: Option[StructType] = None
   private var limit: Option[Int] = None
 
-  /** PARTIAL limit pushdown (the [[StoreScanBuilder]] contract on the
-    * versioned layout): each chain reader stops after `n` rows —
+  /** PARTIAL limit pushdown: each chain reader stops after `n` rows —
     * Spark's own global Limit still applies; a MOR chain resolves its
     * merge first and caps EMITTED rows, so the cap is sound there too. */
   override def pushLimit(n: Int): Boolean = { limit = Some(n); true }
@@ -168,14 +168,13 @@ private[connectors] final case class VStoreScanBuilder(
   }
 
   /** Footer-answered count(*)/count(col)/min/max over the SNAPSHOT
-    * (round-15, the [[GraftStoreSource]] posture on the versioned
-    * layout): accepted only when the snapshot can be answered from
-    * footers EXACTLY — every serving chain PLAIN (a delta'd chain
-    * needs the newest-wins merge: its base footers count superseded
-    * rows) and no schema evolution at or below the epoch (generations
-    * written before an additive evolution lack the new columns
-    * entirely, so count(col)'s `rows − numNulls` would miss their
-    * implicit nulls). Both checks are driver metadata reads; declining
+    * (round-15; [[BucketAggReader]]): accepted only when the snapshot
+    * can be answered from footers EXACTLY — every serving chain PLAIN
+    * (a delta'd chain needs the newest-wins merge: its base footers
+    * count superseded rows) and no schema evolution at or below the
+    * epoch (generations written before an additive evolution lack the
+    * new columns entirely, so count(col)'s `rows − numNulls` would miss
+    * their implicit nulls). Both checks are driver metadata reads; declining
     * plans Spark's ordinary aggregate over the ordinary scan. */
   override def pushAggregation(agg: Aggregation): Boolean = {
     if (pushed.nonEmpty || agg.groupByExpressions.nonEmpty) return false
@@ -233,8 +232,7 @@ private[connectors] final case class VStoreScan(path: String, epoch: Long,
 
   /** Runtime key filters: delivered AFTER planning, when the build side
     * of a join has executed — the dynamic-pruning sibling of the
-    * plan-time literal probe (the [[StoreScan]] contract, round-15 on
-    * the versioned layout). */
+    * plan-time literal probe (round-15). */
   private var runtime: Array[Filter] = Array.empty
 
   /** The snapshot's serving chains, resolved ONCE at plan time from
@@ -251,25 +249,23 @@ private[connectors] final case class VStoreScan(path: String, epoch: Long,
       .filter(_._2.paths.nonEmpty).sortBy(_._1)
   }
 
-  /** Key-hash pruning (the GraftStoreSource rule, on the versioned
-    * layout): None = no pruning. Shared by the plan-time (`pushed`)
+  /** Key-hash pruning: None = no pruning. Shared by the plan-time (`pushed`)
     * and runtime filter sets — both replay the writer's Murmur3 hash
     * on the literal values. */
   private def keyBucketsFor(filters: Array[Filter]): Option[Set[Int]] = {
     if (keys.isEmpty || filters.isEmpty) return None
-    val n = Sinks.storeMarker(path, "_nbuckets")
-      .map(_.trim.toInt).getOrElse(return None)
+    val n = VersionedStore.bucketCountOf(path).getOrElse(return None)
     def dt(c: String): DataType = fullSchema(c).dataType
     val perFilter: Seq[Set[Int]] =
       if (keys.size == 1) filters.toSeq.collect {
         case EqualTo(a, v) if a == keys.head =>
-          Set(StoreMeta.bucketOf(Seq((v, dt(a))), n))
+          Set(VersionedStore.bucketOf(Seq((v, dt(a))), n))
         case In(a, vs) if a == keys.head =>
-          vs.toSet[Any].map(v => StoreMeta.bucketOf(Seq((v, dt(a))), n))
+          vs.toSet[Any].map(v => VersionedStore.bucketOf(Seq((v, dt(a))), n))
       } else {
         val eqs = filters.collect { case EqualTo(a, v) => a -> v }.toMap
         if (keys.forall(eqs.contains))
-          Seq(Set(StoreMeta.bucketOf(keys.map(k => (eqs(k), dt(k))), n)))
+          Seq(Set(VersionedStore.bucketOf(keys.map(k => (eqs(k), dt(k))), n)))
         else Seq.empty
       }
     if (perFilter.isEmpty) None else Some(perFilter.reduce(_ intersect _))
@@ -439,7 +435,7 @@ private[connectors] final case class VStoreReaderFactory(
         // partition here is a BucketPartition
         new BucketAggReader(files, required, ops)
       case (BucketPartition(files), None) =>
-        new BucketReader(files, required, limit, tolerateMissing = true)
+        new BucketReader(files, required, limit)
       case (m: MorChainPartition, _) =>
         new MorChainReader(m, required, limit)
     }
@@ -491,7 +487,7 @@ private[connectors] final class MorChainReader(part: MorChainPartition,
       StructType(innerSchema.fields :+ StructField(OpField, StringType))
     val opIdx = deltaSchema.length - 1
     part.deltaFilesAsc.foreach { files =>
-      val rd = new BucketReader(files, deltaSchema, tolerateMissing = true)
+      val rd = new BucketReader(files, deltaSchema)
       try {
         while (rd.next()) {
           val r = rd.get()
@@ -504,8 +500,7 @@ private[connectors] final class MorChainReader(part: MorChainPartition,
     m
   }
 
-  private val base = new BucketReader(part.baseFiles, innerSchema,
-    tolerateMissing = true)
+  private val base = new BucketReader(part.baseFiles, innerSchema)
   private var baseDone = part.baseFiles.isEmpty
   private var deltaIter: java.util.Iterator[Option[InternalRow]] = _
   private var current: InternalRow = _

@@ -177,8 +177,7 @@ private[connectors] final case class VStreamReaderFactory(
       if (part.hasOp)
         StructType(rowSchema.fields :+ StructField("_op", StringType))
       else rowSchema
-    val inner = new BucketReader(part.files, innerSchema,
-      tolerateMissing = true)
+    val inner = new BucketReader(part.files, innerSchema)
     val n = rowSchema.length
     val upsert = UTF8String.fromString("upsert")
     val delete = UTF8String.fromString("delete")

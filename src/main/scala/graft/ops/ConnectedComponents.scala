@@ -329,7 +329,7 @@ object ConnectedComponents {
     * batch's endpoint count, so it rides [[apply]]'s driver union-find
     * fast path at any corpus size — and the resulting label→label map
     * broadcasts back over the ledger (untouched rows keep their label;
-    * at store scale, pair this with `Sinks.upsertPartitioned` so only
+    * at store scale, pair this with `VersionedStore.upsert` so only
     * changed buckets rewrite). Batch edges that fall INSIDE an existing
     * component contract to self-loops and vanish, exactly as they
     * should.

@@ -317,7 +317,7 @@ object Retrieval {
     * tokens has no site but also cannot contain an ≥n-token phrase,
     * and the unigram postings cover every document for the short-
     * phrase path. At cluster scale, pass `docs` as the DSv2 store
-    * ([[graft.connectors.GraftStoreSource]], keyed by `docId`): its
+    * ([[graft.connectors.GraftVStoreSource]], keyed by `docId`): its
     * runtime filtering turns the candidate-text join into a
     * bucket-pruned point fetch instead of a full text-column scan —
     * the same J2-probe mechanism StoreRuntimeFilterSpec pins. */

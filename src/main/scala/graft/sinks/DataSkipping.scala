@@ -106,8 +106,8 @@ object DataSkipping {
   /** The footer-read half alone — callers that fan collection out
     * (or observe stats off the write job) and write the marker later
     * split the phases. Every call site targets a directory that is
-    * NOT YET VISIBLE (a bucket's `.swap`, an uncommitted generation),
-    * so a plain overwrite create suffices — the atomic-replace rename
+    * NOT YET VISIBLE (an uncommitted generation), so a plain
+    * overwrite create suffices — the atomic-replace rename
     * would buy nothing and costs an order of magnitude more in FS
     * metadata ops, paid per bucket per upsert (round-14 profile). */
   def writeBody(fs: FileSystem, genDir: Path, body: String): Unit = {
@@ -135,25 +135,11 @@ object DataSkipping {
     * statless — stats are best-effort by contract either way). */
   final class StagedStats private[DataSkipping] (
       obs: org.apache.spark.sql.Observation,
-      pairs: Seq[((Int, StructField), Int)],
-      counted: Seq[Int]) {
+      pairs: Seq[((Int, StructField), Int)]) {
     private def metricsRow: Option[org.apache.spark.sql.Row] =
       try Some(scala.concurrent.Await.result(obs.future,
         scala.concurrent.duration.Duration(30, "s")))
       catch { case scala.util.control.NonFatal(_) => None }
-
-    /** Per-bucket staged ROW COUNTS (only when the observation was
-      * built with `counts = true`) — feeds the store's `_stats`
-      * optimizer marker without re-opening a single footer. */
-    def harvestRows(): Option[Map[Int, Long]] = {
-      if (counted.isEmpty) return None
-      metricsRow.flatMap { row =>
-        try Some(counted.map(b => b ->
-          Option(row.getAs[Any](s"c$b")).map(_.asInstanceOf[Long])
-            .getOrElse(0L)).toMap)
-        catch { case scala.util.control.NonFatal(_) => None }
-      }
-    }
 
     def harvest(): Option[Map[Int, String]] = {
       val row = metricsRow.getOrElse(return None)
@@ -198,31 +184,24 @@ object DataSkipping {
     * exactly the ordering [[lt]]/[[overlaps]] replay — and row-level
     * filters are always applied on top, so stats remain advisory. */
   def observeStats(df: org.apache.spark.sql.DataFrame, touched: Seq[Int],
-                   schema: StructType, counts: Boolean = false)
+                   schema: StructType)
       : Option[(org.apache.spark.sql.DataFrame, StagedStats)] = {
     import org.apache.spark.sql.functions._
     if (sys.props.get("graft.cstats.observe").contains("off")) return None
     val fields = schema.fields.filter(f => supported(f.dataType)).toSeq
     val pairs = for (b <- touched; f <- fields) yield (b, f)
-    if ((pairs.isEmpty && !counts) || pairs.size > MaxObservePairs ||
-        touched.isEmpty) return None
+    if (pairs.isEmpty || pairs.size > MaxObservePairs) return None
     val obs = org.apache.spark.sql.Observation(
       "cstats-" + java.util.UUID.randomUUID())
     val indexed = pairs.zipWithIndex
-    val statExprs = indexed.flatMap { case ((b, f), i) =>
+    val exprs = indexed.flatMap { case ((b, f), i) =>
       val in = when(col("_bucket") === b, col(f.name))
       Seq(min(in).as(s"n$i"), max(in).as(s"x$i"),
         coalesce(sum(when(col("_bucket") === b && col(f.name).isNull, 1L)),
           lit(0L)).as(s"u$i"))
     }
-    val countExprs =
-      if (!counts) Seq.empty
-      else touched.map(b => coalesce(
-        sum(when(col("_bucket") === b, 1L)), lit(0L)).as(s"c$b"))
-    val exprs = statExprs ++ countExprs
     scala.util.Try(df.observe(obs, exprs.head, exprs.tail: _*)).toOption
-      .map(observed => (observed,
-        new StagedStats(obs, indexed, if (counts) touched else Seq.empty)))
+      .map(observed => (observed, new StagedStats(obs, indexed)))
   }
 
   def collectBody(fs: FileSystem, genDir: Path,

@@ -4,9 +4,8 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Sinks — SURVEY.md §2.8 (K4/K5/K6) as Spark writers plus a
   * parquet-backed upsert store standing in for the DynamoDB stat table.
@@ -224,454 +223,6 @@ object Sinks {
     if (fs.exists(dir)) require(fs.rename(dir, old), s"rename-aside failed: $dir")
     require(fs.rename(swap, dir), s"swap promote failed: $swap -> $dir")
     fs.delete(old, true)
-  }
-
-  /** [[upsertParquet]] at log-structured cost: the store is
-    * hash-partitioned into `nBuckets` bucket directories
-    * (`b00000`…`bNNNNN`, key bucket = `pmod(hash(keyCols…), n)`), and
-    * an upsert rewrites ONLY the buckets containing the batch's keys —
-    * per-batch cost O(batch + touched buckets), not O(store), the
-    * DynamoDB-update-item shape (the reference touches only written
-    * keys, s3_monitor_statistic.py:47-91). Untouched bucket files are
-    * never opened, never rewritten (PartitionedStoreSpec asserts
-    * bit-identity).
-    *
-    * Execution is ONE distributed job regardless of how many buckets
-    * the batch touches (UpsertOneJobSpec pins the job count): the
-    * merged plan reads (touched live buckets ∪ batch), anti-joins the
-    * batch's keys away globally — a key hashes to exactly one bucket,
-    * so the global anti-join equals the per-bucket one — and stages a
-    * `partitionBy(_bucket)` write with each bucket co-located into one
-    * task (one file per bucket, the log-structured unit a reader
-    * opens). Promotion is control-plane only: per touched bucket, the
-    * staged file renames into a `.swap` directory which swaps in via
-    * the rename dance below. A landing batch touching 10k buckets is
-    * one job plus 10k metadata renames — never 10k sequential jobs.
-    *
-    * Each bucket keeps [[upsertParquet]]'s whole crash-safety story —
-    * swap-by-rename + [[recoverStore]] — so a crash at any point
-    * leaves every bucket complete. A crash BETWEEN buckets leaves the
-    * store half-upserted; callers that need batch-level replay safety
-    * get it the same way RefreshStream does across stores: keyed
-    * idempotency (replaying the batch re-writes identical rows) — no
-    * new failure mode is introduced.
-    *
-    * The bucket count is fixed at store creation (`_nbuckets` marker,
-    * written atomically before the first bucket): a different `n` on a
-    * later call is ignored in favor of the store's own — re-hashing
-    * live keys into a new layout is a rebuild, not an upsert. The key
-    * columns are recorded the same way (`_keycols`), making the store
-    * self-describing for the DSv2 point-lookup reader
-    * ([[graft.connectors.GraftStoreSource]] prunes buckets from pushed
-    * key filters). A `_stats` marker (bucket,rows,bytes per line) is
-    * refreshed for the touched buckets after every promote — advisory
-    * optimizer statistics the DSv2 reader serves without listing or
-    * opening a single footer (stale after a crash mid-promote; healed
-    * by the next successful upsert; readers fall back to listing when
-    * a bucket is missing from it).
-    *
-    * CONCURRENCY CONTRACT — single writer, no concurrent reader during
-    * a write: upserts are atomic per bucket (swap-by-rename) but not
-    * across buckets, and [[readPartitioned]] heals (renames) crashed
-    * buckets on read. A reader racing a writer's two-rename swap
-    * window can observe a half-applied batch or contend on the moves.
-    * Every in-repo caller serializes writes and reads (the streaming
-    * maintainers run batches sequentially per store; replay idempotency
-    * covers crash-retry) — a deployment needing snapshot-isolated
-    * concurrent readers swaps in Delta/Iceberg MERGE, which is the
-    * documented production analogue of this store. */
-  def upsertPartitioned(batch: DataFrame, keyCols: Seq[String],
-                        storeDir: String, nBuckets: Int = 8,
-                        preMaterialized: Boolean = false): Unit = {
-    require(nBuckets > 0 && nBuckets <= 99999,
-      s"nBuckets must be in [1, 99999], got $nBuckets")
-    require(!batch.columns.contains("_bucket"),
-      "upsertPartitioned uses '_bucket' as a helper column; rename the input's")
-    val spark = batch.sparkSession
-    val (fs, dir) = fsOf(storeDir)
-    fs.mkdirs(dir)
-    writeMarker(fs, new Path(dir, "_keycols"), keyCols.mkString(","),
-      replace = false)
-    // heal EVERY crashed bucket before merging, not just the ones this
-    // batch touches — an untouched bucket left mid-promotion must not
-    // stay invisible across writes
-    recoverPartitioned(storeDir)
-    val n = storeBucketCount(fs, dir, nBuckets)
-    val bucketExpr = pmod(hash(keyCols.map(col): _*), lit(n))
-    // one materialization of the batch; the merge job reads it (and
-    // the collect is bounded: ≤ n small ints). A caller that ALREADY
-    // materialized the batch (localCheckpoint before handing it over —
-    // TrainStream's merged model) passes preMaterialized = true and
-    // skips the second checkpoint: the bucket projection over a
-    // checkpointed frame is cheap to recompute, and the batch plan by
-    // contract no longer reads this store.
-    val mat0 = batch.withColumn("_bucket", bucketExpr)
-    val mat = if (preMaterialized) mat0 else mat0.localCheckpoint()
-    // a SINGLE-bucket store (TrainStream's model-sized weight ledger)
-    // needs no touched-bucket discovery: pmod(hash, 1) is identically
-    // 0, so the distinct+collect job — which recomputes an
-    // un-checkpointed batch plan, broadcast builds and all — is pure
-    // overhead on every micro-batch. The staged write below is then
-    // the batch's ONE evaluation; a truly empty batch over an EMPTY
-    // store surfaces as a missing staging dir and falls out at the
-    // promote guard. Over a LIVE store, though, merged below would
-    // become every existing row (empty left-anti ∪ empty) and the
-    // batch would silently rewrite + swap the whole bucket — so that
-    // path pays one bounded isEmpty probe first (round-16 ADVICE; far
-    // cheaper than the distinct+collect the shortcut removed).
-    val touched: Seq[Int] =
-      if (n == 1) {
-        if (fs.exists(new Path(s"$storeDir/${bucketName(0)}/_SUCCESS"))
-            && mat.isEmpty) return
-        Seq(0)
-      }
-      else mat.select("_bucket").distinct()
-        .collect().map(_.getInt(0)).sorted.toSeq
-    if (touched.isEmpty) return
-
-    val liveTouched = touched.filter(b =>
-      fs.exists(new Path(s"$storeDir/${bucketName(b)}/_SUCCESS")))
-    val merged = if (liveTouched.isEmpty) mat else {
-      val cur = spark.read
-        .parquet(liveTouched.map(b => s"$storeDir/${bucketName(b)}"): _*)
-        .withColumn("_bucket", bucketExpr)
-      cur.join(mat.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
-        .unionByName(mat)
-    }
-
-    // ONE job stages every touched bucket: co-locate each bucket into
-    // one task (explicit numPartitions — AQE never coalesces a
-    // user-specified repartition) and write one file per bucket
-    val staging = new Path(dir, StagingName)
-    fs.delete(staging, true)
-    // generation-level column statistics AND per-bucket row counts
-    // ride the staging write itself (Dataset.observe): zero extra
-    // jobs, ZERO footer reads — the round-13 footer pass here taxed
-    // every micro-batch of the streaming maintainers (BENCH r13 q159
-    // +48%); an over-budget or failed observation falls back to the
-    // pooled footer pass. Stats stay best-effort: a bucket without
-    // the marker is simply never pruned by the DSv2 scan.
-    val statSchema = StructType(mat.schema.filterNot(_.name == "_bucket"))
-    // key-clustered within each bucket file (round-15): row-group
-    // min/max on the key columns become tight ranges instead of the
-    // whole hash domain, and the adaptive key blooms below let a
-    // pushed key predicate skip row groups entirely — the probe path
-    // ([[probePartitioned]]) pays bytes per MATCHING row group, not
-    // per bucket. _bucket leads so the dynamic-partition writer's
-    // required ordering is already satisfied (same rationale as the
-    // versioned store's staged write).
-    val shaped = merged.repartition(touched.length, col("_bucket"))
-      .sortWithinPartitions(col("_bucket") +: keyCols.map(col): _*)
-    val observed = DataSkipping.observeStats(shaped, touched, statSchema,
-      counts = true)
-    keyCols.foldLeft(
-        observed.map(_._1).getOrElse(shaped)
-          .write.option("parquet.bloom.filter.adaptive.enabled", "true")
-          .option("parquet.bloom.filter.max.bytes", (64 * 1024).toString)) {
-        (w, kc) => w.option(s"parquet.bloom.filter.enabled#$kc", "true")
-      }
-      .partitionBy("_bucket").parquet(staging.toString)
-    val harvested = observed.flatMap(_._2.harvest())
-    val statBodies: Map[Int, String] = harvested.getOrElse {
-      VersionedStore.parallelMap(touched) { b =>
-        b -> DataSkipping.collectBody(fs, new Path(staging, s"_bucket=$b"),
-          statSchema)
-      }.collect { case (b, Some(body)) => b -> body }.toMap
-    }
-    val stagedRows: Map[Int, Long] =
-      observed.flatMap(_._2.harvestRows()).getOrElse(Map.empty)
-
-    // control-plane promotion: per bucket, staged file -> .swap dir ->
-    // the same two-rename swap the monolithic store does. Every
-    // touched bucket has rows (it is touched BECAUSE batch rows hash
-    // there), so its staging directory always exists.
-    // the n==1 shortcut above never probed the batch: an empty batch
-    // over an empty store stages nothing — there is nothing to promote
-    if (n == 1 && !fs.exists(new Path(staging, "_bucket=0"))) {
-      fs.delete(staging, true)
-      return
-    }
-    touched.foreach { b =>
-      val bDir = new Path(s"$storeDir/${bucketName(b)}")
-      val old = new Path(bDir.toString + ".old")
-      val swap = new Path(bDir.toString + ".swap")
-      val staged = new Path(staging, s"_bucket=$b")
-      require(fs.exists(staged),
-        s"staging output missing for touched bucket $b under $staging")
-      fs.delete(swap, true)
-      fastMkdirs(fs, swap)
-      val parts = fs.listStatus(staged).map(_.getPath).filter { p =>
-        val nm = p.getName
-        nm.endsWith(".parquet") && !nm.startsWith(".") && !nm.startsWith("_")
-      }.sortBy(_.getName)
-      parts.zipWithIndex.foreach { case (p, i) =>
-        require(fs.rename(p, new Path(swap, f"part-$i%05d.parquet")),
-          s"staging rename failed: $p")
-      }
-      statBodies.get(b).foreach(DataSkipping.writeBody(fs, swap, _))
-      createSmallFile(fs, new Path(swap, "_SUCCESS"), Array.emptyByteArray)
-      fs.delete(old, true)
-      if (fs.exists(bDir))
-        require(fs.rename(bDir, old), s"rename-aside failed: $bDir")
-      require(fs.rename(swap, bDir), s"swap promote failed: $bDir")
-      fs.delete(old, true)
-    }
-    fs.delete(staging, true)
-    updateStoreStats(fs, dir, touched, stagedRows)
-  }
-
-  /** Read a partitioned store: recover any bucket a crash left
-    * mid-promotion (a bucket whose live dir was renamed aside survives
-    * only as `.old`/`.swap` — without recovery here its rows would
-    * silently vanish from reads until the NEXT upsert happened to
-    * touch it, and a self-excluding ledger view would under-exclude;
-    * PartitionedStoreSpec pins the crash case), then union the live
-    * bucket directories (explicit driver-side listing — never a glob
-    * that could catch a `.swap`/`.old` sibling). At least one bucket
-    * must exist (a store is always bootstrapped before it is read). */
-  def readPartitioned(spark: SparkSession, storeDir: String): DataFrame = {
-    recoverPartitioned(storeDir)
-    val dirs = listBuckets(storeDir)
-    require(dirs.nonEmpty, s"partitioned store has no buckets: $storeDir")
-    spark.read.parquet(dirs: _*)
-  }
-
-  /** Literal budget for [[probePartitioned]]'s pushed key filter: past
-    * this many distinct probe keys the In expression taxes plan
-    * analysis more than the page skips save; bucket pruning alone
-    * still bounds opens. The probe keys were already driver-resident
-    * by contract (the caller broadcasts them), so the collect below
-    * adds no new asymptote — and the collect is LIMIT-gated to this
-    * budget, so a contract-violating huge batch degrades to
-    * bucket-only pruning instead of a driver OOM (round-15 ADVICE). */
-  private val ProbeInMax = 2048
-  /** Tuple budget for the EXACT OR-of-conjunctions push on composite
-    * keys: each tuple becomes one AND term, so past this the analysis
-    * cost of the predicate outweighs its extra selectivity over the
-    * per-column In conjunction (which stays sound at any width). */
-  private val OrPushMax = 256
-  /** Test seam: forces [[probePartitioned]] down the full-scan path so
-    * contract specs can difference pruned vs unpruned I/O. */
-  @volatile private[graft] var disableProbePruning: Boolean = false
-  /** Test seam: restricts the pushed key filter to the FIRST key
-    * column (the pre-round-16 behavior) so the composite-conjunction
-    * bytes pin can difference the two pushes on identical probes. */
-  @volatile private[graft] var probeFirstColOnly: Boolean = false
-
-  /** BOUNDED ledger probe (round-15): the rows of a partitioned store
-    * that can possibly match `keys` — reading ONLY the buckets the
-    * probe keys hash into, instead of the whole store. This is the
-    * streaming maintainers' per-micro-batch read path: their ledgers
-    * grow with the CORPUS while a micro-batch is bounded, so the plain
-    * [[readPartitioned]]-then-join scanned corpus-sized state every
-    * batch — the one per-batch cost with the wrong asymptote at 100 TB
-    * (round-14 verdict). Per batch this opens f(batch-key buckets)
-    * files, never f(ledger); the distinct key tuples (≤ [[ProbeInMax]])
-    * additionally push a key predicate into the scan — a plain In for
-    * single-column keys, an exact OR-of-conjunctions for composite
-    * tuples up to [[OrPushMax]], a per-column In conjunction beyond —
-    * so the key-sorted row groups + adaptive key blooms the staged
-    * write lays down skip non-matching PAGES on EVERY key column
-    * (round-16: a hot first-key value no longer reads all its pages) —
-    * bytes track the batch, not the bucket.
-    *
-    * Contract: the result is a SUPERSET of the store rows whose key
-    * tuple appears in `keys` (exact for single-column and
-    * OR-of-conjunction pushes) — callers apply their own exact join on
-    * top, so pruning can only skip non-matching I/O, never change a
-    * result. `keys` must carry
-    * the store's key columns under their store names and types (the
-    * bucket hash is type-sensitive); extra columns are ignored. An
-    * uncreated store reads as empty with `emptySchema`. Costs one
-    * driver-side job over `keys` (batch-sized by the same contract
-    * that lets callers broadcast it). */
-  def probePartitioned(spark: SparkSession, storeDir: String,
-                       keys: DataFrame,
-                       emptySchema: StructType): DataFrame = {
-    recoverPartitioned(storeDir)
-    val (fs, root) = fsOf(storeDir)
-    def emptyDf = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema)
-    val keyCols = storeMarker(storeDir, "_keycols")
-      .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty)
-    val nBuckets = storeMarker(storeDir, "_nbuckets").map(_.trim.toInt)
-    if (keyCols.isEmpty || nBuckets.isEmpty)
-      return emptyDf // never written — nothing to probe
-    if (disableProbePruning) {
-      val dirs = listBuckets(storeDir)
-      return if (dirs.isEmpty) emptyDf
-        else spark.read.schema(emptySchema).parquet(dirs: _*)
-    }
-    val n = nBuckets.get
-    val bucketExpr = pmod(hash(keyCols.map(col): _*), lit(n))
-    // one tiny job: the batch's distinct key TUPLES with their bucket,
-    // LIMIT-gated to the push budget (round-15 ADVICE: an unbounded
-    // collect here turned a contract-violating huge batch into a
-    // driver OOM; now it degrades to bucket-only pruning, with the
-    // bucket set re-collected alone — bounded by n by construction).
-    val probeRows = keys
-      .select(bucketExpr.as("_b") +: keyCols.map(col): _*)
-      .distinct().limit(ProbeInMax + 1).collect()
-    if (probeRows.isEmpty) return emptyDf
-    val overBudget = probeRows.length > ProbeInMax
-    val touched =
-      if (!overBudget) probeRows.map(_.getInt(0)).distinct.sorted
-      else keys.select(bucketExpr.as("_b")).distinct()
-        .collect().map(_.getInt(0)).distinct.sorted
-    val live = touched.map(b => new Path(root, bucketName(b)))
-      .filter(p => fs.exists(new Path(p, "_SUCCESS")))
-      .map(_.toString)
-    if (live.isEmpty) return emptyDf
-    val pruned = spark.read.schema(emptySchema).parquet(live.toIndexedSeq: _*)
-    if (overBudget) return pruned // bucket pruning only — still bounded
-    // key push (round-16 — full-width, not just the first column):
-    //  - single-column key: plain In (exact; null probed via isNull)
-    //  - composite, ≤ OrPushMax tuples: EXACT OR-of-conjunctions —
-    //    each (context, word) tuple one null-safe AND term, so a hot
-    //    first-key value with many second-key values skips the pages
-    //    its non-probed words live in (stats + blooms on BOTH columns)
-    //  - composite, larger: per-column In CONJUNCTION — a sound
-    //    superset (every matching tuple matches each column's set)
-    //    that still page-skips on every key column.
-    // Callers keep their exact join on top either way.
-    def inSet(i: Int): Column = {
-      val vals = probeRows.map(_.get(i + 1)).distinct
-      val nonNull = vals.filterNot(_ == null)
-      if (nonNull.isEmpty) col(keyCols(i)).isNull
-      else {
-        val in = col(keyCols(i)).isInCollection(nonNull.toIndexedSeq)
-        if (nonNull.length < vals.length) in || col(keyCols(i)).isNull
-        else in
-      }
-    }
-    val pred =
-      if (keyCols.length == 1 || probeFirstColOnly) inSet(0)
-      else if (probeRows.length <= OrPushMax)
-        // balanced or-tree — a left-fold this wide nests deep enough
-        // to threaten Catalyst's recursive converters (see
-        // VersionedStore.balancedReduce)
-        VersionedStore.balancedReduce(probeRows.toSeq.map { r =>
-          keyCols.indices.map(i => col(keyCols(i)) <=> lit(r.get(i + 1)))
-            .reduce(_ && _)
-        })(_ || _)
-      else keyCols.indices.map(inSet).reduce(_ && _)
-    pruned.where(pred)
-  }
-
-  /** Run [[recoverStore]] for every bucket that exists in ANY form —
-    * live, `.old`, or `.swap` — so a crash between "live aside" and
-    * "promote swap" heals on the next read or write, not only when
-    * that bucket is next written. */
-  def recoverPartitioned(storeDir: String): Unit = {
-    val (fs, root) = fsOf(storeDir)
-    if (!fs.exists(root) || !fs.getFileStatus(root).isDirectory) return
-    val names = scala.collection.mutable.Set.empty[String]
-    fs.listStatus(root).foreach { st =>
-      st.getPath.getName match {
-        case BucketAnyRe(bucket) => names += bucket
-        case _ =>
-      }
-    }
-    names.toSeq.sorted.foreach(b => recoverStore(s"$storeDir/$b"))
-  }
-
-  private def bucketName(b: Int): String = f"b$b%05d"
-
-  private val BucketRe = "^b\\d{5}$".r
-  private val BucketAnyRe = "^(b\\d{5})(?:\\.old|\\.swap)?$".r
-
-  private[graft] def listBuckets(storeDir: String): Seq[String] = {
-    val (fs, root) = fsOf(storeDir)
-    if (!fs.exists(root) || !fs.getFileStatus(root).isDirectory)
-      return Seq.empty
-    // fully-qualified paths (scheme + authority kept): a store on
-    // s3a://…/hdfs://… must not resolve its buckets against the
-    // session's DEFAULT filesystem when a reader opens them
-    fs.listStatus(root)
-      .filter(st => BucketRe.matches(st.getPath.getName) &&
-        fs.exists(new Path(st.getPath, "_SUCCESS")))
-      .map(st => st.getPath.toString)
-      .sorted.toSeq
-  }
-
-  /** Staging directory name for [[upsertPartitioned]]'s one-job merge
-    * write (dot-prefixed: invisible to [[listBuckets]] and to any
-    * parquet scan of the store root; a crash leaves it behind and the
-    * next upsert clears it before writing). */
-  private val StagingName = ".upsert-staging"
-
-  /** The store's fixed bucket count: read the `_nbuckets` marker, or
-    * write it (atomic rename) on first creation. */
-  private def storeBucketCount(fs: FileSystem, dir: Path, requested: Int): Int =
-    readMarker(fs, new Path(dir, "_nbuckets")) match {
-      case Some(s) => s.trim.toInt
-      case None =>
-        writeMarker(fs, new Path(dir, "_nbuckets"), requested.toString,
-          replace = false)
-        requested
-    }
-
-  /** Refresh the `_stats` marker for the buckets an upsert touched:
-    * per-bucket (rows, bytes) from the just-written files' parquet
-    * footers — driver-side METADATA reads, O(touched buckets), no
-    * Spark job. Untouched buckets keep their previous line. The
-    * marker is advisory optimizer input ([[graft.connectors
-    * .GraftStoreSource]] serves `estimateStatistics` from it instead
-    * of listing bucket directories); absence or a missing bucket line
-    * sends readers down the listing fallback, never to a wrong
-    * answer. */
-  private def updateStoreStats(fs: FileSystem, dir: Path, touched: Seq[Int],
-                               knownRows: Map[Int, Long] = Map.empty): Unit = {
-    val statsPath = new Path(dir, "_stats")
-    val prev = readMarker(fs, statsPath).map(parseStats).getOrElse(Map.empty)
-    val updated = touched.map { b =>
-      val bDir = new Path(dir, bucketName(b))
-      val files = fs.listStatus(bDir).filter { st =>
-        val nm = st.getPath.getName
-        nm.endsWith(".parquet") && !nm.startsWith(".") && !nm.startsWith("_")
-      }
-      val bytes = files.map(_.getLen).sum
-      // row counts come from the staged write's own observation when
-      // available (zero footer opens); the footer pass is the fallback
-      val rows = knownRows.getOrElse(b, files.map { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(st.getPath, fs.getConf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum)
-      b -> ((rows, bytes))
-    }.toMap
-    val all = (prev ++ updated).toSeq.sortBy(_._1)
-      .map { case (b, (rows, bytes)) => s"$b,$rows,$bytes" }
-      .mkString("\n")
-    writeMarker(fs, statsPath, all, replace = true)
-  }
-
-  private def parseStats(s: String): Map[Int, (Long, Long)] =
-    s.linesIterator.filter(_.nonEmpty).flatMap { line =>
-      line.split(",") match {
-        case Array(b, r, by) =>
-          try Some(b.trim.toInt -> ((r.trim.toLong, by.trim.toLong)))
-          catch { case _: NumberFormatException => None }
-        case _ => None
-      }
-    }.toMap
-
-  /** Per-bucket (rows, bytes) from the `_stats` marker, if present —
-    * the DSv2 reader's statistics source. */
-  private[graft] def bucketStats(storeDir: String): Option[Map[Int, (Long, Long)]] = {
-    val (fs, root) = fsOf(storeDir)
-    readMarker(fs, new Path(root, "_stats")).map(parseStats)
-  }
-
-  /** A store marker's content through the store's OWN filesystem —
-    * the reader-side accessor ([[graft.connectors.GraftStoreSource]]
-    * resolves `_nbuckets`/`_keycols` here; a java.nio read would
-    * silently miss markers of any scheme-qualified store and lose
-    * bucket pruning). */
-  private[graft] def storeMarker(storeDir: String, name: String): Option[String] = {
-    val (fs, root) = fsOf(storeDir)
-    readMarker(fs, new Path(root, name))
   }
 
   /** If a previous upsert crashed between "live aside" and "promote

@@ -1,12 +1,16 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
-/** An MVCC variant of [[Sinks.upsertPartitioned]]: writers never mutate
+/** The engine's bucketed keyed store — the stand-in for the
+  * reference's per-key DynamoDB stat table (`update_item`,
+  * s3_monitor_statistic.py:47-91) and the one store every streaming
+  * maintainer writes. It is MVCC: writers never mutate
   * a live file, so every past snapshot stays readable — time-travel
   * reads ([[readAsOf]], [[readAsOfTimestamp]]), change-data-capture
   * between any two epochs ([[changelog]]), and retention GC
@@ -20,6 +24,9 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * Layout (all markers atomic rename-writes, [[Sinks.writeMarker]]):
   * {{{
   *   root/_nbuckets            fixed bucket count (hash layout)
+  *   root/_nonce-<uuid>        empty; written with `_nbuckets` at store
+  *                             creation — names this incarnation of
+  *                             the path (see [[cachedCommitBody]])
   *   root/_keycols             key column list
   *   root/_schema              base row schema DDL (first epoch's)
   *   root/_schema-EEEEEEE      schema in force FROM epoch E (written
@@ -70,7 +77,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * Snapshot at epoch e, per bucket: the newest committed BASE
   * generation with epoch ≤ e, plus every committed DELTA generation
   * in (base, e]. A COW write rewrites ONLY the buckets its batch keys
-  * hash to (one distributed job, the upsertPartitioned merge shape);
+  * hash to (one distributed merge job staging `partitionBy(_bucket)`);
   * untouched buckets keep serving their old chain.
   *
   * Every commit is stamped with wall-clock millis (caller-injectable
@@ -172,23 +179,28 @@ object VersionedStore {
     * marker — O(epochs) fs round trips per call, the dominant share of
     * the streaming queries' per-batch fs_ops. A committed marker's
     * content is IMMUTABLE (written once via atomic rename; vacuum only
-    * deletes), so bodies are cacheable keyed by (path, length, mtime) —
-    * the length/mtime guard covers the one mutation that exists: a
-    * whole store deleted and REBUILT at the same path (fixture
-    * rebuilds), whose same-named markers get new timestamps. Presence
-    * still comes from the live listing on every call, so vacuum
-    * truncation and racing writers keep their exact semantics; only
-    * the redundant re-read of unchanged bytes disappears. Bounded:
-    * cleared wholesale past 64k entries (a process is many stores ×
-    * bounded post-vacuum log length; the clear is a rare, harmless
-    * cache cold-start). */
-  private val markerBodyCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), String]()
+    * deletes), so bodies are cacheable. The one mutation that exists
+    * is a whole store deleted and REBUILT at the same path (fixture
+    * rebuilds), whose same-named markers can carry the same length
+    * and, within one mtime tick, the same timestamp — so the key is
+    * (store nonce, path, length, mtime). The nonce is the name of the
+    * `_nonce-<uuid>` marker written once at store creation, taken from
+    * the root listing [[commitsOnce]] does anyway (zero extra fs ops);
+    * a rebuilt store gets a fresh one. Presence still comes from the
+    * live listing on every call, so vacuum truncation and racing
+    * writers keep their exact semantics; only the redundant re-read of
+    * unchanged bytes disappears. Bounded: cleared wholesale past 64k
+    * entries (a process is many stores × bounded post-vacuum log
+    * length; the clear is a rare, harmless cache cold-start). */
+  private val markerBodyCache = new java.util.concurrent
+    .ConcurrentHashMap[(String, String, Long, Long), String]()
 
-  private def cachedCommitBody(fs: FileSystem,
+  private val NonceRe = "^_nonce-[0-9a-f-]+$".r
+
+  private def cachedCommitBody(fs: FileSystem, nonce: String,
                                st: org.apache.hadoop.fs.FileStatus)
       : Option[String] = {
-    val key = (st.getPath.toString, st.getLen, st.getModificationTime)
+    val key = (nonce, st.getPath.toString, st.getLen, st.getModificationTime)
     Option(markerBodyCache.get(key)).orElse {
       val body = readMarker(fs, st.getPath)
       body.foreach { b =>
@@ -215,6 +227,9 @@ object VersionedStore {
       Commit(epoch, parts(0), bs, ts)
     }
     val stats = fs.listStatus(dir).toSeq
+    // racing creators may each leave one; any deterministic pick works
+    val nonce = stats.map(_.getPath.getName)
+      .filter(NonceRe.matches).minOption.getOrElse("")
     val floorCommits = stats
       .flatMap(st => st.getPath.getName match {
         case FloorsRe(w) => Some((w.toLong, st.getPath)); case _ => None
@@ -234,13 +249,13 @@ object VersionedStore {
           // file and checksum sidecar as two steps — retry the brief
           // window instead of failing a read-only listing (a genuinely
           // corrupt marker still throws after the retries). Bodies are
-          // immutable once readable, so the (path, len, mtime)-keyed
-          // cache serves repeat reads without an fs round trip.
+          // immutable once readable, so the cache serves repeat reads
+          // without an fs round trip.
           var body: Option[String] = None
           var tries = 0
           while (body.isEmpty && tries < 10) {
             tries += 1
-            try body = cachedCommitBody(fs, st) match {
+            try body = cachedCommitBody(fs, nonce, st) match {
               case Some(b) => Some(b)
               case None => return None // vacuum truncated it: re-list
             }
@@ -310,7 +325,8 @@ object VersionedStore {
                                     content: String): Unit = {
     require(name.startsWith("_") && !name.startsWith("_commit") &&
       !name.startsWith("_schema") && !name.startsWith("_floors") &&
-      name != "_keycols" && name != "_nbuckets" && name != "_vacuum",
+      !name.startsWith("_nonce") && name != "_keycols" &&
+      name != "_nbuckets" && name != "_vacuum",
       s"aux marker name collides with store metadata: $name")
     val (fs, dir) = fsOf(root)
     fs.mkdirs(dir)
@@ -323,17 +339,38 @@ object VersionedStore {
     readMarker(fs, new Path(dir, name))
   }
 
-  private[graft] def keyColsOf(root: String): Seq[String] = {
+  /** The `_keycols` marker through the store's own filesystem; None
+    * before the first write. */
+  private[graft] def storedKeyCols(root: String): Option[Seq[String]] = {
     val (fs, dir) = fsOf(root)
     readMarker(fs, new Path(dir, "_keycols"))
-      .getOrElse(sys.error(s"not a versioned store (no _keycols): $root"))
-      .split(",").toSeq
+      .map(_.trim.split(",").toSeq.filter(_.nonEmpty))
   }
 
+  private[graft] def keyColsOf(root: String): Seq[String] =
+    storedKeyCols(root)
+      .getOrElse(sys.error(s"not a versioned store (no _keycols): $root"))
+
+  /** The `_nbuckets` marker through the store's own filesystem; None
+    * before the first write. */
+  private[graft] def bucketCountOf(root: String): Option[Int] = {
+    val (fs, dir) = fsOf(root)
+    readMarker(fs, new Path(dir, "_nbuckets")).map(_.trim.toInt)
+  }
+
+  private def requireBucketCount(root: String): Int =
+    bucketCountOf(root)
+      .getOrElse(sys.error(s"not a versioned store (no _nbuckets): $root"))
+
+  /** The store's fixed bucket count; on first creation, writes
+    * `_nbuckets` and the store's `_nonce-<uuid>` marker. */
   private def bucketCount(fs: FileSystem, dir: Path, requested: Int): Int =
     readMarker(fs, new Path(dir, "_nbuckets")) match {
       case Some(s) => s.trim.toInt
       case None =>
+        Sinks.createSmallFile(fs,
+          new Path(dir, s"_nonce-${java.util.UUID.randomUUID()}"),
+          Array.emptyByteArray)
         writeMarker(fs, new Path(dir, "_nbuckets"), requested.toString,
           replace = false)
         requested
@@ -792,7 +829,7 @@ object VersionedStore {
     // a caller that ALREADY materialized the batch (a maintainer's
     // localCheckpoint'd delta whose plan by contract no longer reads
     // this store) skips the second checkpoint — one job less on the
-    // per-micro-batch path, same rationale as upsertPartitioned's flag
+    // per-micro-batch path
     val mat0 = batch.withColumn("_bucket", bucketExpr)
     val mat =
       if (preMaterialized || fastUnique) mat0 else mat0.localCheckpoint()
@@ -1697,10 +1734,7 @@ object VersionedStore {
       s"lookup epoch $e is below the vacuum retention watermark $wm")
     require(e <= cur, s"lookup epoch $e is beyond current epoch $cur")
     val keyCols = keyColsOf(root)
-    val (fs, dir) = fsOf(root)
-    val n = readMarker(fs, new Path(dir, "_nbuckets"))
-      .map(_.trim.toInt)
-      .getOrElse(sys.error(s"not a versioned store (no _nbuckets): $root"))
+    val n = requireBucketCount(root)
     val ddl = schemaAsOf(root, e)
     val storeSchema = StructType.fromDDL(ddl)
     val keyFields = keyCols.map(kc => storeSchema(kc))
@@ -1709,16 +1743,7 @@ object VersionedStore {
     // aggregate job; the dedup is driver math over driver-small keys
     val keyRows = keys
       .select(castToStoreKeys(root, keys, keyCols): _*).collect().distinct
-    // the exact Murmur3(seed 42) Catalyst's hash() evaluates, run on
-    // the driver over the collected key rows — no Spark job
-    val buckets = keyRows.map { r =>
-      val h = new org.apache.spark.sql.catalyst.expressions.Murmur3Hash(
-        keyFields.indices.map(i =>
-          org.apache.spark.sql.catalyst.expressions.Literal
-            .create(r.get(i), keyFields(i).dataType)), 42)
-        .eval(null).asInstanceOf[Int]
-      ((h % n) + n) % n
-    }.distinct.toSeq
+    val buckets = keyBuckets(keyRows.toSeq, keyFields, n)
     val chains = snapshotChains(root, committed, e, only = Some(buckets.toSet))
       .values.filter(_.paths.nonEmpty)
     if (chains.isEmpty) emptyFrameOf(spark, ddl)
@@ -1728,16 +1753,9 @@ object VersionedStore {
         // row-group pruning) and a compacted-bucket lookup is ONE job
         // — no broadcast side, no discovery job (spec-pinned). The
         // predicate is injected BELOW the chain-resolution projection
-        // so it reaches the scan on MOR chains too. BALANCED or-tree
-        // (round-16): a left-fold of 1000 terms nests 1000 deep and
-        // Catalyst's recursive converters overflow the stack — found
-        // by q168's stream thread when TrainStream's novelty probe
-        // moved onto this path.
-        val wanted = balancedReduce(keyRows.toSeq.map { r =>
-          keyFields.indices.map(i => col(keyCols(i)) <=> lit(r.get(i)))
-            .reduce(_ && _)
-        })(_ || _)
-        readChains(spark, keyCols, ddl, chains, keyFilter = Some(wanted))
+        // so it reaches the scan on MOR chains too.
+        readChains(spark, keyCols, ddl, chains,
+          keyFilter = Some(keyPredicate(keyRows.toSeq, keyCols)))
       } else {
         val resolved = readChains(spark, keyCols, ddl, chains)
         // a very large batch-get: a literal predicate would bloat the
@@ -1803,26 +1821,13 @@ object VersionedStore {
       // × chain), blooms/row-group stats skip inside them
       val storeSchema = StructType.fromDDL(ddl)
       val keyFields = keyCols.map(kc => storeSchema(kc))
-      val (fs, dir) = fsOf(root)
-      val n = readMarker(fs, new Path(dir, "_nbuckets"))
-        .map(_.trim.toInt)
-        .getOrElse(sys.error(s"not a versioned store (no _nbuckets): $root"))
-      val distinctRows = probeRows.distinct
-      val buckets = distinctRows.map { r =>
-        val h = new org.apache.spark.sql.catalyst.expressions.Murmur3Hash(
-          keyFields.indices.map(i =>
-            org.apache.spark.sql.catalyst.expressions.Literal
-              .create(r.get(i), keyFields(i).dataType)), 42)
-          .eval(null).asInstanceOf[Int]
-        ((h % n) + n) % n
-      }.distinct.toSeq
+      val n = requireBucketCount(root)
+      val distinctRows = probeRows.distinct.toSeq
+      val buckets = keyBuckets(distinctRows, keyFields, n)
       val chains = snapshotChains(root, committed, cur,
         only = Some(buckets.toSet)).values.filter(_.paths.nonEmpty)
       if (chains.isEmpty) return (emptyFrameOf(spark, ddl), true)
-      val keyFilter = balancedReduce(distinctRows.toSeq.map { r =>
-        keyFields.indices.map(i => col(keyCols(i)) <=> lit(r.get(i)))
-          .reduce(_ && _)
-      })(_ || _)
+      val keyFilter = keyPredicate(distinctRows, keyCols)
       val frame =
         if (resolveMor)
           readChains(spark, keyCols, ddl, chains, keyFilter = Some(keyFilter))
@@ -1910,6 +1915,30 @@ object VersionedStore {
       else readChains(spark, keyColsOf(root), ddl, kept)
     resolved.filter(col(colName) >= lit(lo) && col(colName) <= lit(hi))
   }
+
+  /** Bucket of one concrete key tuple, computed on the driver: the
+    * exact Murmur3 (seed 42) Catalyst's `hash` evaluates, so it
+    * replays the writer's `pmod(hash(keyCols…), n)` with no Spark job. */
+  private[graft] def bucketOf(values: Seq[(Any, DataType)], n: Int): Int = {
+    val h = Murmur3Hash(values.map { case (v, t) => Literal.create(v, t) }, 42)
+      .eval(null).asInstanceOf[Int]
+    ((h % n) + n) % n
+  }
+
+  /** Distinct buckets of driver-resident key rows ([[bucketOf]]). */
+  private def keyBuckets(rows: Seq[Row], keyFields: Seq[StructField],
+                         n: Int): Seq[Int] =
+    rows.map(r => bucketOf(keyFields.indices
+      .map(i => (r.get(i), keyFields(i).dataType)), n)).distinct
+
+  /** Literal key-tuple predicate, a BALANCED or-tree of null-safe
+    * conjunctions: a left-fold of 1000 terms nests 1000 deep and
+    * Catalyst's recursive converters overflow the stack (round-16,
+    * found by q168's stream thread). */
+  private def keyPredicate(rows: Seq[Row], keyCols: Seq[String]): Column =
+    balancedReduce(rows.map { r =>
+      keyCols.indices.map(i => col(keyCols(i)) <=> lit(r.get(i))).reduce(_ && _)
+    })(_ || _)
 
   /** Pairwise (depth-log n) reduction for wide predicate trees: a
     * plain left-fold of N terms nests N deep, and Catalyst's
@@ -2305,8 +2334,7 @@ object VersionedStore {
       Sinks.fastMkdirs(dfs, dDir)
       writeMarker(dfs, new Path(dDir, "_keycols"), keyCols.mkString(","),
         replace = false)
-      writeMarker(dfs, new Path(dDir, "_nbuckets"), nBuckets.toString,
-        replace = false)
+      bucketCount(dfs, dDir, nBuckets)
       writeMarker(dfs, new Path(dDir, "_schema"), ddl, replace = false)
       val token = java.util.UUID.randomUUID().toString
       val epoch = 1L

@@ -6,15 +6,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.Similarity
-import graft.sinks.Sinks
+import graft.sinks.VersionedStore
 
 /** ANN index maintenance as a STREAMING job — [[RefreshStream]]'s
   * sibling for the vector side: embedding batches land on a
   * file-backed queue, each micro-batch is assigned to the index's
   * FROZEN centroids ([[Similarity.ivfIndexUpsert]]'s contract — a
-  * batch must not move the index) and its posting rows land through
-  * the crash-safe partitioned keyed upsert
-  * ([[Sinks.upsertPartitioned]]).
+  * batch must not move the index) and its posting rows land as one
+  * atomic keyed-upsert epoch of a [[VersionedStore]].
   *
   * Exactly-once across kill/restart follows from one property —
   * keyed-upsert idempotency: every posting row is keyed by vector id
@@ -27,7 +26,7 @@ import graft.sinks.Sinks
   * Scale notes: per batch the work is one broadcast of k·d centroids +
   * one argmax over the batch — O(batch · k), never O(corpus) — and the
   * store write rewrites only the buckets containing the batch's ids.
-  * Serving reads [[postings]] + the centroid table through
+  * Serving reads the postings snapshot + the centroid table through
   * [[Similarity.ivfTopKFromIndex]] unchanged. The production swap-in
   * is the same Delta/Iceberg MERGE as RefreshStream's stores.
   */
@@ -42,7 +41,8 @@ final case class IndexStream(vecId: String, vecCol: String) {
                 root: String): Unit = {
     val idx = Similarity.ivfIndexBuild(oldVectors, vecId, vecCol, k, iters)
     idx.centroids.write.mode("overwrite").parquet(centDir(root))
-    Sinks.upsertPartitioned(idx.assignments, Seq("corpus_id"), asgDir(root))
+    VersionedStore.upsert(idx.assignments, Seq("corpus_id"), asgDir(root))
+    ()
   }
 
   /** Land one batch: assign to the frozen centroids, upsert postings.
@@ -55,10 +55,8 @@ final case class IndexStream(vecId: String, vecCol: String) {
     val asg = Similarity.ivfAssign(batch,
         cents.select(col("centroid_id"), col("centv").as(vecCol)),
         vecId, "centroid_id", vecCol)
-      // materialize before the store swap renames the dirs a lazy
-      // plan would scan (the RefreshStream rule)
-      .localCheckpoint()
-    Sinks.upsertPartitioned(asg, Seq("corpus_id"), asgDir(root))
+    VersionedStore.upsert(asg, Seq("corpus_id"), asgDir(root))
+    ()
   }
 
   /** The live index view over the persisted state (serve through
@@ -66,7 +64,7 @@ final case class IndexStream(vecId: String, vecCol: String) {
   def index(spark: SparkSession, root: String): Similarity.IvfIndex =
     Similarity.IvfIndex(
       spark.read.parquet(centDir(root)),
-      Sinks.readPartitioned(spark, asgDir(root)))
+      VersionedStore.read(spark, asgDir(root)))
 
   /** Start the landing-queue consumer: one micro-batch per landing
     * file, checkpointed for exactly-once restart. The checkpoint name
@@ -89,7 +87,7 @@ final case class IndexStream(vecId: String, vecCol: String) {
   * ([[Similarity.IvfPqIndex]]): per micro-batch the landing vectors
   * are cell-assigned AND PQ-encoded against the frozen centroid +
   * codebook tables ([[Similarity.ivfPqCode]]) and the resulting code
-  * rows land through the crash-safe keyed upsert. The exactly-once
+  * rows land as one keyed-upsert epoch. The exactly-once
   * argument is IndexStream's unchanged — every code row is keyed by
   * vector id and is a pure function of (vector, frozen tables), so a
   * replayed batch re-writes identical rows. Per-batch cost is
@@ -110,7 +108,8 @@ final case class IvfPqStream(vecId: String, vecCol: String,
       k, iters, m, dsub, ksub, pqIters)
     idx.centroids.write.mode("overwrite").parquet(centDir(root))
     idx.codebook.write.mode("overwrite").parquet(cbDir(root))
-    Sinks.upsertPartitioned(idx.codes, Seq("corpus_id"), codesDir(root))
+    VersionedStore.upsert(idx.codes, Seq("corpus_id"), codesDir(root))
+    ()
   }
 
   /** Land one batch against the frozen tables. Public so the one-shot
@@ -120,10 +119,8 @@ final case class IvfPqStream(vecId: String, vecCol: String,
     if (batch.isEmpty) return
     val rows = Similarity.ivfPqCode(batch, vecId, vecCol, m, dsub,
         spark.read.parquet(centDir(root)), spark.read.parquet(cbDir(root)))
-      // materialize before the store swap renames the dirs a lazy
-      // plan would scan (the RefreshStream rule)
-      .localCheckpoint()
-    Sinks.upsertPartitioned(rows, Seq("corpus_id"), codesDir(root))
+    VersionedStore.upsert(rows, Seq("corpus_id"), codesDir(root))
+    ()
   }
 
   /** The live combined index over the persisted state. */
@@ -131,7 +128,7 @@ final case class IvfPqStream(vecId: String, vecCol: String,
     Similarity.IvfPqIndex(
       spark.read.parquet(centDir(root)),
       spark.read.parquet(cbDir(root)),
-      Sinks.readPartitioned(spark, codesDir(root)))
+      VersionedStore.read(spark, codesDir(root)))
 
   /** Start the landing-queue consumer (checkpoint name is
     * stream-specific, the ConcurrentStreamsSpec convention). */

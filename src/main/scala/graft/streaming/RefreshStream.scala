@@ -6,16 +6,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.{ApproxDedup, Dedup, SemanticDedup}
-import graft.sinks.Sinks
+import graft.sinks.VersionedStore
 
 /** The corpus-refresh pipeline as a STREAMING job: landing batches
   * arrive on a file-backed queue, each micro-batch runs the q110
   * three-gate composition (exact fingerprint → lexical MinHash-LSH →
   * semantic centroid) against the PERSISTED ledgers, and the accepted
-  * documents plus all three ledger deltas land through the crash-safe
-  * keyed upsert store ([[Sinks.upsertPartitioned]] — per-bucket
-  * swap-by-rename, so a crash at any point leaves every bucket
-  * complete).
+  * documents plus all three ledger deltas land as keyed-upsert epochs
+  * of five [[VersionedStore]]s (each epoch one atomic commit, so a
+  * crash at any point leaves every store at a complete snapshot).
   *
   * Exactly-once across kill/restart WITHOUT cross-store transactions,
   * by composing two properties:
@@ -46,13 +45,12 @@ import graft.sinks.Sinks
   * Scale notes: per batch every gate's work is O(|ledger scan| +
   * |batch| + collisions) — history is never recomputed (the ledgers
   * are the round-7 [[ApproxDedup.LshLedger]]/[[SemanticDedup
-  * .SemLedger]] contract). Every keyed store is the hash-PARTITIONED
-  * upsert ([[Sinks.upsertPartitioned]]): a batch rewrites only the
-  * buckets containing its keys — O(batch), not O(store) — with the
-  * same per-bucket swap-by-rename crash safety; a crash between bucket
-  * writes is covered by the same two replay properties above (the
-  * retry re-merges every bucket idempotently). A production deployment
-  * swaps the store for a Delta/Iceberg MERGE (same key-replace
+  * .SemLedger]] contract). Every keyed store is hash-bucketed
+  * ([[VersionedStore.upsert]]): a batch rewrites only the buckets
+  * containing its keys — O(batch), not O(store); a crash between two
+  * stores' commits is covered by the same two replay properties above
+  * (the retry re-merges every store idempotently). A production
+  * deployment swaps the store for a Delta/Iceberg MERGE (same key-replace
   * contract, same log-structured cost). Reference analogue: the
   * consume loop + sent-message ledger probe
   * (TaskExecutor/TaskExecutor.py:18-49,
@@ -81,16 +79,17 @@ final case class RefreshStream(
     * stream then only ever appends). Centroids are written once and
     * FROZEN — [[SemanticDedup.updatedSemLedger]]'s contract. */
   def bootstrap(oldDocs: DataFrame, oldEmb: DataFrame, root: String): Unit = {
-    Sinks.upsertPartitioned(oldDocs.select(col(id), fp.as("fp")),
+    VersionedStore.upsert(oldDocs.select(col(id), fp.as("fp")),
       Seq(id), fpDir(root))
     val lsh = ApproxDedup.lshLedger(
       oldDocs.withColumn("_sh", shingles).select(col(id), col("_sh")),
       id, "_sh", k, bands, rowsPerBand)
-    Sinks.upsertPartitioned(lsh.buckets, Seq(id, "band"), bkDir(root))
-    Sinks.upsertPartitioned(lsh.sets, Seq(id), setsDir(root))
+    VersionedStore.upsert(lsh.buckets, Seq(id, "band"), bkDir(root))
+    VersionedStore.upsert(lsh.sets, Seq(id), setsDir(root))
     val sem = SemanticDedup.semLedger(oldEmb, vecId, vecCol, semK, semIters)
     sem.centroids.write.mode("overwrite").parquet(centDir(root))
-    Sinks.upsertPartitioned(sem.assignments, Seq(vecId), asnDir(root))
+    VersionedStore.upsert(sem.assignments, Seq(vecId), asnDir(root))
+    ()
   }
 
   /** Land one batch: gate against self-excluding ledger views, then
@@ -100,7 +99,7 @@ final case class RefreshStream(
     val spark = batch.sparkSession
     if (batch.isEmpty) return
     val ids = batch.select(col(id)).distinct().localCheckpoint()
-    def store(dir: String): DataFrame = Sinks.readPartitioned(spark, dir)
+    def store(dir: String): DataFrame = VersionedStore.read(spark, dir)
     def excl(df: DataFrame, idCol: String): DataFrame =
       df.join(ids.select(col(id).as(idCol)), Seq(idCol), "left_anti")
 
@@ -123,10 +122,11 @@ final case class RefreshStream(
     val dropped = batchEmb.select(col(vecId).as(id))
       .join(s3.select(col(vecId).as(id)), Seq(id), "left_anti")
 
-    // materialize EVERYTHING that reads a store before the first store
-    // swap — the upserts below rename the very directories these lazy
-    // plans scan
-    val accepted = s2.join(dropped, Seq(id), "left_anti").localCheckpoint()
+    // every store view above resolved its snapshot's (immutable)
+    // generation files when it was built, so these lazy plans read the
+    // pre-batch state whatever order the upserts below commit in; each
+    // upsert materializes its own batch once
+    val accepted = s2.join(dropped, Seq(id), "left_anti")
     // Ledger deltas are each gate's SEEN set, not the final accepted
     // set: the one-shot composition's within-batch rules let a doc
     // that entered gate N drop larger-id batch-mates there even when
@@ -136,26 +136,24 @@ final case class RefreshStream(
     // (stage-1 survivors' buckets/sets), "reached gate 3" (stage-2
     // survivors' assignments). The accepted store alone carries the
     // final-survivor semantics.
-    val fpDelta = batch.select(col(id), fp.as("fp")).localCheckpoint()
+    val fpDelta = batch.select(col(id), fp.as("fp"))
     val lshDelta = ApproxDedup.lshLedger(
       s1.withColumn("_sh", shingles).select(col(id), col("_sh")),
       id, "_sh", k, bands, rowsPerBand)
-    val bkDelta = lshDelta.buckets.localCheckpoint()
-    val setsDelta = lshDelta.sets.localCheckpoint()
     val asnDelta = SemanticDedup.assignUnit(
       batchEmb, spark.read.parquet(centDir(root)), vecId, vecCol)
-      .localCheckpoint()
 
-    Sinks.upsertPartitioned(accepted, Seq(id), outDir(root))
-    Sinks.upsertPartitioned(fpDelta, Seq(id), fpDir(root))
-    Sinks.upsertPartitioned(bkDelta, Seq(id, "band"), bkDir(root))
-    Sinks.upsertPartitioned(setsDelta, Seq(id), setsDir(root))
-    Sinks.upsertPartitioned(asnDelta, Seq(vecId), asnDir(root))
+    VersionedStore.upsert(accepted, Seq(id), outDir(root))
+    VersionedStore.upsert(fpDelta, Seq(id), fpDir(root))
+    VersionedStore.upsert(lshDelta.buckets, Seq(id, "band"), bkDir(root))
+    VersionedStore.upsert(lshDelta.sets, Seq(id), setsDir(root))
+    VersionedStore.upsert(asnDelta, Seq(vecId), asnDir(root))
+    ()
   }
 
   /** The accepted-corpus store (what a consumer trains on). */
   def accepted(spark: SparkSession, root: String): DataFrame =
-    Sinks.readPartitioned(spark, outDir(root))
+    VersionedStore.read(spark, outDir(root))
 
   /** Start the landing-queue consumer: one micro-batch per landing
     * file (so batch boundaries equal file boundaries — the contract

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.sinks.{Sinks, VersionedStore}
+import graft.sinks.VersionedStore
 
 /** Streaming maintainer for a TRAINED linear-probe weight ledger — the
   * online half of [[graft.ops.LinearTrainer]]: each landing batch of
@@ -56,9 +56,9 @@ import graft.sinks.{Sinks, VersionedStore}
   * ran O(ledger/16) of merge work on the landing path by its own doc.
   * The model never collects to the driver; the step is one declarative
   * plan. The weight ledger (MODEL-sized by contract — its rewrite is
-  * O(model), not O(corpus)) stays on the hash-partitioned staged
-  * upsert ([[Sinks.upsertPartitioned]]), whose swap gives rules 1+2
-  * their single-file atomicity.
+  * O(model), not O(corpus)) is a single-bucket copy-on-write store
+  * ([[VersionedStore.upsert]]), whose atomic epoch commit gives rules
+  * 1+2 their all-or-nothing step.
   *
   * @param id        example id column name
   * @param featurize batch → (id, bucket, x) sparse integer features
@@ -88,14 +88,11 @@ final case class TrainStream(id: String, featurize: DataFrame => DataFrame,
 
   /** Read the weight ledger (may legitimately be empty: training
     * starts from the zero model). */
-  private def readWeights(spark: SparkSession, root: String): DataFrame = {
-    val dir = wDir(root)
-    Sinks.recoverPartitioned(dir)
-    if (Sinks.listBuckets(dir).isEmpty)
+  private def readWeights(spark: SparkSession, root: String): DataFrame =
+    if (VersionedStore.currentEpoch(wDir(root)) == 0L)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], WSchema)
-    else Sinks.readPartitioned(spark, dir)
-  }
+    else VersionedStore.read(spark, wDir(root))
 
   /** The landed ids that can collide with `batchIds` — the BOUNDED
     * novelty probe ([[VersionedStore.probeForKeys]]): opens only the
@@ -163,7 +160,7 @@ final case class TrainStream(id: String, featurize: DataFrame => DataFrame,
     val novel = StreamSessions.labeled(spark,
         s"train e$epoch: novel batch") {
       batch.join(broadcast(landedHit), Seq(id), "left_anti")
-        .localCheckpoint() // feeds n, feats, labels across the store swap
+        .localCheckpoint() // feeds n, feats and labels
     }
     val n = novel.count() // 0 covers the empty-batch case too
     if (n == 0) return
@@ -222,14 +219,12 @@ final case class TrainStream(id: String, featurize: DataFrame => DataFrame,
         when(col("_le") >= epoch, col("_wp_cur"))
           .otherwise(col("_eff")).as("w_prev"),
         greatest(col("_le"), lit(epoch)).as("last_epoch"))
-    // upsertPartitioned's own internal checkpoint is merged's ONE
-    // materialization (it lands before the staging write swaps the
-    // store this plan reads — exactly the ordering the sink exists
-    // to provide); a second checkpoint here would double it. ONE
+    // the upsert's own internal checkpoint is merged's ONE
+    // materialization; a second checkpoint here would double it. ONE
     // bucket: the weight ledger is model-sized by contract (≤ feature
     // buckets rows), and every batch touches most of it — a multi-
-    // bucket layout would just multiply the per-epoch swap renames
-    // (round-14; existing stores keep their marker's own count).
+    // bucket layout would just multiply the per-epoch generation
+    // renames (round-14; existing stores keep their marker's own count).
     // The docs land is an MVCC TAGGED delta commit: a replay whose
     // docs already committed skips it (atomic — no half-landed ids
     // can exist), and the delta derives from the checkpointed novel
@@ -238,8 +233,7 @@ final case class TrainStream(id: String, featurize: DataFrame => DataFrame,
     val docTag = s"e$epoch"
     StreamSessions.inParallel(
       () => StreamSessions.labeled(spark, s"train e$epoch: weights land") {
-        Sinks.upsertPartitioned(merged, Seq("b"), wDir(root),
-          nBuckets = 1)
+        VersionedStore.upsert(merged, Seq("b"), wDir(root), nBuckets = 1)
       },
       () => if (VersionedStore.taggedEpoch(docsDir(root), docTag).isEmpty)
         // ids are unique per batch (the landing contract — r15's

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sinks.Sinks
+import graft.sinks.VersionedStore
 import graft.streaming.{LmStream, TrainStream}
 
 /** Per-micro-batch ledger I/O contract (round-15): the streaming
@@ -34,48 +34,38 @@ class LedgerProbeSpec extends SparkSpec {
       concat(lit("alpha beta gamma delta epsilon zeta token"),
         pmod(col("id"), lit(7L))).as("text"))
 
-  test("probePartitioned reads only the probe keys' buckets, exactly") {
+  test("probeForKeys reads only the probe keys' buckets, exactly") {
     val root = probeRoot("ledger_probe_unit") + "/store"
-    Sinks.upsertPartitioned(
+    VersionedStore.upsert(
       spark.range(0L, 2000L).select(col("id").as("k"), (col("id") * 3).as("v")),
       Seq("k"), root, nBuckets = 64)
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "k BIGINT, v BIGINT")
     val keys = Seq(17L, 23L, 900L).toDF("k")
-    val (opens, _) = measured {
-      val got = Sinks.probePartitioned(spark, root, keys, schema)
-        .as[(Long, Long)].collect().toSet
-      assert(got == Set((17L, 51L), (23L, 69L), (900L, 2700L)),
-        s"pushed single-key probe is exact: $got")
-    }
-    // ≤ 3 key buckets × (footer + pages [+ reopen]) + the marker reads;
-    // a full scan would open all 64 bucket files before any markers
-    assert(opens <= 16,
-      s"3-key probe opened $opens files — must be ≤ its keys' buckets")
+    CountingFs.reset()
+    val got = VersionedStore.probeForKeys(spark, root, keys)
+      .as[(Long, Long)].collect().toSet
+    val dataOpens = CountingFs.parquetOpens.get()
+    assert(got == Set((17L, 51L), (23L, 69L), (900L, 2700L)),
+      s"pushed single-key probe is exact: $got")
+    // ≤ 3 key buckets × (footer + pages [+ reopen]); a full scan would
+    // open all 64 bucket files
+    assert(dataOpens <= 9,
+      s"3-key probe opened $dataOpens data files — must be ≤ its keys' buckets")
     // absent keys: bucket dirs still open (hash says they could be
-    // there) but the result is empty and the In push means blooms can
+    // there) but the result is empty and the key push means blooms can
     // skip every data page
-    val none = Sinks.probePartitioned(spark, root,
-      Seq(999999L).toDF("k"), schema)
-    assert(none.count() == 0L)
-    // composite-key probe (bucket pruning only) stays a superset that
-    // the caller's exact join refines
+    assert(VersionedStore.probeForKeys(spark, root,
+      Seq(999999L).toDF("k")).count() == 0L)
+    // composite-key probe: the pushed tuple predicate is exact too
     val root2 = probeRoot("ledger_probe_pair") + "/store"
-    Sinks.upsertPartitioned(
+    VersionedStore.upsert(
       spark.range(0L, 500L).select(concat(lit("c"), pmod(col("id"), lit(50L)))
         .as("context"), concat(lit("w"), col("id")).as("word"),
         col("id").as("cnt")),
       Seq("context", "word"), root2, nBuckets = 32)
-    val pairSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "context STRING, word STRING, cnt BIGINT")
     val pairKeys = Seq(("c1", "w1"), ("c2", "w2")).toDF("context", "word")
-    val sup = Sinks.probePartitioned(spark, root2, pairKeys, pairSchema)
-    val hit = sup.join(pairKeys, Seq("context", "word"), "left_semi")
+    val hit = VersionedStore.probeForKeys(spark, root2, pairKeys)
       .as[(String, String, Long)].collect().toSet
     assert(hit == Set(("c1", "w1", 1L), ("c2", "w2", 2L)))
-    // and the uncreated-store read is empty, never an error
-    assert(Sinks.probePartitioned(spark, root + "_nope", keys, schema)
-      .count() == 0L)
   }
 
   test("composite-key probe skips pages on BOTH columns (hot first key)") {
@@ -100,23 +90,30 @@ class LedgerProbeSpec extends SparkSpec {
         format_string("w%06d", col("id")).as("word"),
         col("id").as("cnt"),
         concat(lit("pad"), format_string("%060d", col("id"))).as("pad"))
-      Sinks.upsertPartitioned(hot.unionByName(cold),
+      VersionedStore.upsert(hot.unionByName(cold),
         Seq("context", "word"), root, nBuckets = 32)
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "context STRING, word STRING, cnt BIGINT, pad STRING")
       // probe words far apart in the sort order — distinct row groups
       val pairKeys = Seq("w000007", "w040001", "w080003", "w119991")
         .map(("c1", _)).toDF("context", "word")
-      def probeBytes(): (Long, Long) = {
+      def probeBytes(probe: => org.apache.spark.sql.DataFrame): (Long, Long) = {
         CountingFs.reset()
-        val rows = Sinks.probePartitioned(spark, root, pairKeys, schema)
-          .collect()
+        val rows = probe.collect()
         (CountingFs.bytesRead.get(), rows.length.toLong)
       }
-      val (fullB, fullRows) = probeBytes()
-      Sinks.probeFirstColOnly = true
-      val (firstB, firstRows) =
-        try probeBytes() finally Sinks.probeFirstColOnly = false
+      val (fullB, fullRows) =
+        probeBytes(VersionedStore.probeForKeys(spark, root, pairKeys))
+      // the comparison read: the SAME buckets with only the first key
+      // column pushed
+      val buckets = pairKeys.select(
+        pmod(hash(col("context"), col("word")), lit(32))).as[Int]
+        .collect().toSet
+      val paths = VersionedStore.snapshotChains(root,
+        VersionedStore.commits(root), Long.MaxValue, only = Some(buckets))
+        .values.flatMap(_.paths).toSeq
+      val (firstB, firstRows) = probeBytes(spark.read.schema(schema)
+        .parquet(paths: _*).filter(col("context") === "c1"))
       println(s"LEDGER_IO hotkey full=($fullB B, $fullRows rows) " +
         s"firstColOnly=($firstB B, $firstRows rows)")
       // the OR-of-conjunctions push is EXACT — 4 rows back, not the

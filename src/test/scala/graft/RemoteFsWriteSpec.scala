@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sinks.{Sinks, VersionedStore}
+import graft.connectors.ParquetStore
+import graft.sinks.VersionedStore
 
 /** Round-14 guard: the local-filesystem FAST PATHS (java.nio marker
   * writes, POSIX hard-link commit fence, nio mkdirs) must correctly
@@ -46,13 +47,15 @@ class RemoteFsWriteSpec extends SparkSpec {
     assert(r.watermark == 3L)
     assert(VersionedStore.read(spark, root).count() == 39L)
 
-    // the partitioned ledger store (observation stats + swap promote)
-    val ledger = "probe:" + tmpDir("remote_ledger") + "/st"
-    Sinks.upsertPartitioned((1L to 30L).map(k => (k, k)).toDF("k", "c"),
-      Seq("k"), ledger, nBuckets = 4)
-    Sinks.upsertPartitioned(Seq((7L, 70L)).toDF("k", "c"), Seq("k"), ledger)
-    val rows = Sinks.readPartitioned(spark, ledger)
-      .as[(Long, Long)].collect().toMap
+    // the swap-by-rename KeyedStore (swap promote + _SUCCESS probe)
+    val stat = ParquetStore("probe:" + tmpDir("remote_stat") + "/st")
+    assert(stat.read(spark).isEmpty)
+    stat.upsert((1L to 30L).map(k => (k, k)).toDF("k", "c"), Seq("k"))
+    val first = stat.read(spark)
+    assert(first.isDefined, "a landed upsert must read back")
+    assert(first.get.count() == 30L)
+    stat.upsert(Seq((7L, 70L)).toDF("k", "c"), Seq("k"))
+    val rows = stat.read(spark).get.as[(Long, Long)].collect().toMap
     assert(rows.size == 30 && rows(7L) == 70L)
   }
 }

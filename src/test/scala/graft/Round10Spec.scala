@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
-import graft.sinks.Sinks
+import graft.sinks.VersionedStore
 
 /** The distributed store-upsert's SCALE contract: the number of Spark
-  * jobs [[Sinks.upsertPartitioned]] runs is a small constant,
+  * jobs [[VersionedStore.upsert]] runs is a small constant,
   * INDEPENDENT of how many buckets the batch touches — the merge
   * stages every touched bucket in one `partitionBy(_bucket)` write and
   * promotion is rename-only. The round-9 implementation ran one
@@ -31,16 +31,16 @@ class UpsertOneJobSpec extends SparkSpec {
   test("job count does not grow with touched-bucket count") {
     val store = tmpDir("onejob_store") + "/s"
     // bootstrap: 64 buckets, all touched
-    Sinks.upsertPartitioned((1L to 2000L).map(i => (i, s"v$i")).toDF("id", "v"),
+    VersionedStore.upsert((1L to 2000L).map(i => (i, s"v$i")).toDF("id", "v"),
       Seq("id"), store, nBuckets = 64)
 
     // batch A touches ~2 buckets; batch B touches all 64
     val narrow = Seq((1L, "N1"), (2L, "N2")).toDF("id", "v")
     val wide = (2001L to 4000L).map(i => (i, s"w$i")).toDF("id", "v")
     val jobsNarrow = countJobs(
-      Sinks.upsertPartitioned(narrow, Seq("id"), store, nBuckets = 64))
+      VersionedStore.upsert(narrow, Seq("id"), store, nBuckets = 64))
     val jobsWide = countJobs(
-      Sinks.upsertPartitioned(wide, Seq("id"), store, nBuckets = 64))
+      VersionedStore.upsert(wide, Seq("id"), store, nBuckets = 64))
 
     assert(jobsWide <= jobsNarrow + 2,
       s"job count must be flat in touched buckets: narrow=$jobsNarrow wide=$jobsWide")
@@ -48,7 +48,7 @@ class UpsertOneJobSpec extends SparkSpec {
       s"expected a constant handful of jobs, got $jobsWide for 64 touched buckets")
 
     // and the merge is still correct after both batches
-    val got = Sinks.readPartitioned(spark, store)
+    val got = VersionedStore.read(spark, store)
       .as[(Long, String)].collect().toSeq.sorted
     val want = ((3L to 2000L).map(i => (i, s"v$i")) ++
       Seq((1L, "N1"), (2L, "N2")) ++
@@ -58,25 +58,27 @@ class UpsertOneJobSpec extends SparkSpec {
 
   test("store write path touches no staging leftovers and keeps one file per bucket") {
     val store = tmpDir("onejob_layout") + "/s"
-    Sinks.upsertPartitioned((1L to 500L).map(i => (i, i * 2)).toDF("id", "x"),
+    VersionedStore.upsert((1L to 500L).map(i => (i, i * 2)).toDF("id", "x"),
       Seq("id"), store, nBuckets = 8)
-    Sinks.upsertPartitioned((400L to 900L).map(i => (i, i * 3)).toDF("id", "x"),
+    VersionedStore.upsert((400L to 900L).map(i => (i, i * 3)).toDF("id", "x"),
       Seq("id"), store, nBuckets = 8)
+    def list(p: java.nio.file.Path): Seq[java.nio.file.Path] = {
+      val it = java.nio.file.Files.list(p).iterator()
+      val out = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+      while (it.hasNext) out += it.next()
+      out.toSeq
+    }
     val root = java.nio.file.Paths.get(store)
-    val entries = java.nio.file.Files.list(root).iterator()
-    val names = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (entries.hasNext) names += entries.next().getFileName.toString
-    assert(!names.contains(".upsert-staging"), s"staging dir leaked: $names")
-    assert(!names.exists(_.endsWith(".swap")), s"swap dir leaked: $names")
-    assert(!names.exists(_.endsWith(".old")), s"old dir leaked: $names")
-    names.filter(_.matches("^b\\d{5}$")).foreach { b =>
-      val files = java.nio.file.Files.list(root.resolve(b)).iterator()
-      var parquets = 0
-      while (files.hasNext) {
-        val n = files.next().getFileName.toString
-        if (n.endsWith(".parquet") && !n.startsWith(".")) parquets += 1
-      }
-      assert(parquets == 1, s"bucket $b must hold one live file, got $parquets")
+    val names = list(root).map(_.getFileName.toString)
+    assert(!names.exists(_.startsWith(".epoch-staging")),
+      s"staging dir leaked: $names")
+    val gens = names.filter(_.matches("^b\\d{5}$"))
+      .flatMap(b => list(root.resolve(b)))
+    assert(gens.nonEmpty)
+    gens.foreach { g =>
+      val parquets = list(g).map(_.getFileName.toString)
+        .count(n => n.endsWith(".parquet") && !n.startsWith("."))
+      assert(parquets == 1, s"generation $g must hold one file, got $parquets")
     }
   }
 }
@@ -1044,40 +1046,43 @@ class BpeScaleSpec extends SparkSpec {
   }
 }
 
-/** Randomized differential test of the DISTRIBUTED partitioned
-  * upsert: arbitrary overlapping batches must leave the partitioned
-  * store, the monolithic store and a driver-side reference map in
+/** Randomized differential test of the DISTRIBUTED bucketed upsert:
+  * arbitrary overlapping batches must leave the bucketed store, the
+  * monolithic swap-by-rename store and a driver-side reference map in
   * exact agreement — the net behavioral contract the one-job rewrite
-  * must preserve. */
+  * must preserve. Both stores go through the [[graft.connectors
+  * .KeyedStore]] trait. */
 class StorePropertySpec extends SparkSpec {
   import spark.implicits._
-  import graft.sinks.Sinks
+  import graft.connectors.{ParquetStore, VersionedKeyedStore}
 
   test("a scheme-qualified store path round-trips (bucket paths keep their scheme)") {
     // the round-10 posture claim is "the store runs on HDFS/S3A
-    // unchanged": bucket paths returned by the listing must keep
-    // scheme+authority so readers never resolve them against the
+    // unchanged": generation paths resolved from the commit log must
+    // keep scheme+authority so readers never resolve them against the
     // session's default filesystem
     val store = "file:" + tmpDir("scheme_store") + "/s"
     val rows = (1L to 100L).map(i => (i, s"v$i")).toDF("id", "v")
-    Sinks.upsertPartitioned(rows, Seq("id"), store, nBuckets = 4)
-    val buckets = Sinks.listBuckets(store)
-    assert(buckets.nonEmpty && buckets.forall(_.startsWith("file:")),
-      s"bucket paths must stay scheme-qualified: $buckets")
-    val back = Sinks.readPartitioned(spark, store)
+    VersionedStore.upsert(rows, Seq("id"), store, nBuckets = 4)
+    val gens = VersionedStore.snapshotChains(store,
+      VersionedStore.commits(store), Long.MaxValue).values.flatMap(_.paths)
+    assert(gens.nonEmpty && gens.forall(_.startsWith("file:")),
+      s"generation paths must stay scheme-qualified: $gens")
+    val back = VersionedStore.read(spark, store)
       .as[(Long, String)].collect().toSeq.sorted
     assert(back == (1L to 100L).map(i => (i, s"v$i")).sorted)
-    val ds = spark.read.format("graft-store").load(store)
+    val ds = spark.read.format("graft-vstore").option("path", store).load()
     assert(ds.count() == 100)
     val one = ds.filter(org.apache.spark.sql.functions.col("id") === 7L)
     assert(one.rdd.getNumPartitions == 1 && one.count() == 1)
   }
 
-  test("random batch sequences: partitioned == monolithic == reference") {
+  test("random batch sequences: VersionedStore == ParquetStore == reference") {
     val rnd = new scala.util.Random(17)
     for (trial <- 1 to 3) {
-      val pStore = tmpDir(s"prop_p$trial") + "/s"
-      val mStore = tmpDir(s"prop_m$trial") + "/s"
+      val pDir = tmpDir(s"prop_p$trial") + "/s"
+      val pStore = VersionedKeyedStore(pDir)
+      val mStore = ParquetStore(tmpDir(s"prop_m$trial") + "/s")
       val ref = scala.collection.mutable.Map.empty[Long, String]
       for (b <- 1 to 5) {
         val batch = (1 to (20 + rnd.nextInt(120))).map { _ =>
@@ -1085,87 +1090,19 @@ class StorePropertySpec extends SparkSpec {
         }.distinct.groupBy(_._1).map(_._2.head).toSeq // unique keys per batch
         batch.foreach { case (k, v) => ref(k) = v }
         val df = batch.toDF("id", "v")
-        Sinks.upsertPartitioned(df, Seq("id"), pStore,
+        // the bucket count is pinned at creation: later values must
+        // be ignored, not re-shard the store
+        VersionedStore.upsert(df, Seq("id"), pDir,
           nBuckets = 1 + rnd.nextInt(16))
-        Sinks.upsertParquet(df, Seq("id"), mStore)
+        mStore.upsert(df, Seq("id"))
       }
-      val p = Sinks.readPartitioned(spark, pStore)
+      val p = pStore.read(spark).get
         .as[(Long, String)].collect().toSeq.sorted
-      val m = spark.read.parquet(mStore)
+      val m = mStore.read(spark).get
         .as[(Long, String)].collect().toSeq.sorted
       val want = ref.toSeq.sorted
-      assert(p == want, s"trial $trial: partitioned store diverged")
-      assert(m == want, s"trial $trial: monolithic store diverged")
+      assert(p == want, s"trial $trial: VersionedStore diverged")
+      assert(m == want, s"trial $trial: ParquetStore diverged")
     }
-  }
-}
-
-/** The `_stats` marker as the DSv2 reader's statistics source: an
-  * upsert maintains per-bucket (rows, bytes) lines, and
-  * `estimateStatistics` serves them WITHOUT listing bucket directories
-  * — proven by tampering the marker and observing the tampered values
-  * in the reported statistics. Plans are unchanged (StoreSourceSpec
-  * still pins pruning and pushdown). */
-class StoreStatsMarkerSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("upsert writes _stats; estimateStatistics serves it; fallback on a missing line") {
-    val store = tmpDir("stats_store") + "/s"
-    val rows = (1L to 300L).map(i => (i, s"v$i")).toDF("id", "v")
-    Sinks.upsertPartitioned(rows, Seq("id"), store, nBuckets = 4)
-
-    val statsPath = java.nio.file.Paths.get(store, "_stats")
-    assert(java.nio.file.Files.exists(statsPath), "_stats marker must exist")
-    val lines = java.nio.file.Files.readString(statsPath).linesIterator.toSeq
-    assert(lines.size == 4, s"one line per bucket: $lines")
-    val byBucket = lines.map { l =>
-      val Array(b, r, by) = l.split(","); (b.toInt, r.toLong, by.toLong)
-    }
-    assert(byBucket.map(_._2).sum == 300L, s"marker rows must total 300: $lines")
-    assert(byBucket.forall(_._3 > 0L))
-
-    def reportedStats(path: String) = {
-      val df = spark.read.format("graft-store").load(path)
-      val rel = df.queryExecution.optimizedPlan.collectFirst {
-        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r
-      }.get
-      val s = rel.scan.asInstanceOf[
-        org.apache.spark.sql.connector.read.SupportsReportStatistics]
-        .estimateStatistics()
-      (s.sizeInBytes().getAsLong,
-        if (s.numRows().isPresent) Some(s.numRows().getAsLong) else None)
-    }
-
-    val (bytes0, rows0) = reportedStats(store)
-    assert(rows0.contains(300L), s"numRows must come from the marker: $rows0")
-    assert(bytes0 == byBucket.map(_._3).sum)
-
-    // tamper the marker: the reader must reflect the tampered numbers,
-    // proving statistics are served from it, not from directory listings
-    // (drop the Hadoop checksum sidecar the out-of-band edit invalidates)
-    def tamper(content: String): Unit = {
-      java.nio.file.Files.writeString(statsPath, content)
-      java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(store, "._stats.crc"))
-    }
-    val tampered = byBucket.map { case (b, _, _) => s"$b,1000000,999999999" }
-      .mkString("\n")
-    tamper(tampered)
-    val (bytes1, rows1) = reportedStats(store)
-    assert(rows1.contains(4000000L), s"tampered rows must surface: $rows1")
-    assert(bytes1 == 4L * 999999999L)
-
-    // a marker missing one bucket's line: rows unknown, bytes fall back
-    // to listing that bucket (never a wrong total)
-    tamper(byBucket.tail.map { case (b, r, by) => s"$b,$r,$by" }.mkString("\n"))
-    val (bytes2, rows2) = reportedStats(store)
-    assert(rows2.isEmpty, "partial marker must not fabricate a row count")
-    assert(bytes2 == byBucket.map(_._3).sum,
-      "bytes must fall back to listing the uncovered bucket")
-
-    // the upsert's own correctness is untouched
-    val got = Sinks.readPartitioned(spark, store)
-      .as[(Long, String)].collect().toSeq.sorted
-    assert(got == (1L to 300L).map(i => (i, s"v$i")).sorted)
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sinks.{Sinks, VersionedStore}
+import graft.sinks.VersionedStore
 
 /** Round-17 contract pins (verdict tasks #7/#8 + round-16 ADVICE):
   *
@@ -12,8 +12,8 @@ import graft.sinks.{Sinks, VersionedStore}
   *    newest-wins data (the fence the fast path removed from the
   *    production shape).
   *  - single-bucket empty-batch fence: an empty batch over a live
-  *    single-bucket [[Sinks.upsertPartitioned]] store must be a no-op,
-  *    not a full-store rewrite + swap.
+  *    single-bucket [[VersionedStore.upsert]] store must be a no-op —
+  *    no new epoch, no bucket rewrite.
   *  - typedLit model bound: the literal-map scoring expression stays
   *    WHOLE-STAGE CODEGEN'D at exactly
   *    [[graft.ops.LinearTrainer.MaxLiteralWeights]] entries
@@ -82,20 +82,29 @@ class Round17Spec extends SparkSpec {
     val store = s"$root/w"
     Seq((1L, 5L), (2L, 6L)).toDF("b", "w")
       .write.mode("ignore").parquet(s"$root/seed") // warm codegen only
-    Sinks.upsertPartitioned(Seq((1L, 5L), (2L, 6L)).toDF("b", "w"),
-      Seq("b"), store, nBuckets = 1)
-    val bucket = new java.io.File(s"$store/b00000")
-    def sig(): Seq[(String, Long, Long)] = bucket.listFiles().toSeq
-      .map(f => (f.getName, f.lastModified, f.length)).sortBy(_._1)
+    assert(VersionedStore.upsert(Seq((1L, 5L), (2L, 6L)).toDF("b", "w"),
+      Seq("b"), store, nBuckets = 1) == 1L)
+    def sig(): Seq[(String, Long, Long)] = {
+      val it = java.nio.file.Files.walk(java.nio.file.Paths.get(store))
+        .iterator()
+      val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next().toFile
+        if (f.isFile) out += ((f.getPath, f.lastModified, f.length))
+      }
+      out.toSeq.sorted
+    }
     val before = sig()
-    assert(before.nonEmpty, "seed batch must have landed")
+    assert(before.exists(_._1.contains("/b00000/")),
+      "seed batch must have landed")
     Thread.sleep(20) // ensure a rewrite would move lastModified
-    Sinks.upsertPartitioned(
-      Seq.empty[(Long, Long)].toDF("b", "w"), Seq("b"), store, nBuckets = 1)
+    assert(VersionedStore.upsert(Seq.empty[(Long, Long)].toDF("b", "w"),
+      Seq("b"), store, nBuckets = 1) == 1L, "an empty batch commits no epoch")
+    assert(VersionedStore.currentEpoch(store) == 1L)
     assert(sig() == before,
-      "an empty batch must not rewrite/swap the live bucket")
+      "an empty batch must not rewrite the live bucket or any marker")
     // content unchanged too
-    assert(Sinks.readPartitioned(spark, store).orderBy("b")
+    assert(VersionedStore.read(spark, store).orderBy("b")
       .as[(Long, Long)].collect().toSeq == Seq((1L, 5L), (2L, 6L)))
   }
 

@@ -290,15 +290,15 @@ class ProfilerPlanSpec extends SparkSpec {
   }
 }
 
-/** The hash-partitioned upsert store ([[graft.sinks.Sinks
-  * .upsertPartitioned]]): keyed-replace semantics equal to the
-  * monolithic form, and — the point — an upsert leaves every
+/** The hash-bucketed keyed store ([[graft.sinks.VersionedStore
+  * .upsert]]): keyed-replace semantics equal to the monolithic
+  * swap-by-rename store, and — the point — an upsert leaves every
   * untouched bucket's files BIT-IDENTICAL (never opened, never
   * rewritten). */
 class PartitionedStoreSpec extends SparkSpec {
   import org.apache.spark.sql.functions._
   import spark.implicits._
-  import graft.sinks.Sinks
+  import graft.sinks.{Sinks, VersionedStore}
 
   private def fileState(storeDir: String): Map[String, String] = {
     val root = java.nio.file.Paths.get(storeDir)
@@ -320,17 +320,17 @@ class PartitionedStoreSpec extends SparkSpec {
     val store = tmpDir("pstore") + "/s"
     val mono = tmpDir("mstore") + "/s"
     val base = (1L to 200L).map(i => (i, s"v$i")).toDF("id", "v")
-    Sinks.upsertPartitioned(base, Seq("id"), store, nBuckets = 8)
+    VersionedStore.upsert(base, Seq("id"), store, nBuckets = 8)
     Sinks.upsertParquet(base, Seq("id"), mono)
 
     val before = fileState(store)
     // a one-key batch touches exactly one bucket
     val delta = Seq((7L, "UPDATED")).toDF("id", "v")
-    Sinks.upsertPartitioned(delta, Seq("id"), store, nBuckets = 8)
+    VersionedStore.upsert(delta, Seq("id"), store, nBuckets = 8)
     Sinks.upsertParquet(delta, Seq("id"), mono)
     val after = fileState(store)
 
-    val p = Sinks.readPartitioned(spark, store)
+    val p = VersionedStore.read(spark, store)
       .as[(Long, String)].collect().toSeq.sorted
     val m = spark.read.parquet(mono)
       .as[(Long, String)].collect().toSeq.sorted
@@ -340,61 +340,34 @@ class PartitionedStoreSpec extends SparkSpec {
     // which bucket did key 7 land in?
     val touched = base.sparkSession.range(1).select(
       pmod(hash(lit(7L)), lit(8)).as("b")).head().getInt(0)
-    val touchedPrefix = f"b$touched%05d"
-    // bucket-internal files only: the top-level `_stats` marker is
-    // EXPECTED to change on every upsert (it records the touched
-    // bucket's new rows/bytes) — the bit-identity contract is about
+    val touchedPrefix = f"b$touched%05d/"
+    // bucket-internal files only: the top-level commit log is EXPECTED
+    // to grow on every upsert — the bit-identity contract is about
     // bucket data files
-    val changed = (before.keySet ++ after.keySet)
+    val bucketFiles = (before.keySet ++ after.keySet)
       .filter(_.matches("^b\\d{5}/.*"))
-      .filter(k => before.get(k) != after.get(k))
+    val changed = bucketFiles.filter(k => before.get(k) != after.get(k))
     assert(changed.nonEmpty, "the touched bucket must change")
     assert(changed.forall(_.startsWith(touchedPrefix)),
       s"files outside $touchedPrefix changed: $changed")
-    // every untouched bucket: exact same file set, exact same bytes
-    val untouchedBefore = before.filter(e =>
-      e._1.matches("^b\\d{5}/.*") && !e._1.startsWith(touchedPrefix))
-    val untouchedAfter = after.filter(e =>
-      e._1.matches("^b\\d{5}/.*") && !e._1.startsWith(touchedPrefix))
-    assert(untouchedBefore == untouchedAfter)
-  }
-
-  test("a bucket crashed mid-promotion heals on the next READ, losing no rows") {
-    val store = tmpDir("pstore3") + "/s"
-    val base = (1L to 120L).map(i => (i, s"v$i")).toDF("id", "v")
-    Sinks.upsertPartitioned(base, Seq("id"), store, nBuckets = 4)
-    // simulate the crash window: live dir renamed aside, swap not yet
-    // promoted — exactly the state a kill between the two renames leaves
-    val buckets = java.nio.file.Files.list(java.nio.file.Paths.get(store))
-      .iterator()
-    var victim: java.nio.file.Path = null
-    while (buckets.hasNext) {
-      val p = buckets.next()
-      if (victim == null && p.getFileName.toString.matches("^b\\d{5}$"))
-        victim = p
-    }
-    assert(victim != null)
-    java.nio.file.Files.move(victim,
-      java.nio.file.Paths.get(victim.toString + ".old"))
-    // without recovery this read would silently drop the victim bucket
-    val rows = Sinks.readPartitioned(spark, store)
-      .as[(Long, String)].collect().toSeq.sorted
-    assert(rows == (1L to 120L).map(i => (i, s"v$i")).sorted,
-      s"crashed bucket lost rows: got ${rows.size} of 120")
-    assert(java.nio.file.Files.exists(victim), "bucket must be restored live")
+    // nothing is rewritten in place: every file that existed before
+    // (the touched bucket's old generation included) keeps its bytes
+    assert(before.filter(e => bucketFiles(e._1))
+      .forall { case (k, md5) => after.get(k).contains(md5) })
   }
 
   test("re-upserting the same batch is a no-op; bucket count is pinned at creation") {
     val store = tmpDir("pstore2") + "/s"
     val base = (1L to 50L).map(i => (i, i * 3)).toDF("id", "x")
-    Sinks.upsertPartitioned(base, Seq("id"), store, nBuckets = 4)
-    val once = Sinks.readPartitioned(spark, store)
+    VersionedStore.upsert(base, Seq("id"), store, nBuckets = 4)
+    val once = VersionedStore.read(spark, store)
       .as[(Long, Long)].collect().toSeq.sorted
     // a different nBuckets on a later call must NOT re-shard the store
-    Sinks.upsertPartitioned(base, Seq("id"), store, nBuckets = 16)
-    val twice = Sinks.readPartitioned(spark, store)
+    VersionedStore.upsert(base, Seq("id"), store, nBuckets = 16)
+    val twice = VersionedStore.read(spark, store)
       .as[(Long, Long)].collect().toSeq.sorted
     assert(once == twice)
+    assert(VersionedStore.bucketCountOf(store).contains(4))
     val buckets = java.nio.file.Files.list(
         java.nio.file.Paths.get(store)).iterator()
     val names = scala.collection.mutable.ArrayBuffer.empty[String]

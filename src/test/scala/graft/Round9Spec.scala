@@ -115,15 +115,18 @@ class EtagFilesSpec extends SparkSpec {
   }
 }
 
-/** The partitioned upsert store as a DataSource V2 table
-  * ([[graft.connectors.GraftStoreSource]]): key filters push down and
-  * prune BUCKET directories at plan time, so the q05 dedup-gate probe
+/** The bucketed keyed store as a DataSource V2 table
+  * ([[graft.connectors.GraftVStoreSource]]): key filters push down and
+  * prune BUCKET chains at plan time, so the q05 dedup-gate probe
   * (batch-get of a landing batch's message ids against the
   * sent-message ledger) scans only the buckets those keys hash into —
   * the DynamoDB-batch-get shape, not a store scan. */
 class StoreSourceSpec extends SparkSpec {
   import spark.implicits._
-  import graft.sinks.Sinks
+  import graft.sinks.VersionedStore
+
+  private def load(store: String) =
+    spark.read.format("graft-vstore").option("path", store).load()
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -133,7 +136,7 @@ class StoreSourceSpec extends SparkSpec {
 
   private def buildStore(): String = {
     val store = tmpDir("dsv2_store") + "/ledger"
-    Sinks.upsertPartitioned(
+    VersionedStore.upsert(
       tasks.filter(col("l_suppkey") % 10 === 0)
         .select(col("msg_id"), col("l_orderkey").as("sent_order")),
       Seq("msg_id"), store, nBuckets = 16)
@@ -142,8 +145,8 @@ class StoreSourceSpec extends SparkSpec {
 
   test("point lookup prunes to one bucket; batch-get probes only its buckets") {
     val store = buildStore()
-    val ds = spark.read.format("graft-store").load(store)
-    val plain = Sinks.readPartitioned(spark, store)
+    val ds = load(store)
+    val plain = VersionedStore.read(spark, store)
     val total = plain.count()
     assert(ds.count() == total, "full DSv2 scan must equal the plain reader")
     val nLive = ds.rdd.getNumPartitions
@@ -154,8 +157,8 @@ class StoreSourceSpec extends SparkSpec {
       .as[String].collect().head
     val point = ds.filter(col("msg_id") === key)
     val plan = point.queryExecution.executedPlan.toString
-    assert(plan.contains("buckets 1/16"), plan.take(1500))
-    assert(plan.contains("pushedKeyFilters [EqualTo(msg_id"), plan.take(1500))
+    assert(plan.contains("chains 1/16"), plan.take(1500))
+    assert(plan.contains("pushedFilters [EqualTo(msg_id"), plan.take(1500))
     assert(point.rdd.getNumPartitions == 1)
     val exp = plain.filter(col("msg_id") === key).collect().toSeq
     assert(point.collect().toSeq == exp && exp.size == 1)
@@ -166,7 +169,7 @@ class StoreSourceSpec extends SparkSpec {
       .as[String].collect().toSeq
     val probe = ds.filter(col("msg_id").isin(batchKeys: _*))
     val probePlan = probe.queryExecution.executedPlan.toString
-    assert(probePlan.contains("pushedKeyFilters [In(msg_id"), probePlan.take(1500))
+    assert(probePlan.contains("pushedFilters [In(msg_id"), probePlan.take(1500))
     val probed = probe.rdd.getNumPartitions
     assert(probed <= 5 && probed < nLive,
       s"batch-get must prune buckets: planned $probed of $nLive")
@@ -182,15 +185,15 @@ class StoreSourceSpec extends SparkSpec {
   test("stats pruning: a freshness range drops untouched buckets at plan time") {
     val store = tmpDir("dsv2_skip") + "/ledger"
     // e1 seeds every bucket at u=1; the updates then touch TWO keys
-    Sinks.upsertPartitioned(
+    VersionedStore.upsert(
       spark.range(1L, 201L).select(col("id").as("k"), lit(1L).as("u")),
       Seq("k"), store, nBuckets = 16)
-    Sinks.upsertPartitioned(
+    VersionedStore.upsert(
       Seq((7L, 2L), (53L, 3L)).toDF("k", "u"), Seq("k"), store)
-    val ds = spark.read.format("graft-store").load(store)
+    val ds = load(store)
     val fresh = ds.filter(col("u") >= 2L)
-    // plan-time bucket pruning from the per-bucket _cstats manifests:
-    // only the two rewritten buckets survive
+    // plan-time chain pruning from the per-generation _cstats
+    // manifests: only the two rewritten buckets survive
     val planned = fresh.rdd.getNumPartitions
     assert(planned <= 2 && planned < 16,
       s"stats pruning must drop untouched buckets, planned $planned")
@@ -213,8 +216,8 @@ class StoreSourceSpec extends SparkSpec {
       (2L, Seq.empty[String], -1.0),
       (3L, null.asInstanceOf[Seq[String]], 0.0)
     ).toDF("id", "shingles", "w")
-    Sinks.upsertPartitioned(df, Seq("id"), store, nBuckets = 4)
-    val ds = spark.read.format("graft-store").load(store)
+    VersionedStore.upsert(df, Seq("id"), store, nBuckets = 4)
+    val ds = load(store)
     val back = ds.select("id", "shingles", "w")
       .as[(Long, Seq[String], Double)].collect().toSeq.sortBy(_._1)
     assert(back == Seq((1L, Seq("a b", "b c"), 2.5),
@@ -236,8 +239,8 @@ class StoreSourceSpec extends SparkSpec {
   * killed mid-stream and resumed — and each family's state must equal
   * its one-shot form row-for-row. The prior specs prove each stream
   * alone; this one proves they don't interfere: disjoint store
-  * directories, stream-specific checkpoints, and per-bucket
-  * swap-by-rename isolation between the two writers. */
+  * directories, stream-specific checkpoints, and atomic per-store
+  * epoch commits between the two writers. */
 class ConcurrentStreamsSpec extends SparkSpec {
   import org.apache.spark.sql.functions._
   import graft.streaming.{IndexStream, RefreshStream}
@@ -763,7 +766,7 @@ class IvfPqRerankSpec extends SparkSpec {
 class StoreAggPushdownSpec extends SparkSpec {
   import spark.implicits._
   import graft.connectors.StoreReaderMetrics
-  import graft.sinks.Sinks
+  import graft.sinks.VersionedStore
 
   private def buildStore(): String = {
     val store = tmpDir("agg_store") + "/ledger"
@@ -771,7 +774,7 @@ class StoreAggPushdownSpec extends SparkSpec {
       when(col("id") % 7 === 0, lit(null)).otherwise(col("id") * 2).as("n"),
       (col("id").cast("double") / 4.0).as("w"),
       concat(lit("v"), col("id")).as("s"))
-    Sinks.upsertPartitioned(df, Seq("id"), store, nBuckets = 8)
+    VersionedStore.upsert(df, Seq("id"), store, nBuckets = 8)
     store
   }
 
@@ -781,7 +784,7 @@ class StoreAggPushdownSpec extends SparkSpec {
 
   test("count/min/max answer from footers: zero decoded rows") {
     val store = buildStore()
-    val ds = spark.read.format("graft-store").load(store)
+    val ds = spark.read.format("graft-vstore").option("path", store).load()
     val agg = ds.agg(aggCols.head, aggCols.tail: _*)
     val plan = agg.queryExecution.executedPlan.toString
     assert(plan.contains("pushedAggregates ["), plan.take(2000))
@@ -789,7 +792,7 @@ class StoreAggPushdownSpec extends SparkSpec {
     val got = agg.collect().head
     val decoded = StoreReaderMetrics.rowsDecoded.get() - before
     assert(decoded == 0, s"expected footer-only aggregation, decoded $decoded rows")
-    val exp = Sinks.readPartitioned(spark, store)
+    val exp = VersionedStore.read(spark, store)
       .agg(aggCols.head, aggCols.tail: _*).collect().head
     assert(got == exp, s"pushed $got vs plain $exp")
     // sanity against first principles: 1000 rows, ~1/7 of n null
@@ -799,7 +802,7 @@ class StoreAggPushdownSpec extends SparkSpec {
 
   test("unsupported shapes decline the pushdown and stay correct") {
     val store = buildStore()
-    val ds = spark.read.format("graft-store").load(store)
+    val ds = spark.read.format("graft-vstore").option("path", store).load()
     // avg, string min, grouped, and filtered aggregations: no pushdown
     for (q <- Seq(
       ds.agg(avg(col("w")).as("a")),
@@ -817,8 +820,8 @@ class StoreAggPushdownSpec extends SparkSpec {
     val store = tmpDir("agg_store_arr") + "/sets"
     val df = Seq((1L, Seq("a", "b")), (2L, null.asInstanceOf[Seq[String]]),
       (3L, Seq.empty[String])).toDF("id", "shingles")
-    Sinks.upsertPartitioned(df, Seq("id"), store, nBuckets = 2)
-    val ds = spark.read.format("graft-store").load(store)
+    VersionedStore.upsert(df, Seq("id"), store, nBuckets = 2)
+    val ds = spark.read.format("graft-vstore").option("path", store).load()
     val agg = ds.agg(count(col("shingles")).as("c"))
     val plan = agg.queryExecution.executedPlan.toString
     assert(plan.contains("pushedAggregates ["), plan.take(1500))
@@ -838,20 +841,20 @@ class StoreAggPushdownSpec extends SparkSpec {
 class StoreAggNaNSpec extends SparkSpec {
   import spark.implicits._
   import graft.connectors.StoreReaderMetrics
-  import graft.sinks.Sinks
+  import graft.sinks.VersionedStore
 
   test("NaN-bearing double column demotes to the row scan and keeps NaN-greatest") {
     val store = tmpDir("agg_store_nan") + "/m"
     val df = Seq((1L, 1.5), (2L, Double.NaN), (3L, -7.25), (4L, 99.0))
       .toDF("id", "w")
-    Sinks.upsertPartitioned(df, Seq("id"), store, nBuckets = 2)
-    val ds = spark.read.format("graft-store").load(store)
+    VersionedStore.upsert(df, Seq("id"), store, nBuckets = 2)
+    val ds = spark.read.format("graft-vstore").option("path", store).load()
     val agg = ds.agg(min(col("w")).as("mn"), max(col("w")).as("mx"))
     assert(agg.queryExecution.executedPlan.toString
       .contains("pushedAggregates ["))
     val before = StoreReaderMetrics.rowsDecoded.get()
     val got = agg.collect().head
-    val exp = Sinks.readPartitioned(spark, store)
+    val exp = VersionedStore.read(spark, store)
       .agg(min(col("w")), max(col("w"))).collect().head
     assert(got == exp, s"pushed $got vs scan $exp")
     assert(got.getDouble(1).isNaN, "max must keep NaN (Spark sorts it greatest)")
@@ -863,8 +866,8 @@ class StoreAggNaNSpec extends SparkSpec {
     val store = tmpDir("agg_store_nulls") + "/m"
     val df = spark.range(1, 101).select(col("id"),
       lit(null).cast("double").as("w"))
-    Sinks.upsertPartitioned(df, Seq("id"), store, nBuckets = 2)
-    val ds = spark.read.format("graft-store").load(store)
+    VersionedStore.upsert(df, Seq("id"), store, nBuckets = 2)
+    val ds = spark.read.format("graft-vstore").option("path", store).load()
     val before = StoreReaderMetrics.rowsDecoded.get()
     val got = ds.agg(count(col("w")).as("c"), min(col("w")).as("mn"))
       .collect().head
@@ -1052,12 +1055,12 @@ class IvfPqDriftGateSpec extends SparkSpec {
   * the J2 anti-join probe WITHOUT a driver-collected IN list — Spark
   * executes the small batch side, hands its join keys to the scan as
   * runtime filters (SupportsRuntimeFiltering), and the ledger read
-  * re-plans to only those keys' buckets; reported sizeInBytes
+  * re-plans to only those keys' bucket chains; reported sizeInBytes
   * (SupportsReportStatistics) lets a small ledger auto-broadcast. */
 class StoreRuntimeFilterSpec extends SparkSpec {
   import spark.implicits._
   import graft.connectors.StoreReaderMetrics
-  import graft.sinks.Sinks
+  import graft.sinks.VersionedStore
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -1067,10 +1070,10 @@ class StoreRuntimeFilterSpec extends SparkSpec {
 
   test("join keys prune buckets at runtime; answers match the full scan") {
     val store = tmpDir("rt_store") + "/ledger"
-    Sinks.upsertPartitioned(
+    VersionedStore.upsert(
       tasks.select(col("msg_id"), col("l_orderkey").as("sent_order")),
       Seq("msg_id"), store, nBuckets = 16)
-    val ds = spark.read.format("graft-store").load(store)
+    val ds = spark.read.format("graft-vstore").option("path", store).load()
     val total = ds.count()
 
     // selective probe side: a handful of keys, as a DATAFRAME (no
@@ -1087,7 +1090,7 @@ class StoreRuntimeFilterSpec extends SparkSpec {
     val decoded = StoreReaderMetrics.rowsDecoded.get() - before
     // the synthetic lineitem repeats (orderkey, linenumber) pairs, so
     // expected row count is the plain-reader join's, not |probe|
-    val exp = Sinks.readPartitioned(spark, store)
+    val exp = VersionedStore.read(spark, store)
       .join(probe, col("msg_id") === col("k"))
       .select(col("msg_id"), col("sent_order"), col("want_order"))
       .collect()
@@ -1105,10 +1108,10 @@ class StoreRuntimeFilterSpec extends SparkSpec {
 
   test("reported sizeInBytes lets the small ledger auto-broadcast") {
     val store = tmpDir("stats_store") + "/small"
-    Sinks.upsertPartitioned(
+    VersionedStore.upsert(
       tasks.limit(200).select(col("msg_id"), col("l_orderkey").as("v")),
       Seq("msg_id"), store, nBuckets = 4)
-    val ds = spark.read.format("graft-store").load(store)
+    val ds = spark.read.format("graft-vstore").option("path", store).load()
     val big = tasks.select(col("msg_id"), col("l_partkey"))
     // no broadcast hint anywhere: the planner must choose broadcast
     // from the scan's own reported statistics
@@ -1126,14 +1129,14 @@ class StoreRuntimeFilterSpec extends SparkSpec {
   * final answer exact. */
 class StoreLimitSpec extends SparkSpec {
   import graft.connectors.StoreReaderMetrics
-  import graft.sinks.Sinks
+  import graft.sinks.VersionedStore
 
   test("limit decodes at most n rows per bucket") {
     val store = tmpDir("limit_store") + "/ledger"
     val df = spark.range(1, 2001).select(col("id"),
       (col("id") * 3).as("v"))
-    Sinks.upsertPartitioned(df, Seq("id"), store, nBuckets = 8)
-    val ds = spark.read.format("graft-store").load(store)
+    VersionedStore.upsert(df, Seq("id"), store, nBuckets = 8)
+    val ds = spark.read.format("graft-vstore").option("path", store).load()
     val q = ds.limit(5)
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("pushedLimit 5"), plan.take(1500))

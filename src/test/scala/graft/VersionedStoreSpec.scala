@@ -705,4 +705,34 @@ class VersionedStoreSpec extends SparkSpec {
     assert(VersionedStore.read(spark, root).as[(Long, Long)]
       .collect().toSeq.sorted == (1L to 200L).map(k => (k, k * 10 + 1)).sorted)
   }
+
+  test("a store rebuilt at the same path in one mtime tick reads its own commits") {
+    val root = tmpDir("vstore_rebuild") + "/store"
+    def bucketOf(k: Long): Int =
+      spark.range(1).select(pmod(hash(lit(k)), lit(8))).head().getInt(0)
+    // two keys in different buckets: the two stores' epoch-1 commit
+    // bodies ("upsert;<b>;<ts>") differ only in the bucket digit
+    val k1 = 1L
+    val k2 = (2L to 100L).find(k => bucketOf(k) != bucketOf(k1)).get
+    VersionedStore.upsert(Seq((k1, "old")).toDF("k", "v"), Seq("k"), root,
+      tsMillis = 1000L)
+    assert(VersionedStore.read(spark, root).as[(Long, String)].collect()
+      .toSeq == Seq((k1, "old"))) // caches the epoch-1 commit body
+    val marker = new Path(root, "_commit-0000001")
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val old = fs.getFileStatus(marker)
+
+    graft.sinks.Sinks.deleteRecursively(java.nio.file.Paths.get(root))
+    VersionedStore.upsert(Seq((k2, "new")).toDF("k", "v"), Seq("k"), root,
+      tsMillis = 1000L)
+    // the rebuilt marker now matches the cached one in path, length
+    // and mtime — everything a (path, len, mtime) cache key sees
+    fs.setTimes(marker, old.getModificationTime, -1L)
+    val rebuilt = fs.getFileStatus(marker)
+    assert(rebuilt.getLen == old.getLen &&
+      rebuilt.getModificationTime == old.getModificationTime)
+
+    assert(VersionedStore.read(spark, root).as[(Long, String)].collect()
+      .toSeq == Seq((k2, "new")), "the rebuilt store must serve its own rows")
+  }
 }
