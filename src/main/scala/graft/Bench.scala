@@ -38,10 +38,11 @@ object Bench {
         .collect()
       liBytes / 1e6 / ((System.nanoTime() - st0) / 1e9)
     }.max
-    // median of 3 timed runs per query (5 when noisy — see below):
-    // single-run numbers swing +-50% from JIT/GC/page-cache noise on
-    // this shared box, and min-of-2 still let a 6x co-tenant outlier
-    // through in round 2 — spread is reported so noise is
+    // two timed runs per query in each of two interleaved passes (see
+    // pass below), reported as the median of the four: single-run
+    // numbers swing +-50% from JIT/GC/page-cache noise on this shared
+    // box, and min-of-2 still let a 6x co-tenant outlier through in
+    // round 2 — the full max-min spread is reported so noise is
     // distinguishable from regression
     // SPARK_GRAFT_ONLY=q22,q25 restricts the suite (local iteration aid)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -121,89 +122,21 @@ object Bench {
     // along with every timing — a wall-clock drift with UNCHANGED
     // counts is provably environment, a count change is plan creep
     // with the query named (the round-12 q113-q124 watch block could
-    // not be told apart; this instrument decides it per round).
-    val jobsCtr = new java.util.concurrent.atomic.AtomicInteger(0)
-    val shufCtr = new java.util.concurrent.atomic.AtomicLong(0L)
-    // round-14 DRIVER-METADATA channel, round-15 fix: job wall is the
-    // UNION of in-flight job intervals (active-job refcount), not the
-    // SUM — LmStream/TrainStream land independent stores CONCURRENTLY
-    // (StreamSessions.inParallel), so summed walls overlap and
-    // driver_s clamped to 0 on exactly the streaming queries the
-    // channel was built to attribute (round-14 ADVICE). run wall minus
-    // union-busy wall = time NO job was running: FS metadata, plan
-    // analysis, commit fences. Round 13's regression class (footer
-    // reads, lock elections) produced NO job and NO shuffle — this
-    // channel makes commit-path creep attributable like plan creep.
-    object jobBusy {
-      private var active = 0
-      private var startNs = 0L
-      private var accNs = 0L
-      def enter(): Unit = synchronized {
-        if (active == 0) startNs = System.nanoTime()
-        active += 1
-      }
-      def exit(): Unit = synchronized {
-        if (active > 0) {
-          active -= 1
-          if (active == 0) accNs += System.nanoTime() - startNs
-        }
-      }
-      /** Union-busy nanos so far, counting a still-open interval. */
-      def total(): Long = synchronized {
-        accNs + (if (active > 0) System.nanoTime() - startNs else 0L)
-      }
+    // not be told apart; this instrument decides it per round). The
+    // driver-metadata channel (fs ops, and driver_s: run wall minus the
+    // union of job intervals) makes commit-path creep, which produces
+    // no job and no shuffle, attributable like plan creep.
+    case class Run(ok: Boolean, cost: Meter.Cost) {
+      def sec: Double = cost.wallS
+      def jobs: Int = cost.jobs.size
     }
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobsCtr.incrementAndGet()
-          jobBusy.enter()
-        }
-        override def onJobEnd(
-            je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-          jobBusy.exit()
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit = {
-          shufCtr.addAndGet(
-            sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-          ()
-        }
-      })
-    // (readOps + writeOps + largeReadOps, bytesRead + bytesWritten)
-    // summed across schemes; in local mode executors share the JVM, so
-    // data reads count too — the signal is the DELTA ACROSS ROUNDS at
-    // flat jobs/shuffle, which is exactly metadata creep
-    def fsTotals(): (Long, Long) = {
-      import scala.jdk.CollectionConverters._
-      var bytes = 0L
-      org.apache.hadoop.fs.GlobalStorageStatistics.INSTANCE.iterator()
-        .asScala.foreach { ss =>
-          ss.getLongStatistics.asScala.foreach { st =>
-            val n = st.getName
-            if (n == "bytesRead" || n == "bytesWritten") bytes += st.getValue
-          }
-        }
-      (BenchFs.ops.get(), bytes)
-    }
-    case class Run(sec: Double, ok: Boolean, jobs: Int, shufB: Long,
-                   fsOps: Long, fsB: Long, driverSec: Double)
     def one(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Run = {
-      org.apache.spark.GraftBus.drain(spark.sparkContext)
-      val j0 = jobsCtr.get(); val s0 = shufCtr.get()
-      val (fo0, fb0) = fsTotals(); val w0 = jobBusy.total()
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-               catch { case e: Throwable =>
-                 System.err.println(s"BENCH FAIL $name: ${e.getMessage}"); false }
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.GraftBus.drain(spark.sparkContext)
-      val (fo1, fb1) = fsTotals()
-      val driverSec =
-        math.max(0.0, sec - (jobBusy.total() - w0) / 1e9)
-      Run(sec, ok, jobsCtr.get() - j0, shufCtr.get() - s0,
-        fo1 - fo0, fb1 - fb0, driverSec)
+      val (ok, cost) = Meter.measure(spark) {
+        try { fn(spark, sfDir).count(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"BENCH FAIL $name: ${e.getMessage}"); false }
+      }
+      Run(ok, cost)
     }
     def isSetup(name: String) =
       oneTimeSetup.contains(name.takeWhile(_ != '_'))
@@ -240,12 +173,11 @@ object Bench {
       // itself a signal)
       val best = runs.filter(_.ok).minByOption(_.sec)
         .getOrElse(runs.head)
-      val jobsSpread =
-        runs.map(_.jobs).max - runs.filter(_.ok).map(_.jobs).minOption
-          .getOrElse(runs.map(_.jobs).max)
+      val okJobs = runs.filter(_.ok).map(_.jobs)
+      val jobsSpread = if (okJobs.isEmpty) 0 else okJobs.max - okJobs.min
       (name, median, spread, runs.forall(_.ok), times.head, isSetup(name),
-        aMin, bMin, best.jobs, best.shufB, jobsSpread,
-        best.fsOps, best.fsB, best.driverSec)
+        aMin, bMin, best.jobs, best.cost.shuffleBytes, jobsSpread,
+        best.cost.fsOps, best.cost.fsBytes, best.cost.driverS)
     }
     // The driver captures only the LAST 2000 chars of the sbt log, and
     // sbt's trailing "[success] Total time" line eats ~80 of them. Round

@@ -112,20 +112,6 @@ class DistributionSpec extends SparkSpec {
   }
 
   test("exactQuantiles job count tracks passes, NOT the state count") {
-    def countJobs(body: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-      spark.sparkContext.addSparkListener(listener)
-      try { body; org.apache.spark.GraftTestBus.drain(spark.sparkContext) }
-      finally spark.sparkContext.removeSparkListener(listener)
-      jobs.get()
-    }
     // same per-group value distribution -> same pass count; 12x the
     // states must cost the SAME number of jobs (every pass narrows all
     // open states in one job via the broadcast state table)

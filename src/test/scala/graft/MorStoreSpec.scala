@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -218,20 +217,11 @@ class MorStoreSpec extends SparkSpec {
   test("history on a delta'd store: exact live counts from ONE event-fold job") {
     val root = tmpDir("mor_hist") + "/store"
     buildMor(root)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    val h = try {
-      val rows = VersionedStore.history(spark, root)
+    val (h, cost) = Meter.measure(spark) {
+      VersionedStore.history(spark, root)
         .select("epoch", "kind", "n_rows")
         .as[(Long, String, Option[Long])].collect().toSeq.sortBy(_._1)
-      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-      rows
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
     assert(h.map(_._3.get) ==
       (1 to 4).map(e => expectedAt(e).size.toLong),
       s"history counts must resolve tombstones: $h")
@@ -241,8 +231,8 @@ class MorStoreSpec extends SparkSpec {
     // its scan/window/agg stages as a constant handful of stage-jobs),
     // NEVER a count per epoch: 4 epochs here, and a per-epoch count
     // would keep growing with history length while this stays flat
-    assert(jobs.get() <= 6,
-      s"MOR history must cost one constant fold, ran ${jobs.get()} jobs")
+    assert(cost.jobs.size <= 6,
+      s"MOR history must cost one constant fold, ran ${cost.jobs.size} jobs")
   }
 
   test("commit timestamps: AS OF TIMESTAMP, monotone clamp, age retention") {
@@ -395,23 +385,9 @@ class MorStoreSpec extends SparkSpec {
     val baseBytes = genBytes("g0000001")
     val deltaBytes = genBytes("g0000002")
     assert(baseBytes > 50 * deltaBytes, s"fixture: $baseBytes vs $deltaBytes")
-    val shuffled = new java.util.concurrent.atomic.AtomicLong(0L)
-    val l = new SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        shuffled.addAndGet(
-          sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        ()
-      }
-    }
-    org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    val resolved = try {
-      val df = VersionedStore.read(spark, root)
-      val out = df.collect()
-      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-      out
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (resolved, cost) =
+      Meter.measure(spark)(VersionedStore.read(spark, root).collect())
+    val shuffled = cost.shuffleBytes
     // correctness of the merge itself
     assert(resolved.length == 59999, s"rows: ${resolved.length}")
     assert(resolved.find(_.getLong(0) == 5L).get.getString(1) == "updated")
@@ -421,8 +397,8 @@ class MorStoreSpec extends SparkSpec {
     // base — only the delta rows move (their newest-wins window + the
     // broadcast key build); the base streams map-side through the
     // broadcast anti-join
-    assert(shuffled.get() < baseBytes / 10,
-      s"chain read shuffled ${shuffled.get()} B against a $baseBytes B " +
+    assert(shuffled < baseBytes / 10,
+      s"chain read shuffled $shuffled B against a $baseBytes B " +
         "base — the base generation must stream shuffle-free")
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-/** Suite-wide plan regression guard. PlanProbe prints per-query detail
+/** Suite-wide plan regression guard. `Profile` prints per-query detail
   * for humans; this spec makes the join-shape invariants failing
   * tests, so a future operator that silently falls back to a quadratic
   * join cannot land green.

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.sinks.VersionedStore
@@ -14,19 +13,6 @@ import graft.sinks.VersionedStore
   * buckets = 10k jobs); this spec would have failed it. */
 class UpsertOneJobSpec extends SparkSpec {
   import spark.implicits._
-
-  private def countJobs(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try { body; org.apache.spark.GraftTestBus.drain(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
-  }
 
   test("job count does not grow with touched-bucket count") {
     val store = tmpDir("onejob_store") + "/s"

@@ -436,29 +436,12 @@ class SimhashKernelSpec extends SparkSpec {
   * retrain forms ran kmeansFit/pqFit collect()s right there) and its
   * plan scans the index parquet, not a training DAG. */
 class NoRetrainSpec extends SparkSpec {
-  import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
   private val dir = "/root/testdata/sf0.001"
 
   private def constructionJobs(build: => org.apache.spark.sql.DataFrame)
       : (Seq[Int], String) = {
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs.add(js.stageInfos.map(_.numTasks).sum); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val df = build
-      // listener delivery is async; drain the bus deterministically
-      // before reading the counter (a sleep can under- or over-count
-      // on a loaded box)
-      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-      (scala.jdk.CollectionConverters.CollectionHasAsScala(jobs)
-        .asScala.toSeq,
-        df.queryExecution.executedPlan.toString)
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (df, cost) = Meter.measure(spark)(build)
+    (cost.jobs.map(_.tasks), df.queryExecution.executedPlan.toString)
   }
 
   // The serve-path contract: plan CONSTRUCTION may read parquet

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{ApproxDedup, Layout}
@@ -32,20 +31,10 @@ class CompactionOneJobSpec extends SparkSpec {
     }
     val target = sizes.sorted.take(40).sum / 13
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
     val out = s"$root/out"
-    val summary =
-      try {
-        val s = Layout.compactFiles(spark, src, out, target).collect()
-        org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-        s
-      } finally spark.sparkContext.removeSparkListener(listener)
+    val (summary, cost) =
+      Meter.measure(spark)(Layout.compactFiles(spark, src, out, target).collect())
+    val jobs = cost.jobs.size
 
     val rewrites = summary.count(_.getString(3) == "rewrite")
     val copies = summary.count(_.getString(3) == "copy")
@@ -54,11 +43,11 @@ class CompactionOneJobSpec extends SparkSpec {
     // constant job budget: listing + copy job + merge write (AQE may
     // stage the shuffle) + small metadata jobs — NOT O(bins). The old
     // driver loop would have run >= rewrites jobs here.
-    assert(jobs.get() < rewrites,
-      s"job count must not scale with bin count: ${jobs.get()} jobs for " +
+    assert(jobs < rewrites,
+      s"job count must not scale with bin count: $jobs jobs for " +
         s"$rewrites rewrite bins")
-    assert(jobs.get() <= 8,
-      s"expected a constant handful of jobs, got ${jobs.get()}")
+    assert(jobs <= 8,
+      s"expected a constant handful of jobs, got $jobs")
 
     // completeness: every row survives, _SUCCESS marks the output
     val pre = small.unionByName(big).as[(Long, String)].collect().toSeq.sorted

@@ -293,23 +293,8 @@ object ScalingProbe {
     // never the token stream: measure shuffle-write records vs the
     // exact per-token aggregation on the same input
     {
-      def shuffleRecords(body: => Unit): Long = {
-        val acc = new java.util.concurrent.atomic.AtomicLong(0)
-        val l = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            val m = te.taskMetrics
-            if (m != null)
-              acc.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-            ()
-          }
-        }
-        org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-        spark.sparkContext.addSparkListener(l)
-        try { body; org.apache.spark.GraftTestBus.drain(spark.sparkContext) }
-        finally spark.sparkContext.removeSparkListener(l)
-        acc.get()
-      }
+      def shuffleRecords(body: => Unit): Long =
+        Meter.measure(spark)(body)._2.stages.map(_.shuffleRecords).sum
       val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
       val toks = docs.select(col("lang"),
           explode(split(col("text"), "\\s+")).as("tok"))
@@ -647,20 +632,9 @@ object ScalingProbe {
         s"view refresh must read view+CDC only, touched store buckets: " +
           s"$refreshFiles")
       // vacuum is metadata-only: ZERO Spark jobs
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          { jobs.incrementAndGet(); () }
-      }
-      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-      spark.sparkContext.addSparkListener(l)
-      val rep = try {
-        val r = sinks.VersionedStore.vacuum(root, retainAsOf = 2L)
-        org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-        r
-      } finally spark.sparkContext.removeSparkListener(l)
-      assert(jobs.get() == 0, s"vacuum ran ${jobs.get()} Spark jobs")
+      val (rep, vacuumCost) =
+        Meter.measure(spark)(sinks.VersionedStore.vacuum(root, retainAsOf = 2L))
+      assert(vacuumCost.jobs.isEmpty, s"vacuum ran ${vacuumCost.jobs.size} Spark jobs")
       println(s"VSTORE_CDC buckets=64 epoch2Touched=${touched.size} " +
         s"cdcRows=$nCdc cdcBucketsRead=${cdcBuckets.size} " +
         s"vacuumJobs=0 vacuumDeleted=${rep.deletedGens} " +
@@ -791,27 +765,14 @@ object ScalingProbe {
       // generations — shuffle volume during a full chain-resolved read
       // is bounded by the DELTA rows (their window + broadcast-key
       // build), never the base
-      val chainShuffleB = new java.util.concurrent.atomic.AtomicLong(0L)
-      val shufL = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit = {
-          chainShuffleB.addAndGet(
-            sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-          ()
-        }
-      }
-      spark.sparkContext.addSparkListener(shufL)
-      val nRead = try {
-        val n = sinks.VersionedStore.read(spark, root).count()
-        org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-        n
-      } finally spark.sparkContext.removeSparkListener(shufL)
+      val (nRead, readCost) =
+        Meter.measure(spark)(sinks.VersionedStore.read(spark, root).count())
+      val chainShuffleB = readCost.shuffleBytes
       assert(nRead == n1, "chain-resolved read must keep the exact row count")
-      assert(chainShuffleB.get() < baseBytes / 10,
-        s"chain read shuffled ${chainShuffleB.get()} B against " +
+      assert(chainShuffleB < baseBytes / 10,
+        s"chain read shuffled $chainShuffleB B against " +
           s"$baseBytes B of touched base — base must stream shuffle-free")
-      println(s"VSTORE_MOR_READ shuffleBytes=${chainShuffleB.get()} " +
+      println(s"VSTORE_MOR_READ shuffleBytes=$chainShuffleB " +
         s"touchedBaseBytes=$baseBytes (chain resolution streams the base " +
         "map-side; only delta rows move)")
       val ce = sinks.VersionedStore.compact(spark, root)

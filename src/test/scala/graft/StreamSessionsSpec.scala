@@ -100,19 +100,8 @@ class StreamSessionsSpec extends SparkSpec {
   }
 
   test("one session factory, one clone site") {
-    val roots = Seq("src/main", "src/test").map(new java.io.File(_))
-    assert(roots.forall(_.isDirectory), "run from the project root")
-    def files(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
-      else if (f.getName.endsWith(".scala") || f.getName.endsWith(".java")) Seq(f)
-      else Nil
-    val sources = roots.flatMap(files)
-    def offenders(pattern: String, allowed: Set[String]): Seq[String] = {
-      val re = pattern.r
-      sources.filterNot(f => allowed(f.getName)).filter(f =>
-        re.findFirstIn(new String(java.nio.file.Files.readAllBytes(f.toPath),
-          "UTF-8")).isDefined).map(_.getPath)
-    }
+    def offenders(pattern: String, allowed: Set[String]): Seq[String] =
+      sourcesMatching(pattern).filterNot(f => allowed(f.getName)).map(_.getPath)
     val builders = offenders("SparkSession\\s*\\.\\s*builder",
       Set("GraftSession.scala"))
     assert(builders.isEmpty,

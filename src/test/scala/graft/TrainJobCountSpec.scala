@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 import graft.ops.LinearTrainer
@@ -21,24 +17,8 @@ class TrainJobCountSpec extends SparkSpec {
   import spark.implicits._
 
   private def measured(body: => Unit): (Int, Long) = {
-    val jobs = new AtomicInteger(0)
-    val shuffle = new AtomicLong(0L)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        shuffle.addAndGet(
-          sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        ()
-      }
-    }
-    org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(l)
-    (jobs.get(), shuffle.get())
+    val cost = Meter.measure(spark)(body)._2
+    (cost.jobs.size, cost.shuffleBytes)
   }
 
   private lazy val emb = spark.read

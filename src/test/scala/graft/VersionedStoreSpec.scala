@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -261,27 +260,17 @@ class VersionedStoreSpec extends SparkSpec {
   test("history: ZERO jobs for the whole epoch log; nulls below the watermark") {
     val root = tmpDir("vstore_hist") + "/store"
     build(root)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        { jobs.incrementAndGet(); () }
-    }
-    org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    val hist = try {
-      val h = VersionedStore.history(spark, root)
+    val (hist, cost) = Meter.measure(spark) {
+      VersionedStore.history(spark, root)
         .select("epoch", "kind", "n_rows")
         .as[(Long, String, Option[Long])].collect().toSeq.sortBy(_._1)
-      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-      h
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
     // DESCRIBE HISTORY is footer-served: driver metadata reads only —
     // no Spark job at all (the vacuum-jobs==0 posture); a scan-based
     // count would re-read every live data byte for numbers the footers
     // already hold
-    assert(jobs.get() == 0,
-      s"history must be footer-served with zero jobs, ran ${jobs.get()}")
+    assert(cost.jobs.isEmpty,
+      s"history must be footer-served with zero jobs, ran ${cost.jobs.size}")
     assert(hist == Seq(
       (1L, "upsert", Some(s1.size.toLong)),
       (2L, "upsert", Some(s2.size.toLong)),
@@ -318,19 +307,6 @@ class VersionedStoreSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       VersionedStore.exportSnapshot(spark, root, 2, s"$out/late")
     }
-  }
-
-  private def countJobs(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        { jobs.incrementAndGet(); () }
-    }
-    org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try { body; org.apache.spark.GraftTestBus.drain(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
   }
 
   test("applyOps validates and discovers buckets in ONE fused job") {
@@ -508,19 +484,10 @@ class VersionedStoreSpec extends SparkSpec {
     }
     // zero-job bucket discovery: with a local literal key frame the
     // ONLY Spark job a lookup runs is the pruned read itself
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      VersionedStore.lookup(spark, root, Seq(1L, 30L).toDF("k")).collect()
-      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() == 1,
-      s"lookup must cost exactly the pruned read, got ${jobs.get()} jobs")
+    val jobs = countJobs(
+      VersionedStore.lookup(spark, root, Seq(1L, 30L).toDF("k")).collect())
+    assert(jobs == 1,
+      s"lookup must cost exactly the pruned read, got $jobs jobs")
   }
 
   test("a racing writer's epoch collision fails LOUD, never a silent lost update") {
@@ -686,22 +653,13 @@ class VersionedStoreSpec extends SparkSpec {
     val root = tmpDir("vstore_onejob") + "/store"
     // epoch 1 seeds 16 buckets; epoch 2 touches ALL of them
     VersionedStore.upsert(rows(1L to 200L, _ * 10), Seq("k"), root, nBuckets = 16)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      VersionedStore.upsert(rows(1L to 200L, _ * 10 + 1), Seq("k"), root)
-      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = countJobs(
+      VersionedStore.upsert(rows(1L to 200L, _ * 10 + 1), Seq("k"), root))
     // checkpoint + touched-collect + snapshot-read + staged write (AQE
     // may stage the shuffle) — a constant handful, NOT O(buckets); the
     // mutable store's old driver loop would have run >= 16 jobs here
-    assert(jobs.get() <= 8,
-      s"upsert must be a constant number of jobs, got ${jobs.get()} for 16 buckets")
+    assert(jobs <= 8,
+      s"upsert must be a constant number of jobs, got $jobs for 16 buckets")
     assert(VersionedStore.read(spark, root).as[(Long, Long)]
       .collect().toSeq.sorted == (1L to 200L).map(k => (k, k * 10 + 1)).sorted)
   }

@@ -122,21 +122,10 @@ class ViewStreamSpec extends SparkSpec {
     assert(VersionedStore.taggedEpoch(v, "src3").isEmpty,
       "fixture: epoch 3 must be a view no-op (else this test is vacuous)")
     // second poll: nothing new — O(new epochs) means ZERO Spark jobs
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      assert(f.catchUp(spark, s, v) == 3L)
-      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(l)
-    assert(jobs.get() == 0,
-      s"a caught-up poll must be metadata-only, ran ${jobs.get()} jobs")
+    val (polled, poll) = Meter.measure(spark)(f.catchUp(spark, s, v))
+    assert(polled == 3L)
+    assert(poll.jobs.isEmpty,
+      s"a caught-up poll must be metadata-only, ran ${poll.jobs.size} jobs")
     // crash-safety of the watermark: deleting it only costs a re-read
     // of the no-op changelog (the tags still dedupe real folds)
     val fs = new org.apache.hadoop.fs.Path(v).getFileSystem(
