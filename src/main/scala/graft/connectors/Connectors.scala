@@ -1,6 +1,6 @@
 package graft.connectors
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Connector boundaries: the pipelines talk to a message queue and a
@@ -37,12 +37,13 @@ final case class FileQueue(dir: String, schema: StructType,
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .json(dir)
 
-  /** Guarded on non-emptiness: an empty append would write empty part
-    * files, which a file-stream source consuming this dir sees as new
-    * offsets — an infinite self-feeding loop of empty micro-batches. */
-  def enqueue(messages: DataFrame): Unit =
-    if (!messages.isEmpty)
-      messages.coalesce(1).write.mode(SaveMode.Append).json(dir)
+  /** One write job, landed by rename out of a hidden staging dir
+    * ([[graft.sinks.Sinks.appendFiles]]): an empty append lands no
+    * file, so no emptiness probe runs first. */
+  def enqueue(messages: DataFrame): Unit = {
+    graft.sinks.Sinks.appendFiles(messages.coalesce(1), dir, "json")
+    ()
+  }
 }
 
 /** A SECOND QueueSource implementation — parquet-serialized landing
@@ -61,9 +62,11 @@ final case class ParquetQueue(dir: String, schema: StructType,
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(dir)
 
-  def enqueue(messages: DataFrame): Unit =
-    if (!messages.isEmpty)
-      messages.coalesce(1).write.mode(SaveMode.Append).parquet(dir)
+  /** Lands like [[FileQueue.enqueue]], as parquet. */
+  def enqueue(messages: DataFrame): Unit = {
+    graft.sinks.Sinks.appendFiles(messages.coalesce(1), dir, "parquet")
+    ()
+  }
 }
 
 /** Keyed upsert store (K4/J5): new rows REPLACE rows with the same key;

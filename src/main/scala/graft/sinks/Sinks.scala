@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Sinks — SURVEY.md §2.8 (K4/K5/K6) as Spark writers plus a
@@ -179,6 +179,51 @@ object Sinks {
   /** K5 readback verify (ListProducer.py:159-161). */
   def readJsonDoc(spark: SparkSession, path: String): DataFrame =
     spark.read.option("multiLine", "true").json(path)
+
+  /** How long [[appendFiles]] waits for its write's observed metrics,
+    * which the listener bus delivers after the write job ends. */
+  private val ObservedWait = scala.concurrent.duration.Duration(60, "s")
+
+  /** Appends `df` to `dir` as `format` files in ONE write job and
+    * returns what that job observed: the row count under "rows", plus
+    * each of `observed` (named count aggregates) under its own name.
+    *
+    * The job writes into a hidden `_`-prefixed staging dir under `dir`,
+    * which file-stream and batch readers skip as they skip
+    * `_temporary`; a non-empty write's part files are then renamed
+    * into `dir`. The staging dir is deleted on every path, so an empty
+    * frame or a failed write lands no file: an empty part file in a
+    * queue dir would be a new offset to the file-stream source
+    * consuming it, a self-feeding loop of empty micro-batches. So no
+    * caller needs an emptiness probe job before its write. Throws if
+    * the write's metrics never arrive. */
+  private[graft] def appendFiles(df: DataFrame, dir: String, format: String,
+                                 observed: Column*): Map[String, Long] = {
+    val target = new Path(dir)
+    val fs = target.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val staging = new Path(target, s"_staging-${java.util.UUID.randomUUID()}")
+    val obs = Observation()
+    try {
+      df.observe(obs, count(lit(1)).as("rows"), observed: _*)
+        .write.format(format).save(staging.toString)
+      val row =
+        try scala.concurrent.Await.result(obs.future, ObservedWait)
+        catch {
+          case e: java.util.concurrent.TimeoutException =>
+            throw new IllegalStateException(
+              s"no observed metrics for the write to $dir", e)
+        }
+      val metrics = row.schema.fieldNames.map(n => n -> row.getAs[Long](n)).toMap
+      if (metrics("rows") > 0)
+        fs.listStatus(staging).map(_.getPath)
+          .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+          .foreach { part =>
+            val landed = new Path(target, part.getName)
+            require(fs.rename(part, landed), s"rename failed: $part -> $landed")
+          }
+      metrics
+    } finally fs.delete(staging, true)
+  }
 
   /** K6 — result CSVs partitioned by outcome (AzureEtagCheck/
     * etag_app.py:258-272 writes success vs errors files). */

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -61,7 +61,14 @@ object TaskPipeline {
     *  - failed, >=3 rx → `dlqDir` (K2 dead-letter)
     * All three writes happen in one foreachBatch so a batch is retried
     * or completed as a unit (the reference deletes the SQS message only
-    * after the whole body is processed, TaskExecutor.py:51-98). */
+    * after the whole body is processed, TaskExecutor.py:51-98).
+    *
+    * A batch costs one write job per output and no probe job: the log
+    * write observes how many of its rows are dead and how many are
+    * retries, and the DLQ and the retry queue are written only when
+    * they get rows. A batch with no failures is one job; one with both
+    * kinds of failure is three (`TaskPipelineSpec` pins the counts).
+    * Each batch's jobs carry the label `executor batch <id>`. */
   def runExecutor(spark: SparkSession, queueDir: String, logDir: String,
                   dlqDir: String, checkpoint: String,
                   failWhen: org.apache.spark.sql.Column): StreamingQuery =
@@ -80,32 +87,38 @@ object TaskPipeline {
     executeCopy(actions, failWhen).writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // Writes are guarded on non-emptiness (QueueSource.enqueue
-        // guards internally): an unguarded write into the queue dir
-        // would append EMPTY part files, which the file source sees as
-        // new offsets — an infinite self-feeding loop of empty batches.
-        val b = batch.cache()
-        // every ATTEMPT is logged with its 0/1 status — the monitor
-        // table records failures too (docs/Schema.txt:55-59), which is
-        // what feeds the stat table's Failed* columns
-        if (!b.isEmpty)
-          b.write.mode(SaveMode.Append).parquet(logDir)
-        val failed = b.filter(col("ok") === 0)
-        // re-pack per-action rows into MESSAGE shape before any enqueue:
-        // both the DLQ and the retry queue must stay consumable by
-        // unpack() (a DLQ holding raw action rows would read back with
-        // body=null and a redrive would silently drop every dead letter)
-        def pack(actions: DataFrame): DataFrame = actions
-          .groupBy(col("queue"), col("batch_id"), col("receive_count"))
-          .agg(to_json(collect_list(
-            struct(col("Bucket"), col("Key"), col("Size"), col("ETag"),
-              col("dst_bucket")))).as("body"))
-        dlq.enqueue(pack(failed.filter(col("receive_count") >= 3)))
-        // re-enqueue sub-3-receive failures, one message per (queue,batch)
-        queue.enqueue(pack(failed.filter(col("receive_count") < 3))
-          .withColumn("receive_count", col("receive_count") + 1))
-        b.unpersist()
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        StreamSessions.labeled(batch.sparkSession, s"executor batch $id") {
+          val b = batch.cache()
+          try {
+            val failed = col("ok") === 0
+            val dead = failed && col("receive_count") >= 3
+            val retry = failed && col("receive_count") < 3
+            // every ATTEMPT is logged with its 0/1 status — the monitor
+            // table records failures too (docs/Schema.txt:55-59), which
+            // is what feeds the stat table's Failed* columns
+            val seen = graft.sinks.Sinks.appendFiles(b, logDir, "parquet",
+              count(when(dead, true)).as("dead"), count(when(retry, true)).as("retry"))
+            // re-pack per-action rows into MESSAGE shape before any
+            // enqueue: both the DLQ and the retry queue must stay
+            // consumable by unpack() (a DLQ holding raw action rows would
+            // read back with body=null and a redrive would silently drop
+            // every dead letter). Failures are few: packed in one
+            // partition, the grouping needs no shuffle, so each enqueue
+            // is a single one-task job
+            def pack(actions: DataFrame): DataFrame = actions.coalesce(1)
+              .groupBy(col("queue"), col("batch_id"), col("receive_count"))
+              .agg(to_json(collect_list(
+                struct(col("Bucket"), col("Key"), col("Size"), col("ETag"),
+                  col("dst_bucket")))).as("body"))
+            if (seen("dead") > 0)
+              dlq.enqueue(pack(b.filter(dead)))
+            // re-enqueue sub-3-receive failures, one message per (queue,batch)
+            if (seen("retry") > 0)
+              queue.enqueue(pack(b.filter(retry))
+                .withColumn("receive_count", col("receive_count") + 1))
+          } finally b.unpersist()
+        }
         ()
       }
       .start()
@@ -148,8 +161,10 @@ object TaskPipeline {
       .writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        store.upsert(batch, Seq("start_time"))
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        StreamSessions.labeled(batch.sparkSession, s"stats batch $id") {
+          store.upsert(batch, Seq("start_time"))
+        }
       }
       .start()
   }

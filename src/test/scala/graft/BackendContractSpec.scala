@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.connectors.{FileQueue, KeyedStore, ParquetQueue, QueueSource,
@@ -80,6 +81,29 @@ class BackendContractSpec extends SparkSpec {
       q.enqueue(Seq((3L, "m3")).toDF("id", "body"))
       drain(q, s"$root/ckpt", s"$root/out")
       assert(got() == Seq((1L, "m1"), (2L, "m2"), (3L, "m3")))
+    }
+
+    test(s"QueueSource[$name]: enqueue lands part files only, a failed one nothing") {
+      val root = tmpDir(s"qland_$name")
+      val q = mk(s"$root/queue")
+      def entries(): Seq[String] =
+        new java.io.File(s"$root/queue").list().toSeq.sorted
+      q.enqueue(Seq((1L, "m1"), (2L, "m2")).toDF("id", "body"))
+      val landed = entries()
+      // part files and their checksum sidecars: no staging dir, no marker
+      assert(landed.nonEmpty && landed.forall(n => n.startsWith("part-") ||
+        (n.startsWith(".part-") && n.endsWith(".crc"))), landed)
+      // a write job whose task throws after writing a row lands nothing
+      val failing = spark.range(3, 5).select(col("id"),
+        when(col("id") === 4L, raise_error(lit("injected task failure")))
+          .otherwise(concat(lit("m"), col("id"))).as("body"))
+      val e = intercept[Exception](q.enqueue(failing))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("injected task failure")))
+      assert(entries() == landed)
+      drain(q, s"$root/ckpt", s"$root/out")
+      assert(spark.read.schema(msgSchema).parquet(s"$root/out")
+        .as[(Long, String)].collect().toSeq.sorted == Seq((1L, "m1"), (2L, "m2")))
     }
   }
 

@@ -131,6 +131,63 @@ class TaskPipelineSpec extends SparkSpec {
       .agg(sum("success_num")).as[Long].head() == 3L)
   }
 
+  private def message(q: Int, b: Long, rx: Int, keys: String*): (Int, Long, Int, String) =
+    (q, b, rx, keys.map(k =>
+      s"""{"Bucket":"s","Key":"$k","Size":${k.length * 100},"ETag":"e","dst_bucket":"d"}""")
+      .mkString("[", ",", "]"))
+
+  private def land(queueDir: String, msgs: (Int, Long, Int, String)*): Unit =
+    msgs.toDF("queue", "batch_id", "receive_count", "body")
+      .write.mode("append").json(queueDir)
+
+  test("executor batch: one job without failures, one write job per output") {
+    val root = tmpDir("execjobs")
+    val (queueDir, logDir, dlqDir) = (s"$root/queue", s"$root/log", s"$root/dlq")
+    land(queueDir, message(0, 0L, 1, "ok-1", "ok-2"))
+    // jobs per executor batch, in batch order
+    def drainJobs(q: org.apache.spark.sql.streaming.StreamingQuery): Seq[Int] = {
+      val jobs = Meter.measure(spark)(q.processAllAvailable())._2.jobs
+      assert(jobs.forall(_.description.startsWith("executor batch ")),
+        jobs.map(_.description))
+      jobs.groupBy(_.description).values.toSeq.sortBy(_.map(_.id).min).map(_.size)
+    }
+    val q = TaskPipeline.runExecutor(spark, queueDir, logDir, dlqDir,
+      s"$root/ckpt", failWhen = col("Key").startsWith("poison"))
+    try {
+      // nothing fails: the log write is the batch's only job
+      assert(drainJobs(q) == Seq(1))
+      // one landing with a first-receive and a third-receive failure:
+      // log + DLQ + retry, then log + retry, then log + DLQ
+      land(queueDir, message(1, 0L, 1, "ok-3", "poison-a"),
+        message(2, 0L, 3, "poison-b"))
+      assert(drainJobs(q) == Seq(3, 2, 2))
+    } finally q.stop()
+    val log = spark.read.parquet(logDir)
+    assert(log.filter($"ok" === 1).count() == 3 && log.filter($"ok" === 0).count() == 4)
+    val dead = TaskPipeline.unpack(spark.read.schema(TaskPipeline.messageSchema).json(dlqDir))
+      .select("Key", "receive_count").as[(String, Int)].collect().toSeq.sorted
+    assert(dead == Seq(("poison-a", 3), ("poison-b", 3)))
+  }
+
+  test("every job of an executor + stats drain carries its batch label") {
+    val root = tmpDir("execlabels")
+    val (queueDir, logDir) = (s"$root/queue", s"$root/log")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(logDir))
+    land(queueDir, message(0, 0L, 1, "ok-1", "poison"), message(1, 0L, 1, "ok-2"))
+    val (_, cost) = Meter.measure(spark) {
+      val exec = TaskPipeline.runExecutor(spark, queueDir, logDir, s"$root/dlq",
+        s"$root/ckpt-exec", failWhen = col("Key") === "poison")
+      val stats = TaskPipeline.runStatsJob(spark, logDir, s"$root/stat", s"$root/ckpt-stats")
+      try {
+        exec.processAllAvailable()
+        stats.processAllAvailable()
+      } finally { exec.stop(); stats.stop() }
+    }
+    val labels = cost.jobs.map(_.description)
+    assert(labels.forall(_.matches("(executor|stats) batch \\d+")), labels)
+    assert(labels.exists(_.startsWith("executor")) && labels.exists(_.startsWith("stats")))
+  }
+
   test("streaming stats job: watermarked window agg upserts the stat store") {
     val root = tmpDir("stats")
     val logDir = s"$root/log"
