@@ -15,7 +15,7 @@ import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sinks.{DataSkipping, VersionedStore}
+import graft.sinks.{DataSkipping, Sinks, VersionedStore}
 
 /** The MVCC [[VersionedStore]] as a DataSource V2 TABLE — the SQL
   * surface of the store family: any snapshot is addressable without
@@ -238,13 +238,10 @@ private[connectors] final case class VStoreScan(path: String, epoch: Long,
   /** The snapshot's serving chains, resolved ONCE at plan time from
     * the commit log (vacuum watermark honored like every read). */
   private lazy val chains: Seq[(Int, graft.sinks.VersionedStore.Chain)] = {
-    val wm = VersionedStore.retentionWatermark(path)
-    require(epoch >= wm,
-      s"graft-vstore epoch $epoch is below the vacuum watermark $wm")
-    val committed = VersionedStore.commits(path)
-    val cur = committed.lastOption.map(_.epoch).getOrElse(0L)
-    require(epoch <= cur,
-      s"graft-vstore epoch $epoch is beyond current epoch $cur")
+    val (committed, _, _) =
+      VersionedStore.resolveSnapshot(path, Some(epoch), Some(epoch))(
+        (e, wm) => s"graft-vstore epoch $e is below the vacuum watermark $wm",
+        (e, cur) => s"graft-vstore epoch $e is beyond current epoch $cur")
     VersionedStore.snapshotChains(path, committed, epoch).toSeq
       .filter(_._2.paths.nonEmpty).sortBy(_._1)
   }
@@ -337,10 +334,8 @@ private[connectors] final case class VStoreScan(path: String, epoch: Long,
     val dirs = plannedSelected.flatMap(_._2.paths).distinct
     VersionedStore.parallelMap(dirs) { d =>
       val p = new Path(d)
-      val parts = p.getFileSystem(conf).listStatus(p).filter { f =>
-        val nm = f.getPath.getName
-        nm.endsWith(".parquet") && !nm.startsWith(".") && !nm.startsWith("_")
-      }
+      val parts = p.getFileSystem(conf).listStatus(p)
+        .filter(f => Sinks.isPartFile(f.getPath))
       d -> ((parts.map(_.getPath.toString).sorted.toSeq,
         parts.map(_.getLen).sum))
     }.toMap
@@ -353,11 +348,8 @@ private[connectors] final case class VStoreScan(path: String, epoch: Long,
         // returning empty would silently lose rows
         val p = new Path(d)
         p.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
-          .listStatus(p).map(_.getPath).filter { f =>
-            val nm = f.getName
-            nm.endsWith(".parquet") && !nm.startsWith(".") &&
-              !nm.startsWith("_")
-          }.map(_.toString).sorted.toSeq
+          .listStatus(p).map(_.getPath).filter(Sinks.isPartFile)
+          .map(_.toString).sorted.toSeq
       }
     }
 

@@ -1,7 +1,5 @@
 package graft.exec
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -87,8 +85,12 @@ object AzureDiffJob {
       Fns.isoUtc(to_timestamp(col("Last-Modified"))))
       .withColumn("msg_id", col("event.id"))
 
-    // J2: probe the sent ledger, skip already-sent events
-    val ledgerExists = Files.exists(Paths.get(ledgerDir, "_SUCCESS"))
+    // J2: probe the sent ledger, skip already-sent events. The probe
+    // goes through the ledger's own Hadoop filesystem: a java.nio probe
+    // reads a `file:`/`s3a:` root as absent and re-enqueues everything
+    val ledgerSuccess = new org.apache.hadoop.fs.Path(ledgerDir, "_SUCCESS")
+    val ledgerExists = ledgerSuccess
+      .getFileSystem(spark.sparkContext.hadoopConfiguration).exists(ledgerSuccess)
     val fresh =
       if (ledgerExists)
         Dedup.antiJoin(events, spark.read.parquet(ledgerDir), Seq("msg_id"))

@@ -86,10 +86,6 @@ object Fns {
   def replicatedFlag(c: Column): Column =
     when(length(coalesce(c, lit(""))) > 0, 1).otherwise(0)
 
-  /** P10 — null-key fallback (AzureEtagCheck/etag_app.py:185-187). */
-  def keyOrBlob(s3Key: Column, blobName: Column): Column =
-    coalesce(s3Key, blobName)
-
   /** The engine's EIGHTH-BIT integer log₂ idiom, shared by the BM25
     * idf and the LM cross-entropy weights (one definition — a future
     * overflow/mantissa fix cannot silently miss one of them): given a

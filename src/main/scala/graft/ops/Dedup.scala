@@ -3,8 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Fns
-
 /** J2/J3 — idempotent-send dedup, plus exact record dedup.
   *
   * Reference: before enqueuing, probe the sent-message ledger by
@@ -23,10 +21,6 @@ object Dedup {
   def antiJoin(tasks: DataFrame, sentLedger: DataFrame,
                keys: Seq[String] = Seq("fileName", "msgId")): DataFrame =
     tasks.join(sentLedger.select(keys.map(col): _*).distinct(), keys, "left_anti")
-
-  /** Attach the deterministic message id column. */
-  def withMsgId(df: DataFrame, endpoint: Column, name: Column, eventType: Column): DataFrame =
-    df.withColumn("msg_id", Fns.msgId(endpoint, name, eventType))
 
   /** Exact dedup: keep one representative row per value of `keyCols`,
     * choosing the row with the minimum `tieBreak` (deterministic, unlike

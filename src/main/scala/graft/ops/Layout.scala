@@ -180,7 +180,7 @@ object Layout {
     *     and written `partitionBy(bin)` — one output file per bin by
     *     construction, 10k bins = still one job;
     *  3. single-file (compact) bins copy byte-for-byte in one more
-    *     job, `FileUtil.copy` running ON EXECUTORS;
+    *     job, running ON EXECUTORS ([[graft.sinks.Sinks.copyFiles]]);
     *  4. the driver's only writes are control-plane: per-bin renames
     *     out of the staging directory and the final `_SUCCESS` marker
     *     (the store convention — readers gate on it).
@@ -195,7 +195,7 @@ object Layout {
     *         action copy|rewrite, out_file) */
   def compactFiles(spark: SparkSession, srcDir: String, targetDir: String,
                    targetBytes: Long, minBytes: Long = -1L): DataFrame = {
-    import org.apache.hadoop.fs.{FileUtil, Path}
+    import org.apache.hadoop.fs.Path
     import spark.implicits._
     require(targetBytes > 0, "targetBytes must be positive")
     val minB = if (minBytes >= 0) minBytes else targetBytes / 2
@@ -259,34 +259,10 @@ object Layout {
     val rewrites = indexed.filter(_._1.length > 1)
 
     // 3. compact bins: byte-for-byte copies, ONE job, executor-side
-    if (copies.nonEmpty) {
-      val pairs = copies.map { case (m, bin) =>
-        (m.head._1, f"bin-$bin%05d-${m.head._1}")
-      }
-      // Configuration itself is not serializable; ship the overlay the
-      // session carries (spark.hadoop.* + fs defaults) as entries and
-      // rebuild on the executor — same pattern DSv2 writers use
-      val confEntries: Array[(String, String)] = {
-        val it = spark.sparkContext.hadoopConfiguration.iterator()
-        val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-        while (it.hasNext) { val e = it.next(); out += ((e.getKey, e.getValue)) }
-        out.toArray
-      }
-      val (srcStr, dstStr) = (srcPath.toString, dstPath.toString)
-      spark.createDataset(pairs)
-        .repartition(math.min(pairs.size,
-          spark.sparkContext.defaultParallelism))
-        .foreachPartition { (it: Iterator[(String, String)]) =>
-          val conf = new org.apache.hadoop.conf.Configuration(false)
-          confEntries.foreach { case (k, v) => conf.set(k, v) }
-          val (sp, dp) = (new Path(srcStr), new Path(dstStr))
-          val (sfs, dfs) = (sp.getFileSystem(conf), dp.getFileSystem(conf))
-          it.foreach { case (from, to) =>
-            FileUtil.copy(sfs, new Path(sp, from), dfs, new Path(dp, to),
-              false, true, conf)
-          }
-        }
-    }
+    graft.sinks.Sinks.copyFiles(spark, copies.map { case (m, bin) =>
+      (new Path(srcPath, m.head._1).toString,
+        new Path(dstPath, f"bin-$bin%05d-${m.head._1}").toString)
+    })
 
     val renamedBins = scala.collection.mutable.Set.empty[Int]
 
@@ -322,10 +298,7 @@ object Layout {
         val binDir = new Path(staging, s"_graft_bin=$bin")
         if (fs.exists(binDir)) {
           val part = fs.listStatus(binDir).map(_.getPath)
-            .find { p =>
-              val n = p.getName
-              n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
-            }
+            .find(graft.sinks.Sinks.isPartFile)
             .getOrElse(sys.error(s"no output part file in $binDir"))
           val out = new Path(dstPath, f"bin-$bin%05d-compacted.parquet")
           require(fs.rename(part, out), s"rename failed: $part -> $out")

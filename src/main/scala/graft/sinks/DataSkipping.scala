@@ -209,10 +209,8 @@ object DataSkipping {
     val cols = schema.fields.filter(f => supported(f.dataType))
       .map(f => f.name -> f.dataType).toMap
     if (cols.isEmpty) return None
-    val files = fs.listStatus(genDir).map(_.getPath).filter { p =>
-      val nm = p.getName
-      nm.endsWith(".parquet") && !nm.startsWith(".") && !nm.startsWith("_")
-    }
+    val files = fs.listStatus(genDir).map(_.getPath)
+      .filter(Sinks.isPartFile)
     if (files.isEmpty) return None
     // name -> (nulls, min, max) folded across files and row groups;
     // a column dropped anywhere is dropped everywhere

@@ -34,10 +34,9 @@ private[graft] final class GenStatsFileIndex(
   private val perGen: Seq[(Path, Seq[FileStatus])] =
     VersionedStore.parallelMap(genDirs) { g =>
       val p = new Path(g)
-      val files = fs.listStatus(p).toSeq.filter { st =>
-        val nm = st.getPath.getName
-        nm.endsWith(".parquet") && !nm.startsWith(".") && !nm.startsWith("_")
-      }.sortBy(_.getPath.getName)
+      val files = fs.listStatus(p).toSeq
+        .filter(st => Sinks.isPartFile(st.getPath))
+        .sortBy(_.getPath.getName)
       (p, files)
     }
 

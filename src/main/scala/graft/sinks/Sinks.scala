@@ -180,6 +180,35 @@ object Sinks {
   def readJsonDoc(spark: SparkSession, path: String): DataFrame =
     spark.read.option("multiLine", "true").json(path)
 
+  /** Byte-copies each (from, to) file pair ON EXECUTORS in one Spark
+    * job: no row is decoded, no shuffle runs, and no byte passes the
+    * driver. Paths are fully qualified; each side goes through its own
+    * Hadoop filesystem. `Configuration` is not serializable, so the
+    * session's Hadoop conf ships as entries and is rebuilt on the
+    * executor (the pattern DSv2 writers use). */
+  private[graft] def copyFiles(spark: SparkSession,
+                               pairs: Seq[(String, String)]): Unit = {
+    if (pairs.isEmpty) return
+    val confEntries: Array[(String, String)] = {
+      val it = spark.sparkContext.hadoopConfiguration.iterator()
+      val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+      while (it.hasNext) { val e = it.next(); out += ((e.getKey, e.getValue)) }
+      out.toArray
+    }
+    import spark.implicits._
+    spark.createDataset(pairs)
+      .repartition(math.min(pairs.size, spark.sparkContext.defaultParallelism))
+      .foreachPartition { (it: Iterator[(String, String)]) =>
+        val conf = new Configuration(false)
+        confEntries.foreach { case (k, v) => conf.set(k, v) }
+        it.foreach { case (from, to) =>
+          val (fp, tp) = (new Path(from), new Path(to))
+          org.apache.hadoop.fs.FileUtil.copy(fp.getFileSystem(conf), fp,
+            tp.getFileSystem(conf), tp, false, true, conf)
+        }
+      }
+  }
+
   /** How long [[appendFiles]] waits for its write's observed metrics,
     * which the listener bus delivers after the write job ends. */
   private val ObservedWait = scala.concurrent.duration.Duration(60, "s")
@@ -287,6 +316,13 @@ object Sinks {
         require(fs.rename(swap, dir), s"recovery rename failed: $swap")
       }
     }
+  }
+
+  /** A parquet output's data files: `*.parquet`, never the
+    * `_SUCCESS`/`_EMPTY`/`_cstats` markers or hidden checksum sidecars. */
+  private[graft] def isPartFile(p: Path): Boolean = {
+    val nm = p.getName
+    nm.endsWith(".parquet") && !nm.startsWith(".") && !nm.startsWith("_")
   }
 
   private[graft] def deleteRecursively(p: java.nio.file.Path): Unit =

@@ -1,7 +1,7 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -102,7 +102,7 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType
   */
 object VersionedStore {
 
-  import Sinks.{fsOf, readMarker, writeMarker}
+  import Sinks.{fsOf, isPartFile, readMarker, writeMarker}
 
   /** One committed epoch: which buckets it rewrote (COW) or appended
     * deltas to (MOR), why, and when (wall-clock millis; 0 for commits
@@ -127,8 +127,9 @@ object VersionedStore {
   private val CommitRe = "^_commit-(\\d{7})$".r
   private val FloorsRe = "^_floors-(\\d{7})$".r
   private val SchemaRe = "^_schema-(\\d{7})$".r
-  private def bucketName(b: Int): String = f"b$b%05d"
-  private def genName(e: Long): String = f"g$e%07d"
+  /** Bucket `b`'s generation directory for epoch `e` under store `dir`. */
+  private def genDir(dir: Path, b: Int, e: Long): Path =
+    new Path(dir, f"b$b%05d/g$e%07d")
 
   /** Reserved column the MOR read path stores a delta row's operation
     * under inside delta generation files. */
@@ -136,6 +137,25 @@ object VersionedStore {
 
   private def isDeltaKind(kind: String): Boolean =
     kind == "dapply" || kind.startsWith("dapply@")
+
+  /** Per bucket, the epochs of its serving chain: the newest base
+    * generation (None = never had one) and the delta generations after
+    * it, newest first. */
+  private type Serving = Map[Int, (Option[Long], List[Long])]
+
+  /** `serving` once commit `c` lands on top of it — the one statement
+    * of the chain policy: a base epoch restarts its buckets' chains, a
+    * delta epoch extends them. `track` restricts the buckets kept. */
+  private def serve(serving: Serving, c: Commit,
+                    track: Int => Boolean = _ => true): Serving = {
+    val delta = isDeltaKind(c.kind)
+    c.buckets.filter(track).foldLeft(serving) { (m, b) =>
+      m + (b -> (if (delta) {
+        val (base, ds) = m.getOrElse(b, (None, Nil))
+        (base, c.epoch :: ds)
+      } else (Some(c.epoch), Nil)))
+    }
+  }
 
   // ------------------------------------------------------------ markers
 
@@ -512,7 +532,7 @@ object VersionedStore {
       // first (the both-promoted-before-either-commits interleaving —
       // round-13 ADVICE; ConcurrencySpec pins it).
       touched.foreach { b =>
-        val gen = new Path(dir, s"${bucketName(b)}/${genName(epoch)}")
+        val gen = genDir(dir, b, epoch)
         val owner =
           try readMarker(fs, new Path(gen, "_SUCCESS"))
           catch { case scala.util.control.NonFatal(_) => None }
@@ -635,8 +655,8 @@ object VersionedStore {
           "conflict with every concurrent commit; this commit is rolled back")
       val newEpoch = now.last.epoch + 1L
       touched.foreach { b =>
-        val from = new Path(dir, s"${bucketName(b)}/${genName(epoch)}")
-        val to = new Path(dir, s"${bucketName(b)}/${genName(newEpoch)}")
+        val from = genDir(dir, b, epoch)
+        val to = genDir(dir, b, newEpoch)
         fs.delete(to, true) // a crashed writer's leftovers for newEpoch
         require(fs.rename(from, to), s"rebase rename failed: $from -> $to")
       }
@@ -781,32 +801,18 @@ object VersionedStore {
                  evolve: Boolean, tsMillis: Long,
                  preMaterialized: Boolean, constUpsertOp: Boolean,
                  keysUnique: Boolean): Long = {
-    require(!tag.contains(";") && !tag.contains("\n") && !tag.contains("@"),
-      s"commit tag must not contain ';', '@' or newlines: $tag")
-    val payloadCols = batch.columns.filterNot(_ == opCol)
-    require(!payloadCols.contains("_bucket") && !payloadCols.contains(OpField),
-      s"versioned store reserves '_bucket' and '$OpField'; rename the input's")
-    val spark = batch.sparkSession
-    val (fs, dir) = fsOf(root)
-    fs.mkdirs(dir)
-    writeMarker(fs, new Path(dir, "_keycols"), keyCols.mkString(","),
-      replace = false)
-    val n = bucketCount(fs, dir, nBuckets)
-    val committed = commits(root)
-    val epoch = committed.lastOption.map(_.epoch).getOrElse(0L) + 1L
-    val bucketExpr = pmod(hash(keyCols.map(col): _*), lit(n))
+    val w = beginWrite(batch, keyCols, root, nBuckets, tag, Some(opCol))
+    import w.{bucketExpr, epoch, spark, storeDdl}
     // schema fence inputs derive from the batch's SCHEMA only (no data,
     // no job) — computed up front so the keysUnique fast path below can
     // decide before any action runs
-    val storeDdl = schemaAsOfOpt(fs, dir,
-      committed.lastOption.map(_.epoch).getOrElse(0L))
     val batchShape = StructType(batch.schema
       .filterNot(f => f.name == opCol || f.name == "_bucket"))
     val targetDdl = storeDdl match {
       case None => ddlOf(batchShape)
       case Some(prev) => mergeSchemas(prev, batchShape, evolve)
     }
-    val evolving = storeDdl.exists(_ != targetDdl)
+    val evolving = w.evolves(targetDdl)
     // keysUnique FAST PATH (the high-frequency maintainer contract):
     // the caller asserts one row per key — its batch is the output of
     // an aggregation/distinct on the key columns — so the dup fence is
@@ -898,41 +904,18 @@ object VersionedStore {
     // and a later first real batch with an additively wider shape
     // would error without evolve=true. Deferring it is safe: nothing
     // staged is reader-visible before the commit marker lands.
-    def writeSchemaFence(): Unit = {
-      writeMarker(fs, new Path(dir, "_schema"), targetDdl, replace = false)
-      val schemaMarker = new Path(dir, f"_schema-$epoch%07d")
-      // never touch a schema marker whose epoch a RACING writer already
-      // committed — it is theirs; our own collision resolves (and for an
-      // evolving commit, aborts) at the commit fence
-      val epochRaced = fs.exists(new Path(dir, f"_commit-$epoch%07d"))
-      if (evolving) {
-        if (epochRaced)
-          sys.error(s"concurrent writer conflict: epoch $epoch was committed " +
-            "by another writer while this schema-evolving commit staged — " +
-            "metadata changes conflict with every concurrent commit")
-        writeMarker(fs, schemaMarker, targetDdl, replace = true)
-      } else if (!epochRaced) fs.delete(schemaMarker, false)
-    }
-    if (!fastUnique) writeSchemaFence()
+    if (!fastUnique) writeSchemaFence(w, targetDdl)
 
     val targetCols = StructType.fromDDL(targetDdl).fieldNames.toSeq
     val out = mat.select(targetCols.map(col) ++
       Seq(col(opCol).cast(StringType).as(OpField), col("_bucket")): _*)
-    if (fastUnique) {
-      val (token, staged) = stageAndPromoteImpl(spark, fs, dir, out,
-        touchedHint = None, nCand = n, epoch, keyCols, bloom = false)
-      if (staged.isEmpty) return epoch - 1L // empty batch: nothing committed
-      writeSchemaFence()
-      commitOrRebase(fs, dir, root, epoch,
-        "dapply" + (if (tag.nonEmpty) s"@$tag" else ""), staged, tsMillis,
-        committed, ownEvolved = false, ownerToken = token)
-    } else {
-      val token = stageAndPromote(spark, fs, dir, out, touched, epoch, keyCols,
-        bloom = false)
-      commitOrRebase(fs, dir, root, epoch,
-        "dapply" + (if (tag.nonEmpty) s"@$tag" else ""), touched, tsMillis,
-        committed, ownEvolved = evolving, ownerToken = token)
-    }
+    // the fast path stages hint-less: its touched set is read off the
+    // staged output, and an empty one means an empty batch
+    val (token, staged) = stageAndPromote(w, out,
+      if (fastUnique) None else Some(touched), bloom = false)
+    if (staged.isEmpty) return epoch - 1L // empty batch: nothing committed
+    if (fastUnique) writeSchemaFence(w, targetDdl)
+    commitEpoch(w, "dapply", staged, tsMillis, targetDdl, token)
   }
 
   /** Merge-on-read upsert: [[deltaApply]] with every row an upsert.
@@ -980,18 +963,17 @@ object VersionedStore {
       !ch.isPlain && (buckets.isEmpty || buckets.contains(b))
     }
     if (cand.isEmpty) return cur
-    val epoch = cur + 1L
     val keyCols = keyColsOf(root)
     val (fs, dir) = fsOf(root)
     val n = bucketCount(fs, dir, 8)
     val ddl = schemaAsOf(root, cur)
+    val w = EpochWrite(spark, fs, dir, root, keyCols, tag = "", n, committed,
+      cur + 1L, pmod(hash(keyCols.map(col): _*), lit(n)), Some(ddl))
     val touched = cand.keys.toSeq.sorted
     val merged = readChains(spark, keyCols, ddl, cand.values)
-      .withColumn("_bucket", pmod(hash(keyCols.map(col): _*), lit(n)))
-    val token = stageAndPromote(spark, fs, dir, merged, touched, epoch,
-      keyCols, bloom = true)
-    commitOrRebase(fs, dir, root, epoch, "compact", touched, tsMillis,
-      committed, ownEvolved = false, ownerToken = token)
+      .withColumn("_bucket", w.bucketExpr)
+    val (token, _) = stageAndPromote(w, merged, Some(touched), bloom = true)
+    commitEpoch(w, "compact", touched, tsMillis, ddl, token)
   }
 
   /** The compaction POLICY hook: compact only buckets whose serving
@@ -1007,16 +989,8 @@ object VersionedStore {
     val committed = commits(root)
     val cur = committed.lastOption.map(_.epoch).getOrElse(0L)
     if (cur == 0L) return 0L
-    val deltaCount = scala.collection.mutable.Map.empty[Int, Int]
-    committed.foreach { c =>
-      val delta = isDeltaKind(c.kind)
-      c.buckets.foreach { b =>
-        if (delta) deltaCount(b) = deltaCount.getOrElse(b, 0) + 1
-        else deltaCount(b) = 0
-      }
-    }
-    val cand = deltaCount.collect {
-      case (b, n) if n >= maxDeltas => b
+    val cand = committed.foldLeft(Map.empty: Serving)(serve(_, _)).collect {
+      case (b, (_, ds)) if ds.length >= maxDeltas => b
     }.toSeq.sorted
     if (cand.isEmpty) cur else compact(spark, root, cand, tsMillis)
   }
@@ -1131,6 +1105,84 @@ object VersionedStore {
     else StructType(store ++ newCols).toDDL
   }
 
+  /** What a write settles before touching data: the store's
+    * filesystem and layout, the commit log as read at staging time, the
+    * epoch being staged, the bucket expression and the schema in force
+    * (None on a new store). */
+  private final case class EpochWrite(spark: SparkSession, fs: FileSystem,
+      dir: Path, root: String, keyCols: Seq[String], tag: String, n: Int,
+      committed: Seq[Commit], epoch: Long, bucketExpr: Column,
+      storeDdl: Option[String]) {
+    /** Does committing under `targetDdl` evolve the store's schema? */
+    def evolves(targetDdl: String): Boolean = storeDdl.exists(_ != targetDdl)
+  }
+
+  /** The prelude of both write shapes ([[writeEpoch]], [[deltaApplyImpl]]):
+    * the tag and reserved-column checks (`opCol`, the batch's op column,
+    * is exempt), then the store directory, `_keycols` and `_nbuckets`
+    * (created on first write), the commit log and the next epoch. */
+  private def beginWrite(batch: DataFrame, keyCols: Seq[String], root: String,
+                         nBuckets: Int, tag: String,
+                         opCol: Option[String]): EpochWrite = {
+    require(!tag.contains(";") && !tag.contains("\n") && !tag.contains("@"),
+      s"commit tag must not contain ';', '@' or newlines: $tag")
+    val payloadCols = batch.columns.filterNot(c => opCol.contains(c))
+    require(!payloadCols.contains("_bucket") && !payloadCols.contains(OpField),
+      s"versioned store reserves '_bucket' and '$OpField'; rename the input's")
+    val (fs, dir) = fsOf(root)
+    fs.mkdirs(dir)
+    writeMarker(fs, new Path(dir, "_keycols"), keyCols.mkString(","),
+      replace = false)
+    val n = bucketCount(fs, dir, nBuckets)
+    val committed = commits(root)
+    val cur = committed.lastOption.map(_.epoch).getOrElse(0L)
+    EpochWrite(batch.sparkSession, fs, dir, root, keyCols, tag, n, committed,
+      cur + 1L, pmod(hash(keyCols.map(col): _*), lit(n)),
+      schemaAsOfOpt(fs, dir, cur))
+  }
+
+  /** The schema fence of a write whose epoch schema is `targetDdl`:
+    * `_schema` (the base schema) lands on a store's first write, an
+    * EVOLVING epoch writes its `_schema-E` marker, and any other epoch
+    * clears a crashed evolver's orphan for E. The evolution marker lands
+    * BEFORE the commit; a crash in between leaves an orphan for an
+    * uncommitted epoch, which no reader can resolve (readers stop at the
+    * committed epoch) and which the epoch's eventual writer overwrites
+    * or clears. */
+  private def writeSchemaFence(w: EpochWrite, targetDdl: String): Unit = {
+    import w.{dir, epoch, fs}
+    writeMarker(fs, new Path(dir, "_schema"), targetDdl, replace = false)
+    val schemaMarker = new Path(dir, f"_schema-$epoch%07d")
+    // never touch a schema marker whose epoch a RACING writer already
+    // committed — it is theirs; our own collision resolves (and for an
+    // evolving commit, aborts) at the commit fence
+    val epochRaced = fs.exists(new Path(dir, f"_commit-$epoch%07d"))
+    if (w.evolves(targetDdl)) {
+      if (epochRaced)
+        sys.error(s"concurrent writer conflict: epoch $epoch was committed " +
+          "by another writer while this schema-evolving commit staged — " +
+          "metadata changes conflict with every concurrent commit")
+      writeMarker(fs, schemaMarker, targetDdl, replace = true)
+    } else if (!epochRaced) fs.delete(schemaMarker, false)
+  }
+
+  /** The transaction point of every staged write: before the marker
+    * the epoch is invisible. The caller's tag rides as `kind@tag`. */
+  private def commitEpoch(w: EpochWrite, kind: String, touched: Seq[Int],
+                          tsMillis: Long, targetDdl: String,
+                          token: String): Long =
+    commitOrRebase(w.fs, w.dir, w.root, w.epoch,
+      kind + (if (w.tag.nonEmpty) s"@${w.tag}" else ""), touched, tsMillis,
+      w.committed, ownEvolved = w.evolves(targetDdl), ownerToken = token)
+
+  /** The data files a [[generationWriter]] staged under `staging` for
+    * bucket `b`, in name order (none when the bucket got no rows). */
+  private def stagedParts(fs: FileSystem, staging: Path, b: Int): Array[Path] = {
+    val staged = new Path(staging, s"_bucket=$b")
+    if (!fs.exists(staged)) Array.empty
+    else fs.listStatus(staged).map(_.getPath).filter(isPartFile).sortBy(_.getName)
+  }
+
   /** ONE staging job regardless of touched-bucket count (each bucket
     * co-located into one task; AQE never coalesces an explicit
     * repartition), then control-plane renames into the epoch's
@@ -1143,28 +1195,20 @@ object VersionedStore {
     * existence cannot tell them from a racing same-epoch writer's
     * completed promote (which would let interleaved overlapping
     * writers publish a marker over each other's data — round-13
-    * ADVICE). Readers only probe existence, so the content is free. */
-  private def stageAndPromote(spark: SparkSession, fs: FileSystem, dir: Path,
-                              frame: DataFrame, touched: Seq[Int],
-                              epoch: Long, keyCols: Seq[String],
-                              bloom: Boolean): String =
-    stageAndPromoteImpl(spark, fs, dir, frame, Some(touched), 0, epoch,
-      keyCols, bloom)._1
-
-  /** `touchedHint = None` derives the touched-bucket set from the
+    * ADVICE). Readers only probe existence, so the content is free.
+    *
+    * `touchedHint = None` derives the touched-bucket set from the
     * staged output itself (the dynamic-partition `_bucket=` dirs, one
     * listing) instead of requiring the caller to probe it with its own
     * aggregation job — the [[deltaUpsert]] `keysUnique` fast path.
-    * `nCand` is the store's bucket count: it bounds the staging
-    * repartition width and the stats observation's candidate set when
-    * no hint is given. Returns (owner token, touched buckets); an
-    * empty bucket set means nothing was staged (empty batch) and NO
-    * generation directory was created. */
-  private def stageAndPromoteImpl(spark: SparkSession, fs: FileSystem,
-                              dir: Path, frame: DataFrame,
-                              touchedHint: Option[Seq[Int]], nCand: Int,
-                              epoch: Long, keyCols: Seq[String],
+    * The store's bucket count then bounds the staging repartition
+    * width and the stats observation's candidate set. Returns (owner
+    * token, touched buckets); an empty bucket set means nothing was
+    * staged (empty batch) and NO generation directory was created. */
+  private def stageAndPromote(w: EpochWrite, frame: DataFrame,
+                              touchedHint: Option[Seq[Int]],
                               bloom: Boolean): (String, Seq[Int]) = {
+    import w.{dir, epoch, fs, keyCols}
     val token = java.util.UUID.randomUUID().toString
     // writer-private staging: two optimistic writers staging the same
     // epoch number must not clobber each other's files (the commit
@@ -1173,35 +1217,6 @@ object VersionedStore {
     val staging =
       new Path(dir, s".epoch-staging-${java.util.UUID.randomUUID()}")
     fs.delete(staging, true)
-    // parquet BLOOM FILTERS on the key columns of BASE generations:
-    // [[lookup]] pushes a literal key predicate into the scan, and
-    // with blooms a row group whose min/max straddles the probe key
-    // (hash-distributed keys always straddle) is still SKIPPED unless
-    // the key is plausibly present — at 100 TB this is the difference
-    // between decoding a whole bucket and touching ~no pages for an
-    // absent key (VersionedStoreSpec pins the footer metadata).
-    // DELTA generations skip blooms deliberately: they are
-    // batch-sized and short-lived (compaction folds them into a
-    // bloom'd base), and even an adaptively-sized filter is a
-    // multiple of a small delta file — the exact byte amplification
-    // merge-on-read exists to kill (ScalingProbe pins the ratio).
-    // Adaptive sizing caps the base-side cost: without it parquet
-    // allocates the 1 MB default per column chunk.
-    // base generations are additionally KEY-CLUSTERED within each
-    // file (sortWithinPartitions — no extra shuffle on top of the
-    // explicit repartition): row-group min/max on the key columns
-    // become tight ranges instead of the whole hash domain, so the
-    // pushed key predicate prunes by statistics even before blooms,
-    // and key-run compression improves. Deltas stay write-cheap.
-    // _bucket leads the sort so the dynamic-partition writer's
-    // required ordering is already satisfied (it would otherwise
-    // re-sort by _bucket and scramble the key clustering)
-    val shaped = frame.repartition(
-      touchedHint.map(_.length).getOrElse(math.max(1, nCand)), col("_bucket"))
-    val sorted =
-      if (bloom) shaped.sortWithinPartitions(
-        col("_bucket") +: keyCols.map(col): _*)
-      else shaped
     // generation-level column statistics ride the staging WRITE JOB
     // itself (Dataset.observe — CollectMetricsExec forwards the
     // child's ordering/partitioning, so the dynamic-partition writer
@@ -1216,17 +1231,12 @@ object VersionedStore {
     // stats anyway, so a delta'd chain can prune too (round-14).
     val statSchema = StructType(frame.schema.filterNot(f =>
       f.name == "_bucket" || f.name == OpField))
-    val observed = DataSkipping.observeStats(sorted,
-      touchedHint.getOrElse(0 until nCand), statSchema)
-    val base = observed.map(_._1).getOrElse(sorted).write
-    val writer =
-      if (!bloom) base
-      else keyCols.foldLeft(
-          base.option("parquet.bloom.filter.adaptive.enabled", "true")
-            .option("parquet.bloom.filter.max.bytes", (64 * 1024).toString)) {
-        (w, kc) => w.option(s"parquet.bloom.filter.enabled#$kc", "true")
-      }
-    writer.partitionBy("_bucket").parquet(staging.toString)
+    val laidOut = bucketLayout(frame,
+      touchedHint.map(_.length).getOrElse(math.max(1, w.n)), keyCols, bloom)
+    val observed = DataSkipping.observeStats(laidOut,
+      touchedHint.getOrElse(0 until w.n), statSchema)
+    generationWriter(observed.map(_._1).getOrElse(laidOut), keyCols, bloom)
+      .parquet(staging.toString)
     // hint-less staging (the keysUnique fast path): the touched set IS
     // the set of non-empty dynamic-partition dirs the write produced —
     // one listing replaces the caller's validation aggregation job. An
@@ -1273,16 +1283,10 @@ object VersionedStore {
           "refusing to promote over a committed snapshot")
     }
     touched.foreach { b =>
-      val gen = new Path(dir, s"${bucketName(b)}/${genName(epoch)}")
+      val gen = genDir(dir, b, epoch)
       fs.delete(gen, true) // a crashed writer's leftovers for THIS epoch
       Sinks.fastMkdirs(fs, gen)
-      val staged = new Path(staging, s"_bucket=$b")
-      val parts =
-        if (!fs.exists(staged)) Array.empty[Path]
-        else fs.listStatus(staged).map(_.getPath).filter { p =>
-          val nm = p.getName
-          nm.endsWith(".parquet") && !nm.startsWith(".") && !nm.startsWith("_")
-        }.sortBy(_.getName)
+      val parts = stagedParts(fs, staging, b)
       if (parts.isEmpty)
         // every row deleted: an empty generation is two marker files
         Sinks.createSmallFile(fs, new Path(gen, "_EMPTY"), Array.emptyByteArray)
@@ -1302,29 +1306,63 @@ object VersionedStore {
     (token, touched)
   }
 
+  /** The file layout of a generation write, shared by staging and the
+    * export of delta'd buckets: `frame` (carrying `_bucket`) co-located
+    * one task per bucket over `width` partitions (AQE never coalesces
+    * an explicit repartition). Base generations (`bloom`) are
+    * additionally KEY-CLUSTERED within each file (sortWithinPartitions
+    * — no extra shuffle on top of the explicit repartition): row-group
+    * min/max on the key columns become tight ranges instead of the
+    * whole hash domain, so the pushed key predicate prunes by
+    * statistics even before blooms, and key-run compression improves.
+    * Deltas stay write-cheap. `_bucket` leads the sort so the
+    * dynamic-partition writer's required ordering is already satisfied
+    * (it would otherwise re-sort by `_bucket` and scramble the key
+    * clustering). */
+  private def bucketLayout(frame: DataFrame, width: Int, keyCols: Seq[String],
+                           bloom: Boolean): DataFrame = {
+    val shaped = frame.repartition(width, col("_bucket"))
+    if (bloom) shaped.sortWithinPartitions(col("_bucket") +: keyCols.map(col): _*)
+    else shaped
+  }
+
+  /** The `partitionBy("_bucket")` parquet writer of a [[bucketLayout]]
+    * frame. With `bloom`, parquet BLOOM FILTERS on the key columns of
+    * BASE generations: [[lookup]] pushes a literal key predicate into
+    * the scan, and with blooms a row group whose min/max straddles the
+    * probe key (hash-distributed keys always straddle) is still
+    * SKIPPED unless the key is plausibly present — at 100 TB this is
+    * the difference between decoding a whole bucket and touching ~no
+    * pages for an absent key (VersionedStoreSpec pins the footer
+    * metadata). DELTA generations skip blooms deliberately: they are
+    * batch-sized and short-lived (compaction folds them into a bloom'd
+    * base), and even an adaptively-sized filter is a multiple of a
+    * small delta file — the exact byte amplification merge-on-read
+    * exists to kill (ScalingProbe pins the ratio). Adaptive sizing
+    * caps the base-side cost: without it parquet allocates the 1 MB
+    * default per column chunk. */
+  private def generationWriter(laidOut: DataFrame, keyCols: Seq[String],
+                               bloom: Boolean): DataFrameWriter[Row] = {
+    val base = laidOut.write
+    val writer =
+      if (!bloom) base
+      else keyCols.foldLeft(
+          base.option("parquet.bloom.filter.adaptive.enabled", "true")
+            .option("parquet.bloom.filter.max.bytes", (64 * 1024).toString)) {
+        (w, kc) => w.option(s"parquet.bloom.filter.enabled#$kc", "true")
+      }
+    writer.partitionBy("_bucket")
+  }
+
   private def writeEpoch(batch: DataFrame, keyCols: Seq[String], root: String,
                          nBuckets: Int, delete: Boolean, tag: String,
                          opCol: Option[String] = None,
                          evolve: Boolean = false,
                          tsMillis: Long = -1L): Long = {
-    require(!tag.contains(";") && !tag.contains("\n") && !tag.contains("@"),
-      s"commit tag must not contain ';', '@' or newlines: $tag")
-    val payloadCols = batch.columns.filterNot(c => opCol.contains(c))
-    require(!payloadCols.contains("_bucket") && !payloadCols.contains(OpField),
-      s"versioned store reserves '_bucket' and '$OpField'; rename the input's")
-    val spark = batch.sparkSession
-    val (fs, dir) = fsOf(root)
-    fs.mkdirs(dir)
-    writeMarker(fs, new Path(dir, "_keycols"), keyCols.mkString(","),
-      replace = false)
-    val n = bucketCount(fs, dir, nBuckets)
-    val committed = commits(root)
-    val epoch = committed.lastOption.map(_.epoch).getOrElse(0L) + 1L
-    val bucketExpr = pmod(hash(keyCols.map(col): _*), lit(n))
+    val w = beginWrite(batch, keyCols, root, nBuckets, tag, opCol)
+    import w.{bucketExpr, epoch, spark, storeDdl}
 
-    val snapChains = snapshotChains(root, committed, Long.MaxValue)
-    val storeDdl = schemaAsOfOpt(fs, dir,
-      committed.lastOption.map(_.epoch).getOrElse(0L))
+    val snapChains = snapshotChains(root, w.committed, Long.MaxValue)
     // one materialization; every later collect is ≤ n small ints
     val mat = batch.withColumn("_bucket", bucketExpr).localCheckpoint()
 
@@ -1392,27 +1430,14 @@ object VersionedStore {
     // (a silently mixed-schema generation breaks every later read).
     // Additive new columns (evolve = true) produce this epoch's target
     // schema; carried-forward generations read through it with the new
-    // columns as null. The evolution marker lands BEFORE the commit;
-    // a crash in between leaves an orphan for an uncommitted epoch,
-    // which no reader can resolve (readers stop at the committed
-    // epoch) and which the epoch's eventual writer overwrites/clears.
+    // columns as null.
     val targetDdl = (upserts, storeDdl) match {
       case (null, Some(prev)) => prev // pure delete: schema unchanged
       case (null, None) => sys.error("delete against an empty store")
       case (u: DataFrame, None) => ddlOf(u.schema)
       case (u: DataFrame, Some(prev)) => mergeSchemas(prev, u.schema, evolve)
     }
-    writeMarker(fs, new Path(dir, "_schema"), targetDdl, replace = false)
-    val schemaMarker = new Path(dir, f"_schema-$epoch%07d")
-    // same racing-committer guard as writeEpoch's (see there)
-    val epochRaced = fs.exists(new Path(dir, f"_commit-$epoch%07d"))
-    if (storeDdl.exists(_ != targetDdl)) {
-      if (epochRaced)
-        sys.error(s"concurrent writer conflict: epoch $epoch was committed " +
-          "by another writer while this schema-evolving commit staged — " +
-          "metadata changes conflict with every concurrent commit")
-      writeMarker(fs, schemaMarker, targetDdl, replace = true)
-    } else if (!epochRaced) fs.delete(schemaMarker, false) // evolver orphan
+    writeSchemaFence(w, targetDdl)
 
     // current content of the touched buckets, chain-resolved (a COW
     // epoch over a delta'd bucket implicitly compacts it: the new
@@ -1433,15 +1458,9 @@ object VersionedStore {
         upserts
     }
 
-    val token = stageAndPromote(spark, fs, dir, merged, touched, epoch,
-      keyCols, bloom = true)
-    // the transaction point: before this rename the epoch is invisible
-    val kind = (if (opCol.isDefined) "apply"
-                else if (delete) "delete" else "upsert") +
-      (if (tag.nonEmpty) s"@$tag" else "")
-    commitOrRebase(fs, dir, root, epoch, kind, touched, tsMillis,
-      committed, ownEvolved = storeDdl.exists(_ != targetDdl),
-      ownerToken = token)
+    val (token, _) = stageAndPromote(w, merged, Some(touched), bloom = true)
+    commitEpoch(w, if (opCol.isDefined) "apply" else if (delete) "delete"
+      else "upsert", touched, tsMillis, targetDdl, token)
   }
 
   /** RESTORE the store's CURRENT state to what it was at `epoch` — as
@@ -1492,39 +1511,32 @@ object VersionedStore {
                              asOf: Long,
                              only: Option[Set[Int]] = None): Map[Int, Chain] = {
     val (fs, dir) = fsOf(root)
-    val state = scala.collection.mutable.Map
-      .empty[Int, (Option[Long], List[Long])]
-    committed.iterator.takeWhile(_.epoch <= asOf).foreach { c =>
-      val delta = isDeltaKind(c.kind)
-      c.buckets.foreach { b =>
-        if (only.forall(_.contains(b))) {
-          if (delta) {
-            val (base, ds) = state.getOrElse(b, (None, Nil))
-            state(b) = (base, c.epoch :: ds)
-          } else state(b) = (Some(c.epoch), Nil)
-        }
-      }
-    }
+    val state = committed.iterator.takeWhile(_.epoch <= asOf)
+      .foldLeft(Map.empty: Serving)((m, c) =>
+        serve(m, c, b => only.forall(_.contains(b))))
     // existence/_EMPTY probes fan out on the driver pool: on an
     // object store each is a round trip, and a wide snapshot resolves
     // O(buckets) of them
     parallelMap(state.toSeq) { case (b, (base, dsDesc)) =>
-      def resolve(e: Long): Option[String] = {
-        val gen = new Path(dir, s"${bucketName(b)}/${genName(e)}")
-        // ONE listing instead of two existence probes (round-14: each
-        // probe is a round trip on an object store; a snapshot resolves
-        // O(buckets) of these)
-        val names =
-          try fs.listStatus(gen).map(_.getPath.getName).toSet
-          catch { case _: java.io.FileNotFoundException => Set.empty[String] }
-        require(names.contains("_SUCCESS"),
-          s"committed generation missing: $gen")
-        if (names.contains("_EMPTY")) None else Some(gen.toString)
-      }
+      def resolve(e: Long): Option[String] = resolveGeneration(fs, dir, b, e)
       b -> Chain(base.map(e => (e, resolve(e))),
         dsDesc.reverse.map(e => e -> resolve(e).getOrElse(
           sys.error(s"delta generation has no data files: bucket $b epoch $e"))))
     }.toMap
+  }
+
+  /** A committed generation's directory, None for an `_EMPTY` one:
+    * ONE listing instead of two existence probes (round-14: each probe
+    * is a round trip on an object store; a snapshot resolves O(buckets)
+    * of these). A generation without `_SUCCESS` fails loudly. */
+  private def resolveGeneration(fs: FileSystem, dir: Path, b: Int,
+                                e: Long): Option[String] = {
+    val gen = genDir(dir, b, e)
+    val names =
+      try fs.listStatus(gen).map(_.getPath.getName).toSet
+      catch { case _: java.io.FileNotFoundException => Set.empty[String] }
+    require(names.contains("_SUCCESS"), s"committed generation missing: $gen")
+    if (names.contains("_EMPTY")) None else Some(gen.toString)
   }
 
   /** One epoch's generation FILES per touched bucket — the streaming
@@ -1539,7 +1551,7 @@ object VersionedStore {
       : Seq[(Int, Seq[String])] = {
     val (fs, dir) = fsOf(root)
     parallelMap(buckets) { b =>
-      val gen = new Path(dir, s"${bucketName(b)}/${genName(epoch)}")
+      val gen = genDir(dir, b, epoch)
       val names =
         try fs.listStatus(gen)
         catch { case _: java.io.FileNotFoundException =>
@@ -1547,11 +1559,8 @@ object VersionedStore {
             "vacuumed under the stream; restart from a fresh snapshot")
         }
       if (names.exists(_.getPath.getName == "_EMPTY")) b -> Seq.empty[String]
-      else b -> names.map(_.getPath)
-        .filter { p =>
-          val nm = p.getName
-          nm.endsWith(".parquet") && !nm.startsWith(".") && !nm.startsWith("_")
-        }.map(_.toString).sorted.toSeq
+      else b -> names.map(_.getPath).filter(isPartFile)
+        .map(_.toString).sorted.toSeq
     }
   }
 
@@ -1625,7 +1634,7 @@ object VersionedStore {
             regexp_extract(input_file_name(), "/g(\\d{7})/", 1).cast("long"))
         val deltaBytes = parallelMap(deltaPaths) { g =>
           val (fs, p) = fsOf(g)
-          fs.listStatus(p).filter(_.getPath.getName.endsWith(".parquet"))
+          fs.listStatus(p).filter(st => isPartFile(st.getPath))
             .map(_.getLen).sum
         }.sum
         if (basePaths.isEmpty || deltaBytes <= DeltaBroadcastMaxBytes) {
@@ -1672,6 +1681,34 @@ object VersionedStore {
     }
   }
 
+  /** The snapshot preamble of every read: the commit log, and the
+    * epochs [from, to] the read serves (None = the current epoch),
+    * resolved once. `from` below the vacuum watermark fails fast (its
+    * generations may be gone), as does `to` beyond the current epoch
+    * (nothing committed to serve); `below(from, wm)` and
+    * `beyond(to, cur)` are the caller's error texts. */
+  private[graft] def resolveSnapshot(root: String, from: Option[Long],
+      to: Option[Long])(below: (Long, Long) => String,
+      beyond: (Long, Long) => String): (Seq[Commit], Long, Long) = {
+    val committed = commits(root)
+    val cur = committed.lastOption.map(_.epoch).getOrElse(0L)
+    val (f, t) = (from.getOrElse(cur), to.getOrElse(cur))
+    val wm = retentionWatermark(root)
+    require(f >= wm, below(f, wm))
+    require(t <= cur, beyond(t, cur))
+    (committed, f, t)
+  }
+
+  /** [[resolveSnapshot]] of a one-epoch read, its errors worded
+    * `<what> <epoch> is ...`: the commit log and the resolved epoch. */
+  private def snapshotAt(root: String, what: String,
+                         epoch: Option[Long]): (Seq[Commit], Long) = {
+    val (committed, e, _) = resolveSnapshot(root, epoch, epoch)(
+      (e, wm) => s"$what $e is below the vacuum retention watermark $wm",
+      (e, cur) => s"$what $e is beyond current epoch $cur")
+    (committed, e)
+  }
+
   /** Time-travel read: the exact store contents as of `epoch`, under
     * the schema IN FORCE at that epoch ([[schemaAsOf]] — a snapshot
     * predating a column addition never shows the column; a snapshot
@@ -1681,12 +1718,7 @@ object VersionedStore {
     * (those generations may be gone) and above the current epoch
     * (nothing committed to serve). */
   def readAsOf(spark: SparkSession, root: String, epoch: Long): DataFrame = {
-    val wm = retentionWatermark(root)
-    require(epoch >= wm,
-      s"asOf epoch $epoch is below the vacuum retention watermark $wm")
-    val committed = commits(root)
-    val cur = committed.lastOption.map(_.epoch).getOrElse(0L)
-    require(epoch <= cur, s"asOf epoch $epoch is beyond current epoch $cur")
+    val (committed, _) = snapshotAt(root, "asOf epoch", Some(epoch))
     val ddl = schemaAsOf(root, epoch)
     val chains = snapshotChains(root, committed, epoch).values
       .filter(_.paths.nonEmpty)
@@ -1726,13 +1758,8 @@ object VersionedStore {
     * generations. */
   def lookup(spark: SparkSession, root: String, keys: DataFrame,
              epoch: Long = Long.MaxValue): DataFrame = {
-    val committed = commits(root)
-    val cur = committed.lastOption.map(_.epoch).getOrElse(0L)
-    val e = if (epoch == Long.MaxValue) cur else epoch
-    val wm = retentionWatermark(root)
-    require(e >= wm,
-      s"lookup epoch $e is below the vacuum retention watermark $wm")
-    require(e <= cur, s"lookup epoch $e is beyond current epoch $cur")
+    val (committed, e) = snapshotAt(root, "lookup epoch",
+      Option.when(epoch != Long.MaxValue)(epoch))
     val keyCols = keyColsOf(root)
     val n = requireBucketCount(root)
     val ddl = schemaAsOf(root, e)
@@ -1878,13 +1905,8 @@ object VersionedStore {
     * regardless of how much the manifest pruned. */
   def readPruned(spark: SparkSession, root: String, colName: String,
                  lo: Any, hi: Any, epoch: Long = Long.MaxValue): DataFrame = {
-    val committed = commits(root)
-    val cur = committed.lastOption.map(_.epoch).getOrElse(0L)
-    val e = if (epoch == Long.MaxValue) cur else epoch
-    val wm = retentionWatermark(root)
-    require(e >= wm,
-      s"readPruned epoch $e is below the vacuum retention watermark $wm")
-    require(e <= cur, s"readPruned epoch $e is beyond current epoch $cur")
+    val (committed, e) = snapshotAt(root, "readPruned epoch",
+      Option.when(epoch != Long.MaxValue)(epoch))
     val ddl = schemaAsOf(root, e)
     val schema = StructType.fromDDL(ddl)
     require(schema.fieldNames.contains(colName),
@@ -1997,8 +2019,8 @@ object VersionedStore {
     * Driver-side cost is O(generations), not O(epochs × buckets): the
     * commit list is folded FORWARD once, maintaining the bucket →
     * serving-chain map incrementally (persistent-map snapshots share
-    * structure across epochs), and each generation's existence /
-    * `_EMPTY` probe runs once and is cached. */
+    * structure across epochs), and each generation is resolved once
+    * ([[resolveGeneration]], one listing) and cached. */
   def history(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
     val committed = commits(root)
@@ -2009,27 +2031,10 @@ object VersionedStore {
     val genPath =
       scala.collection.mutable.Map.empty[(Int, Long), Option[String]]
     def resolveGen(b: Int, e: Long): Option[String] =
-      genPath.getOrElseUpdate((b, e), {
-        val gen = new Path(dir, s"${bucketName(b)}/${genName(e)}")
-        require(fs.exists(new Path(gen, "_SUCCESS")),
-          s"committed generation missing: $gen")
-        if (fs.exists(new Path(gen, "_EMPTY"))) None else Some(gen.toString)
-      })
-    // fold forward ONCE: per epoch, each bucket's (base, deltas desc)
-    var serving = Map.empty[Int, (Option[Long], List[Long])]
-    val epochChains
-        : Seq[(Commit, Map[Int, (Option[Long], List[Long])])] =
-      committed.map { c =>
-        val delta = isDeltaKind(c.kind)
-        c.buckets.foreach { b =>
-          serving +=
-            (if (delta) {
-              val (base, ds) = serving.getOrElse(b, (None, Nil))
-              b -> (base, c.epoch :: ds)
-            } else b -> (Some(c.epoch), Nil))
-        }
-        (c, serving)
-      }
+      genPath.getOrElseUpdate((b, e), resolveGeneration(fs, dir, b, e))
+    // fold forward ONCE: per epoch, each bucket's serving chain
+    val epochChains: Seq[(Commit, Serving)] =
+      committed.zip(committed.scanLeft(Map.empty: Serving)(serve(_, _)).tail)
     // ---- plain (delta-free) serving entries: footer-counted
     val readable = epochChains.filter(_._1.epoch >= wm)
     val plainGens: Seq[String] = readable.flatMap(_._2.collect {
@@ -2038,10 +2043,7 @@ object VersionedStore {
     def genKey(g: String): String = new Path(g).toUri.getPath
     val fromFooters: Map[String, Option[Long]] =
       parallelMap(plainGens) { g =>
-        val files = fs.listStatus(new Path(g)).map(_.getPath).filter { p =>
-          val nm = p.getName
-          nm.endsWith(".parquet") && !nm.startsWith(".") && !nm.startsWith("_")
-        }
+        val files = fs.listStatus(new Path(g)).map(_.getPath).filter(isPartFile)
         val counts: Seq[Option[Long]] = files.toSeq.map { p =>
           try {
             val in = org.apache.parquet.hadoop.util.HadoopInputFile
@@ -2155,52 +2157,23 @@ object VersionedStore {
     * number of files published. */
   def exportSnapshot(spark: SparkSession, root: String, epoch: Long,
                      dest: String): Long = {
-    import org.apache.hadoop.fs.FileUtil
-    val wm = retentionWatermark(root)
-    require(epoch >= wm,
-      s"export epoch $epoch is below the vacuum retention watermark $wm")
-    val committed = commits(root)
-    val cur = committed.lastOption.map(_.epoch).getOrElse(0L)
-    require(epoch <= cur, s"export epoch $epoch is beyond current epoch $cur")
-    val (fs, _) = fsOf(root)
+    val (committed, _) = snapshotAt(root, "export epoch", Some(epoch))
+    val (fs, dir) = fsOf(root)
     val (dfs0, destPath) = fsOf(dest)
     dfs0.delete(destPath, true)
     dfs0.mkdirs(destPath)
     val chains = snapshotChains(root, committed, epoch)
-    // (source file, flat destination name) pairs — metadata only
+    // (source file, flat destination file) pairs — metadata only
     val pairs: Seq[(String, String)] = chains.toSeq.flatMap {
       case (b, ch) if ch.isPlain => ch.base.flatMap(_._2).toSeq.flatMap { gen =>
         fs.listStatus(new Path(gen)).map(_.getPath)
-          .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-          .map(p => (p.toString,
-            f"b$b%05d-${new Path(gen).getName}-${p.getName}"))
+          .filter(isPartFile).sortBy(_.getName)
+          .map(p => (p.toString, new Path(destPath,
+            f"b$b%05d-${new Path(gen).getName}-${p.getName}").toString))
       }
       case _ => Seq.empty
     }
-    if (pairs.nonEmpty) {
-      val confEntries: Array[(String, String)] = {
-        val it = spark.sparkContext.hadoopConfiguration.iterator()
-        val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-        while (it.hasNext) { val e = it.next(); out += ((e.getKey, e.getValue)) }
-        out.toArray
-      }
-      val destStr = destPath.toString
-      import spark.implicits._
-      spark.createDataset(pairs)
-        .repartition(math.min(pairs.size,
-          spark.sparkContext.defaultParallelism))
-        .foreachPartition { (it: Iterator[(String, String)]) =>
-          val conf = new org.apache.hadoop.conf.Configuration(false)
-          confEntries.foreach { case (k, v) => conf.set(k, v) }
-          val dp = new Path(destStr)
-          val dfs = dp.getFileSystem(conf)
-          it.foreach { case (from, to) =>
-            val fp = new Path(from)
-            FileUtil.copy(fp.getFileSystem(conf), fp, dfs, new Path(dp, to),
-              false, true, conf)
-          }
-        }
-    }
+    Sinks.copyFiles(spark, pairs)
     val ddl = schemaAsOf(root, epoch)
     // delta'd buckets: COMPACT-THEN-COPY (round-15) — their resolved
     // rows are materialized by one write job over only those chains,
@@ -2215,30 +2188,16 @@ object VersionedStore {
     if (morChains.nonEmpty) {
       val stagingDir = new Path(destPath, ".mor-staging")
       val keyCols = keyColsOf(root)
-      val srcN = readMarker(fs, new Path(fsOf(root)._2, "_nbuckets"))
-        .map(_.trim.toInt)
+      val srcN = readMarker(fs, new Path(dir, "_nbuckets")).map(_.trim.toInt)
       srcN match {
         case Some(n) =>
           val resolved = readChains(spark, keyCols, ddl, morChains.map(_._2))
             .withColumn("_bucket", pmod(hash(keyCols.map(col): _*), lit(n)))
-          keyCols.foldLeft(
-              resolved.repartition(morChains.size, col("_bucket"))
-                .sortWithinPartitions(col("_bucket") +: keyCols.map(col): _*)
-                .write
-                .option("parquet.bloom.filter.adaptive.enabled", "true")
-                .option("parquet.bloom.filter.max.bytes",
-                  (64 * 1024).toString)) {
-              (w, kc) => w.option(s"parquet.bloom.filter.enabled#$kc", "true")
-            }
-            .partitionBy("_bucket").mode("overwrite")
-            .parquet(stagingDir.toString)
+          generationWriter(bucketLayout(resolved, morChains.size, keyCols,
+              bloom = true), keyCols, bloom = true)
+            .mode("overwrite").parquet(stagingDir.toString)
           morChains.map(_._1).sorted.foreach { b =>
-            val staged = new Path(stagingDir, s"_bucket=$b")
-            val parts =
-              if (!dfs0.exists(staged)) Array.empty[Path]
-              else dfs0.listStatus(staged).map(_.getPath)
-                .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-            parts.zipWithIndex.foreach { case (p, i) =>
+            stagedParts(dfs0, stagingDir, b).zipWithIndex.foreach { case (p, i) =>
               require(dfs0.rename(p, new Path(destPath,
                 f"b$b%05d-g$epoch%07d-mor-$i%05d.parquet")),
                 s"export rename failed: $p")
@@ -2249,7 +2208,7 @@ object VersionedStore {
           readChains(spark, keyCols, ddl, morChains.map(_._2))
             .write.mode("overwrite").parquet(stagingDir.toString)
           val parts = dfs0.listStatus(stagingDir).map(_.getPath)
-            .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+            .filter(isPartFile).sortBy(_.getName)
           parts.zipWithIndex.foreach { case (p, i) =>
             require(dfs0.rename(p,
               new Path(destPath, f"mor-$epoch%07d-part-$i%05d.parquet")),
@@ -2270,8 +2229,7 @@ object VersionedStore {
       keyColsOf(root).mkString(","), replace = true)
     // the source's bucket geometry rides along so a geometry-matching
     // [[importSnapshot]] can byte-copy instead of re-shuffling
-    val (sfs, sDir) = fsOf(root)
-    readMarker(sfs, new Path(sDir, "_nbuckets")).foreach(n =>
+    readMarker(fs, new Path(dir, "_nbuckets")).foreach(n =>
       writeMarker(dfs0, new Path(destPath, "_nbuckets"), n, replace = true))
     dfs0.create(new Path(destPath, "_SUCCESS"), true).close()
     pairs.size.toLong + morFiles
@@ -2313,7 +2271,7 @@ object VersionedStore {
     val srcBuckets = readMarker(efs, new Path(eDir, "_nbuckets"))
       .map(_.trim.toInt)
     val files = efs.listStatus(eDir).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
+      .filter(isPartFile).sortBy(_.getName).toSeq
     val ExportName = "^b(\\d{5})-g\\d{7}-.*\\.parquet$".r
     val byBucket: Option[Map[Int, Seq[Path]]] =
       if (files.forall(f => ExportName.matches(f.getName)))
@@ -2338,39 +2296,16 @@ object VersionedStore {
       writeMarker(dfs, new Path(dDir, "_schema"), ddl, replace = false)
       val token = java.util.UUID.randomUUID().toString
       val epoch = 1L
-      val copyPairs: Seq[(String, String)] = byBucket.get.toSeq.flatMap {
+      Sinks.copyFiles(spark, byBucket.get.toSeq.flatMap {
         case (b, fs0) => fs0.sortBy(_.getName).zipWithIndex.map {
-          case (p, i) =>
-            (p.toString,
-              s"${bucketName(b)}/${genName(epoch)}/" + f"part-$i%05d.parquet")
+          case (p, i) => (p.toString,
+            new Path(genDir(dDir, b, epoch), f"part-$i%05d.parquet").toString)
         }
-      }
-      val confEntries: Array[(String, String)] = {
-        val it = spark.sparkContext.hadoopConfiguration.iterator()
-        val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-        while (it.hasNext) { val e = it.next(); out += ((e.getKey, e.getValue)) }
-        out.toArray
-      }
-      val destStr = dDir.toString
-      import spark.implicits._
-      spark.createDataset(copyPairs)
-        .repartition(math.min(copyPairs.size,
-          spark.sparkContext.defaultParallelism))
-        .foreachPartition { (it: Iterator[(String, String)]) =>
-          val conf = new org.apache.hadoop.conf.Configuration(false)
-          confEntries.foreach { case (k, v) => conf.set(k, v) }
-          val dp = new Path(destStr)
-          val dfs1 = dp.getFileSystem(conf)
-          it.foreach { case (from, to) =>
-            val fp = new Path(from)
-            org.apache.hadoop.fs.FileUtil.copy(fp.getFileSystem(conf), fp,
-              dfs1, new Path(dp, to), false, true, conf)
-          }
-        }
+      })
       val touched = byBucket.get.keys.toSeq.sorted
       val statSchema = StructType.fromDDL(ddl)
       parallelMap(touched) { b =>
-        val gen = new Path(dDir, s"${bucketName(b)}/${genName(epoch)}")
+        val gen = genDir(dDir, b, epoch)
         DataSkipping.collectAndWrite(dfs, gen, statSchema)
         Sinks.createSmallFile(dfs, new Path(gen, "_SUCCESS"),
           token.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -2420,12 +2355,10 @@ object VersionedStore {
                 images: Boolean = false): DataFrame = {
     require(fromEpoch <= toEpoch,
       s"changelog range is reversed: $fromEpoch > $toEpoch")
-    val wm = retentionWatermark(root)
-    require(fromEpoch >= wm,
-      s"changelog from-epoch $fromEpoch is below the vacuum watermark $wm")
-    val committed = commits(root)
-    val cur = committed.lastOption.map(_.epoch).getOrElse(0L)
-    require(toEpoch <= cur, s"changelog to-epoch $toEpoch beyond current $cur")
+    val (committed, _, _) =
+      resolveSnapshot(root, Some(fromEpoch), Some(toEpoch))(
+        (e, wm) => s"changelog from-epoch $e is below the vacuum watermark $wm",
+        (e, cur) => s"changelog to-epoch $e beyond current $cur")
     val keyCols = keyColsOf(root)
 
     val changedBuckets = committed

@@ -225,11 +225,15 @@ object InventoryReader {
       if (nCorrupt > 0)
         corrupt.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .text(s"$outDir.corrupt")
-      else
+      else {
         // reconcile a STALE quarantine from a previous run over the
-        // same outDir — the audit trail must describe THIS input
-        graft.sinks.Sinks.deleteRecursively(
-          java.nio.file.Paths.get(s"$outDir.corrupt"))
+        // same outDir — the audit trail must describe THIS input;
+        // deleted through its own Hadoop filesystem so a `file:`/`s3a:`
+        // outDir loses it too
+        val stale = new org.apache.hadoop.fs.Path(s"$outDir.corrupt")
+        stale.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .delete(stale, true)
+      }
       // count what was actually written: the bucket-partitioned layout
       // produces per-dir file counts unrelated to the round-robin
       // estimate, and an audit must describe the real output

@@ -127,44 +127,18 @@ object FreqStream {
       .start()
   }
 
-  /** Phased-replay harness (mirrors
-    * [[StreamDistinct.replayEstimates]]): drive [[frequent]] over
-    * `phases` (each a (k STRING, v STRING) frame landed as one
-    * micro-batch group under `root`) and return the LATEST emission
-    * SET per key — for MG that is every row of the key's most recent
-    * batch emission, since a later batch re-emits the key's whole
-    * summary. */
+  /** Phased-replay harness ([[StreamSessions.replayLatest]]): drive
+    * [[frequent]] over `phases` (each a (k STRING, v STRING) frame
+    * landed as one micro-batch group under `root`) and return the
+    * LATEST emission SET per key — for MG that is every row of the
+    * key's most recent batch emission, since a later batch re-emits
+    * the key's whole summary. */
   def replayFrequent(spark: SparkSession, phases: Seq[DataFrame],
                      root: String, k: Int): DataFrame = {
-    require(phases.nonEmpty, "replayFrequent needs at least one phase")
     import spark.implicits._
-    val inDir = s"$root/in"
-    val updDir = s"$root/upd"
-    phases.head.write.parquet(inDir)
-    val q = frequent(
-        StreamSessions.microBatch(spark).readStream.schema("k STRING, v STRING").parquet(inDir)
-          .as[(String, String)], k)
-      .toDF()
-      .writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .outputMode("update")
-      .foreachBatch { (df: DataFrame, bid: Long) =>
-        df.withColumn("_bid", lit(bid)).write.mode("append").parquet(updDir)
-        ()
-      }
-      .start()
-    try {
-      q.processAllAvailable()
-      phases.tail.foreach { p =>
-        p.write.mode("append").parquet(inDir)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val latestBid = spark.read.parquet(updDir)
-      .groupBy("k").agg(max(col("_bid")).as("_bid"))
-    spark.read.parquet(updDir)
-      .join(latestBid, Seq("k", "_bid"))
-      .select("k", "n_total", "item", "cnt")
+    StreamSessions.replayLatest(spark, phases, root, "k STRING, v STRING") {
+      in => frequent(in.as[(String, String)], k).toDF()
+    }("k", "n_total", "item", "cnt")
   }
 }
 

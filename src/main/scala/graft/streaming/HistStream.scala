@@ -87,40 +87,15 @@ object HistStream {
       .start()
   }
 
-  /** Phased-replay harness (mirrors [[FreqStream.replayFrequent]]):
-    * drive [[histogram]] over `phases` (each a (k STRING, v BIGINT)
-    * frame landed as one micro-batch group under `root`) and return
-    * the LATEST emission set per key. */
+  /** Phased-replay harness ([[StreamSessions.replayLatest]]): drive
+    * [[histogram]] over `phases` (each a (k STRING, v BIGINT) frame
+    * landed as one micro-batch group under `root`) and return the
+    * LATEST emission set per key. */
   def replayHistogram(spark: SparkSession, phases: Seq[DataFrame],
                       root: String): DataFrame = {
-    require(phases.nonEmpty, "replayHistogram needs at least one phase")
     import spark.implicits._
-    val inDir = s"$root/in"
-    val updDir = s"$root/upd"
-    phases.head.write.parquet(inDir)
-    val q = histogram(
-        StreamSessions.microBatch(spark).readStream.schema("k STRING, v BIGINT").parquet(inDir)
-          .as[(String, Option[Long])])
-      .toDF()
-      .writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .outputMode("update")
-      .foreachBatch { (df: DataFrame, bid: Long) =>
-        df.withColumn("_bid", lit(bid)).write.mode("append").parquet(updDir)
-        ()
-      }
-      .start()
-    try {
-      q.processAllAvailable()
-      phases.tail.foreach { p =>
-        p.write.mode("append").parquet(inDir)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val latestBid = spark.read.parquet(updDir)
-      .groupBy("k").agg(max(col("_bid")).as("_bid"))
-    spark.read.parquet(updDir)
-      .join(latestBid, Seq("k", "_bid"))
-      .select("k", "bucket", "n")
+    StreamSessions.replayLatest(spark, phases, root, "k STRING, v BIGINT") {
+      in => histogram(in.as[(String, Option[Long])]).toDF()
+    }("k", "bucket", "n")
   }
 }

@@ -102,27 +102,28 @@ object SketchStream {
       })(SketchEncoderHelp.cmsState, Encoders.product[KeyCell])
   }
 
-  /** Phased-replay harness for [[kmv]] (mirrors
-    * [[FreqStream.replayFrequent]]): land each phase as one
+  /** Phased-replay harness for [[kmv]]
+    * ([[StreamSessions.replayLatest]]): land each phase as one
     * micro-batch, return the LATEST emission per key as
     * (k, n_seen, kmv). */
   def replayKmv(spark: SparkSession, phases: Seq[DataFrame],
-                root: String, k: Int): DataFrame =
-    replay(spark, phases, root) { in => kmv(in, k).toDF() } { upd =>
-      val latest = upd.groupBy("k").agg(max(col("_bid")).as("_bid"))
-      upd.join(latest, Seq("k", "_bid")).select("k", "n_seen", "kmv")
-    }
+                root: String, k: Int): DataFrame = {
+    import spark.implicits._
+    StreamSessions.replayLatest(spark, phases, root, "k STRING, v STRING") {
+      in => kmv(in.as[(String, String)], k).toDF()
+    }("k", "n_seen", "kmv")
+  }
 
   /** Phased-replay harness for [[cms]]: land each phase as one
     * micro-batch, return the latest full grid per key as
     * (k, d, c, cnt). */
   def replayCms(spark: SparkSession, phases: Seq[DataFrame],
-                root: String, depth: Int, width: Int): DataFrame =
-    replay(spark, phases, root) { in => cms(in, depth, width).toDF() } {
-      upd =>
-        val latest = upd.groupBy("k").agg(max(col("_bid")).as("_bid"))
-        upd.join(latest, Seq("k", "_bid")).select("k", "d", "c", "cnt")
-    }
+                root: String, depth: Int, width: Int): DataFrame = {
+    import spark.implicits._
+    StreamSessions.replayLatest(spark, phases, root, "k STRING, v STRING") {
+      in => cms(in.as[(String, String)], depth, width).toDF()
+    }("k", "d", "c", "cnt")
+  }
 
   /** [[kmv]] maintained as an MVCC LEDGER: a checkpointed consumer of
     * `(k STRING, v STRING)` landing files whose every micro-batch
@@ -169,36 +170,6 @@ object SketchStream {
     require(bad == 0, s"KMV ledger at $storeRoot holds $bad rows built " +
       s"with a different k than $k — setOps estimates would silently skew")
     df.drop("k_param")
-  }
-
-  private def replay(spark: SparkSession, phases: Seq[DataFrame],
-                     root: String)(
-      mk: Dataset[(String, String)] => DataFrame)(
-      finish: DataFrame => DataFrame): DataFrame = {
-    require(phases.nonEmpty, "replay needs at least one phase")
-    import spark.implicits._
-    val inDir = s"$root/in"
-    val updDir = s"$root/upd"
-    phases.head.write.parquet(inDir)
-    val q = mk(
-        StreamSessions.microBatch(spark).readStream.schema("k STRING, v STRING").parquet(inDir)
-          .as[(String, String)])
-      .writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .outputMode("update")
-      .foreachBatch { (df: DataFrame, bid: Long) =>
-        df.withColumn("_bid", lit(bid)).write.mode("append").parquet(updDir)
-        ()
-      }
-      .start()
-    try {
-      q.processAllAvailable()
-      phases.tail.foreach { p =>
-        p.write.mode("append").parquet(inDir)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    finish(spark.read.parquet(updDir))
   }
 }
 

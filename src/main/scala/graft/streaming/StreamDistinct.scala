@@ -65,46 +65,16 @@ object StreamDistinct {
           }
       })(Encoders.BINARY, Encoders.product[Estimate])
 
-  /** Phased-replay harness: drive [[estimates]] over `phases` (each a
-    * (k STRING, v STRING) frame landed as one micro-batch group under
-    * `root`) and return the LATEST emission per key — the running
-    * answer after the whole stream. One copy of the replay plumbing,
-    * shared by the q120 gate and StreamDistinctSpec, so the batch-id
-    * tagging and latest-per-key selection cannot drift between them.
-    * The streaming query is always stopped, even when a phase write or
-    * batch fails — an orphaned file-source stream would keep polling
-    * `root` for the rest of the session. */
+  /** Phased-replay harness ([[StreamSessions.replayLatest]]): drive
+    * [[estimates]] over `phases` (each a (k STRING, v STRING) frame
+    * landed as one micro-batch group under `root`) and return the
+    * LATEST emission per key — the running answer after the whole
+    * stream (each batch emits at most one row per key). */
   def replayEstimates(spark: SparkSession, phases: Seq[DataFrame],
                       root: String): DataFrame = {
-    require(phases.nonEmpty, "replayEstimates needs at least one phase")
     import spark.implicits._
-    val inDir = s"$root/in"
-    val updDir = s"$root/upd"
-    phases.head.write.parquet(inDir)
-    val q = estimates(
-        StreamSessions.microBatch(spark).readStream.schema("k STRING, v STRING").parquet(inDir)
-          .as[(String, String)])
-      .toDF()
-      .writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .outputMode("update")
-      .foreachBatch { (df: DataFrame, bid: Long) =>
-        df.withColumn("_bid", lit(bid)).write.mode("append").parquet(updDir)
-        ()
-      }
-      .start()
-    try {
-      q.processAllAvailable()
-      phases.tail.foreach { p =>
-        p.write.mode("append").parquet(inDir)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("k")).orderBy(col("_bid").desc)
-    spark.read.parquet(updDir)
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .select("k", "zero_regs", "estimate")
+    StreamSessions.replayLatest(spark, phases, root, "k STRING, v STRING") {
+      in => estimates(in.as[(String, String)]).toDF()
+    }("k", "zero_regs", "estimate")
   }
 }

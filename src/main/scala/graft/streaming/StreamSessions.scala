@@ -100,4 +100,44 @@ object StreamSessions {
     threads.foreach(_.join())
     if (failure.get() != null) throw failure.get()
   }
+
+  /** Phased-replay harness of the sketch streams ([[HistStream]],
+    * [[FreqStream]], [[StreamDistinct]], [[SketchStream]]), shared by
+    * their oracle gates and specs: `phases.head` lands under
+    * `root/in`, `query` runs over a file stream of `schema` there, and
+    * each further phase lands and drains with `processAllAvailable`,
+    * so every phase is its own micro-batch group. The stream is always
+    * stopped, even when a phase write or batch fails — an orphaned
+    * file-source stream would keep polling `root` for the rest of the
+    * session. Returns `cols` of each key's LATEST emission set (every
+    * row `k` emitted in its newest batch: a later batch re-emits the
+    * key's whole summary). */
+  private[streaming] def replayLatest(spark: SparkSession,
+      phases: Seq[DataFrame], root: String, schema: String)(
+      query: DataFrame => DataFrame)(cols: String*): DataFrame = {
+    require(phases.nonEmpty, "replay needs at least one phase")
+    import org.apache.spark.sql.functions.{col, lit, max}
+    val inDir = s"$root/in"
+    val updDir = s"$root/upd"
+    phases.head.write.parquet(inDir)
+    val q = query(microBatch(spark).readStream.schema(schema).parquet(inDir))
+      .writeStream
+      .option("checkpointLocation", s"$root/ckpt")
+      .outputMode("update")
+      .foreachBatch { (df: DataFrame, bid: Long) =>
+        df.withColumn("_bid", lit(bid)).write.mode("append").parquet(updDir)
+        ()
+      }
+      .start()
+    try {
+      q.processAllAvailable()
+      phases.tail.foreach { p =>
+        p.write.mode("append").parquet(inDir)
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    val upd = spark.read.parquet(updDir)
+    val latest = upd.groupBy("k").agg(max(col("_bid")).as("_bid"))
+    upd.join(latest, Seq("k", "_bid")).select(cols.map(col): _*)
+  }
 }

@@ -37,9 +37,6 @@ object TaskPipeline {
     StructField("ETag", StringType),
     StructField("dst_bucket", StringType)))
 
-  def readQueue(spark: SparkSession, queueDir: String): DataFrame =
-    graft.connectors.FileQueue(queueDir, messageSchema).readStream(spark)
-
   /** Unpack message bodies into per-object actions (§2.10(5)). */
   def unpack(messages: DataFrame): DataFrame =
     messages

@@ -248,30 +248,35 @@ class AzureDiffJobSpec extends SparkSpec {
   import spark.implicits._
 
   test("diff csv -> events -> ledger-dedup -> queue, idempotent across runs") {
-    val root = tmpDir("azdiff")
-    val csv =
-      """Storage-Account,Name,Creation-Time,Last-Modified,Etag,Content-Length,Variance
-        |sa1,blob/new.bin,2021-01-01T00:00:00Z,2021-01-02T00:00:00Z,0xA,100,New
-        |sa1,blob/upd.bin,2021-01-01T00:00:00Z,2021-01-03T00:00:00Z,0xB,200,update
-        |sa1,blob/del.bin,2021-01-01T00:00:00Z,2021-01-04T00:00:00Z,0xC,300,Delete
-        |sa1,blob/bad.bin,2021-01-01T00:00:00Z,2021-01-05T00:00:00Z,0xD,garbage,New""".stripMargin
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$root/diff.csv"), csv)
+    // a plain local root and the same kind of root `file:`-qualified: the
+    // second run must find the first run's ledger under either spelling
+    for (scheme <- Seq("", "file:")) {
+      val local = tmpDir("azdiff")
+      val root = scheme + local
+      val csv =
+        """Storage-Account,Name,Creation-Time,Last-Modified,Etag,Content-Length,Variance
+          |sa1,blob/new.bin,2021-01-01T00:00:00Z,2021-01-02T00:00:00Z,0xA,100,New
+          |sa1,blob/upd.bin,2021-01-01T00:00:00Z,2021-01-03T00:00:00Z,0xB,200,update
+          |sa1,blob/del.bin,2021-01-01T00:00:00Z,2021-01-04T00:00:00Z,0xC,300,Delete
+          |sa1,blob/bad.bin,2021-01-01T00:00:00Z,2021-01-05T00:00:00Z,0xD,garbage,New""".stripMargin
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$local/diff.csv"), csv)
 
-    val r1 = graft.exec.AzureDiffJob.run(spark, s"$root/diff.csv",
-      s"$root/ledger", s"$root/queue", queues = 2, batchSize = 2)
-    assert(r1.rows == 4 && r1.badLength == 1 && r1.enqueued == 4 && r1.skipped == 0)
+      val r1 = graft.exec.AzureDiffJob.run(spark, s"$root/diff.csv",
+        s"$root/ledger", s"$root/queue", queues = 2, batchSize = 2)
+      assert(r1.rows == 4 && r1.badLength == 1 && r1.enqueued == 4 && r1.skipped == 0)
 
-    // messages unpack to events with the right type dispatch
-    val msgs = spark.read.json(s"$root/queue")
-    val bodies = msgs.select("body").as[String].collect().mkString
-    assert(bodies.contains("BlobDeleted") && bodies.contains("BlobCreated"))
-    assert(msgs.agg(sum("n_objects")).first().getLong(0) == 4)
+      // messages unpack to events with the right type dispatch
+      val msgs = spark.read.json(s"$root/queue")
+      val bodies = msgs.select("body").as[String].collect().mkString
+      assert(bodies.contains("BlobDeleted") && bodies.contains("BlobCreated"))
+      assert(msgs.agg(sum("n_objects")).first().getLong(0) == 4)
 
-    // second run over the SAME diff: ledger suppresses every event
-    val r2 = graft.exec.AzureDiffJob.run(spark, s"$root/diff.csv",
-      s"$root/ledger", s"$root/queue", queues = 2, batchSize = 2)
-    assert(r2.enqueued == 0 && r2.skipped == 4)
-    assert(spark.read.json(s"$root/queue").agg(sum("n_objects")).first().getLong(0) == 4)
+      // second run over the SAME diff: ledger suppresses every event
+      val r2 = graft.exec.AzureDiffJob.run(spark, s"$root/diff.csv",
+        s"$root/ledger", s"$root/queue", queues = 2, batchSize = 2)
+      assert(r2.enqueued == 0 && r2.skipped == 4, s"root '$root': $r2")
+      assert(spark.read.json(s"$root/queue").agg(sum("n_objects")).first().getLong(0) == 4)
+    }
   }
 }
 
@@ -561,22 +566,27 @@ class NormalizeInventorySpec extends SparkSpec {
 class NormalizeLifecycleSpec extends SparkSpec {
 
   test("re-normalizing a fixed input clears the stale corrupt quarantine") {
-    val root = tmpDir("normfix")
-    TestFixtures.writeS3InventoryGz(s"$root/bad", "s0",
-      TestFixtures.defaultInventoryRows.take(2),
-      malformedLines = Seq("\"oops\""))
-    TestFixtures.writeS3InventoryGz(s"$root/good", "s0",
-      TestFixtures.defaultInventoryRows.take(2))
-    val out = s"$root/pq"
-    val r1 = graft.sources.InventoryReader.normalizeInventory(
-      spark, s"$root/bad/*.csv.gz", out)
-    assert(r1.corrupt == 1)
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$out.corrupt")))
-    // same outDir, clean input: the audit trail must describe THIS run
-    val r2 = graft.sources.InventoryReader.normalizeInventory(
-      spark, s"$root/good/*.csv.gz", out)
-    assert(r2.corrupt == 0)
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$out.corrupt")))
+    // a plain local outDir and a `file:`-qualified one: the stale
+    // quarantine must go under either spelling
+    for (scheme <- Seq("", "file:")) {
+      val root = tmpDir("normfix")
+      TestFixtures.writeS3InventoryGz(s"$root/bad", "s0",
+        TestFixtures.defaultInventoryRows.take(2),
+        malformedLines = Seq("\"oops\""))
+      TestFixtures.writeS3InventoryGz(s"$root/good", "s0",
+        TestFixtures.defaultInventoryRows.take(2))
+      val out = s"$scheme$root/pq"
+      val quarantine = java.nio.file.Paths.get(s"$root/pq.corrupt")
+      val r1 = graft.sources.InventoryReader.normalizeInventory(
+        spark, s"$root/bad/*.csv.gz", out)
+      assert(r1.corrupt == 1)
+      assert(java.nio.file.Files.exists(quarantine))
+      // same outDir, clean input: the audit trail must describe THIS run
+      val r2 = graft.sources.InventoryReader.normalizeInventory(
+        spark, s"$root/good/*.csv.gz", out)
+      assert(r2.corrupt == 0)
+      assert(!java.nio.file.Files.exists(quarantine), s"outDir '$out'")
+    }
   }
 
   test("a failed normalize write still releases the scan cache") {
