@@ -4,9 +4,10 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** The one way to measure a block of driver code: Bench, the `Profile`
   * main and the job-count specs all read a [[Meter.Cost]], and this is
@@ -20,9 +21,11 @@ object Meter {
 
   /** `tasks` is the planned task count over the job's stages. Times are
     * the events' own epoch millis; `endMs` is -1 for a job still
-    * running when the body returned. */
+    * running when the body returned. `callSite` names the action that
+    * submitted the job (`count at Foo.scala:12`), so a job nobody
+    * labelled still says where it came from. */
   final case class Job(id: Int, startMs: Long, endMs: Long,
-                       description: String, tasks: Int)
+                       description: String, callSite: String, tasks: Int)
 
   final case class Stage(id: Int, name: String, tasks: Int, runMs: Long,
                          cpuMs: Long, gcMs: Long, shuffleBytes: Long,
@@ -45,6 +48,12 @@ object Meter {
     val starts = new ConcurrentLinkedQueue[SparkListenerJobStart]
     val ends = new ConcurrentHashMap[Int, Long]
     val stages = new ConcurrentLinkedQueue[Stage]
+    /** SQL execution id → the call site of the action that started it. */
+    val sqlSites = new ConcurrentHashMap[Long, String]
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => sqlSites.put(s.executionId, s.description); ()
+      case _ => ()
+    }
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       starts.add(e); ()
     }
@@ -94,11 +103,19 @@ object Meter {
       val ms1 = System.currentTimeMillis()
       org.apache.spark.GraftBus.drain(sc)
       val jobs = rec.starts.asScala.toSeq.sortBy(_.jobId).map { e =>
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        val desc = prop("spark.job.description").getOrElse("")
+        // an AQE stage job runs on a pool thread, so its own call site
+        // names the pool: take its SQL execution's, which is the
+        // action's unless a label replaced it (then `desc` names the
+        // job). Else the result stage, created last, is named after the
+        // call site.
+        val site = prop("callSite.short")
+          .orElse(prop("spark.sql.execution.id").filter(_ => desc.isEmpty)
+            .flatMap(id => Option(rec.sqlSites.get(id.toLong))))
+          .orElse(e.stageInfos.sortBy(_.stageId).lastOption.map(_.name))
         Job(e.jobId, e.time, rec.ends.getOrDefault(e.jobId, -1L),
-          desc, e.stageInfos.map(_.numTasks).sum)
+          desc, site.getOrElse(""), e.stageInfos.map(_.numTasks).sum)
       }
       val busyMs = unionMs(jobs.map(j =>
         (math.max(j.startMs, ms0), if (j.endMs < 0) ms1 else math.min(j.endMs, ms1))))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Fns
 import graft.ops.{Dedup, EventJson, TaskFanout}
+import graft.sinks.Sinks
 
 /** Module-I pipeline (AzureTaskProducer, SURVEY §2.1 S6 / §2.2 P8 /
   * §2.7 F9-F10 / §2.3 J2-J3 / §2.8 K1): inventory-diff CSV → variance
@@ -96,23 +97,23 @@ object AzureDiffJob {
         Dedup.antiJoin(events, spark.read.parquet(ledgerDir), Seq("msg_id"))
       else events
     val freshC = fresh.cache()
-    val enqueued = freshC.count()
-    val skipped = totalRows - enqueued
-
-    if (enqueued > 0) {
-      // K1: ≤batchSize events per message, hash-routed across queues
-      TaskFanout.pack(
+    try {
+      // K1: ≤batchSize events per message, hash-routed across queues;
+      // the write observes how many events it enqueued, so no count
+      // job runs before it and an empty diff lands no file
+      val sent = Sinks.appendFiles(
+        TaskFanout.pack(
           freshC.select(col("msg_id"), col("event_json")),
           abs(hash(col("msg_id")).cast("bigint")), Seq(col("msg_id")),
-          queues, batchSize)
-        .write.mode(SaveMode.Append).json(queueDir)
+          queues, batchSize),
+        queueDir, "json", sum(col("n_objects")).as("events"))
+      val enqueued = sent("events")
       // record the batch in the ledger AFTER the send
       // (inventory_lib.py:179-191)
-      freshC.select("msg_id")
-        .write.mode(SaveMode.Append).parquet(ledgerDir)
-    }
-    val r = Result(totalRows, badLength, enqueued, skipped)
-    typed.unpersist(); freshC.unpersist()
-    r
+      if (enqueued > 0)
+        freshC.select("msg_id")
+          .write.mode(SaveMode.Append).parquet(ledgerDir)
+      Result(totalRows, badLength, enqueued, totalRows - enqueued)
+    } finally { typed.unpersist(); freshC.unpersist(); () }
   }
 }

@@ -25,12 +25,21 @@ object SizeHistogram {
   /** Cumulative histogram of `size` with the given ascending thresholds.
     * Output: one row — total_objects, total_size, sub_<t> per threshold. */
   def apply(df: DataFrame, size: Column, thresholds: Seq[Long] = ReferenceThresholds): DataFrame = {
-    val buckets = thresholds.map { t =>
-      sum(when(size <= t, 1L).otherwise(0L)).as(s"sub_$t")
-    }
-    val cols = count(lit(1)).as("total_objects") +:
-      sum(size).cast("bigint").as("total_size") +: buckets
+    val cols = columns(size, thresholds)
     df.agg(cols.head, cols.tail: _*)
+  }
+
+  /** The histogram's aggregates over the rows where `rows` holds:
+    * total_objects, total_size, then the cumulative sub_<t> per
+    * threshold. The one statement of the bucket rule: [[apply]],
+    * [[byGroup]] and observations over a wider scan all use it. */
+  def columns(size: Column, thresholds: Seq[Long] = ReferenceThresholds,
+              rows: Column = lit(true)): Seq[Column] = {
+    val buckets = thresholds.map { t =>
+      sum(when(rows && size <= t, 1L).otherwise(0L)).as(s"sub_$t")
+    }
+    count(when(rows, 1L)).as("total_objects") +:
+      sum(when(rows, size)).cast("bigint").as("total_size") +: buckets
   }
 
   /** One-pass struct result (SURVEY §2.10.2's idiomatic packaging). */
@@ -79,11 +88,7 @@ object SizeHistogram {
   /** Per-group variant (A2 per-file stats then rolled up = one groupBy). */
   def byGroup(df: DataFrame, group: Column, size: Column,
               thresholds: Seq[Long] = ReferenceThresholds): DataFrame = {
-    val buckets = thresholds.map { t =>
-      sum(when(size <= t, 1L).otherwise(0L)).as(s"sub_$t")
-    }
-    val cols = count(lit(1)).as("total_objects") +:
-      sum(size).cast("bigint").as("total_size") +: buckets
+    val cols = columns(size, thresholds)
     df.groupBy(group).agg(cols.head, cols.tail: _*)
   }
 }

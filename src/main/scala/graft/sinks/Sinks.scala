@@ -162,23 +162,42 @@ object Sinks {
     } finally in.close()
   }
 
-  /** K5 — single-document JSON write (job.json manifest write-back,
-    * ListProducer.py:157; s3_utils.py:37-41). A manifest is one nested
-    * document, not a table, so the render is a driver-side single-row
-    * `toJSON`; the write is atomic via temp-file rename. */
-  def writeJsonDoc(df: DataFrame, path: String): Unit = {
-    val doc = df.toJSON.collect() match {
+  /** K5 — single-document JSON write of a frame. A document is not a
+    * table, so the render is a driver-side single-row `toJSON`; the
+    * write is atomic via temp-file rename. */
+  def writeJsonDoc(df: DataFrame, path: String): Unit =
+    writeDoc(path, df.toJSON.collect() match {
       case Array(one) => one
       case rows => rows.mkString("[", ",", "]")
-    }
-    val (fs, p) = fsOf(path)
-    if (p.getParent != null) fs.mkdirs(p.getParent)
-    writeMarker(fs, p, doc, replace = true)
-  }
+    })
 
   /** K5 readback verify (ListProducer.py:159-161). */
   def readJsonDoc(spark: SparkSession, path: String): DataFrame =
     spark.read.option("multiLine", "true").json(path)
+
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** K5 — writes a JSON document built on the driver (the job.json
+    * write-back, ListProducer.py:157; s3_utils.py:37-41) atomically,
+    * with its keys in the tree's order. No Spark job. */
+  def writeJsonTree(doc: com.fasterxml.jackson.databind.JsonNode, path: String): Unit =
+    writeDoc(path, Json.writeValueAsString(doc))
+
+  /** Reads one JSON document through its path's own Hadoop filesystem:
+    * a manifest, or a [[writeJsonTree]] readback (ListProducer.py:
+    * 159-161). Keys keep the file's order; no Spark job, no schema
+    * inference. */
+  def readJsonTree(path: String): com.fasterxml.jackson.databind.JsonNode = {
+    val (fs, p) = fsOf(path)
+    Json.readTree(readMarker(fs, p).getOrElse(
+      throw new java.io.FileNotFoundException(s"no JSON document at $path")))
+  }
+
+  private def writeDoc(path: String, doc: String): Unit = {
+    val (fs, p) = fsOf(path)
+    if (p.getParent != null) fs.mkdirs(p.getParent)
+    writeMarker(fs, p, doc, replace = true)
+  }
 
   /** Byte-copies each (from, to) file pair ON EXECUTORS in one Spark
     * job: no row is decoded, no shuffle runs, and no byte passes the
@@ -209,13 +228,33 @@ object Sinks {
       }
   }
 
-  /** How long [[appendFiles]] waits for its write's observed metrics,
-    * which the listener bus delivers after the write job ends. */
+  /** How long [[observed]] waits for an action's observed metrics,
+    * which the listener bus delivers after the action's last job ends. */
   private val ObservedWait = scala.concurrent.duration.Duration(60, "s")
+
+  /** The named long metrics `obs` collected over the action that carried
+    * it (a null aggregate, e.g. the sum of no rows, reads 0). Empty when
+    * the action's final plan lost the observed node: AQE replaces a
+    * stage whose output is empty, and an observation inside it, with
+    * an empty relation. Throws if the metrics do not arrive; `what`
+    * names the action in that error. */
+  private[graft] def observed(obs: Observation, what: String): Map[String, Long] = {
+    val row =
+      try scala.concurrent.Await.result(obs.future, ObservedWait)
+      catch {
+        case e: java.util.concurrent.TimeoutException =>
+          throw new IllegalStateException(s"no observed metrics for $what", e)
+      }
+    if (row.schema == null) Map.empty else longs(row)
+  }
+
+  /** A row of named long aggregates as a map; a null reads 0. */
+  private[graft] def longs(row: org.apache.spark.sql.Row): Map[String, Long] =
+    row.schema.fieldNames.map(n => n -> row.getAs[Long](n)).toMap
 
   /** Appends `df` to `dir` as `format` files in ONE write job and
     * returns what that job observed: the row count under "rows", plus
-    * each of `observed` (named count aggregates) under its own name.
+    * each of `observed` (named long aggregates) under its own name.
     *
     * The job writes into a hidden `_`-prefixed staging dir under `dir`,
     * which file-stream and batch readers skip as they skip
@@ -235,14 +274,7 @@ object Sinks {
     try {
       df.observe(obs, count(lit(1)).as("rows"), observed: _*)
         .write.format(format).save(staging.toString)
-      val row =
-        try scala.concurrent.Await.result(obs.future, ObservedWait)
-        catch {
-          case e: java.util.concurrent.TimeoutException =>
-            throw new IllegalStateException(
-              s"no observed metrics for the write to $dir", e)
-        }
-      val metrics = row.schema.fieldNames.map(n => n -> row.getAs[Long](n)).toMap
+      val metrics = Sinks.observed(obs, s"the write to $dir")
       if (metrics("rows") > 0)
         fs.listStatus(staging).map(_.getPath)
           .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))

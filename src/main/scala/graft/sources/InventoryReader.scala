@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -37,36 +37,42 @@ object InventoryReader {
   /** S2 — gzip-CSV S3 inventory scan. Returns BOTH good and corrupt
     * rows; `goodRows`/`corruptRows` split them.
     *
-    * UNCACHED by default: a long-lived session issuing many scans would
-    * otherwise accumulate one orphaned InMemoryRelation per call (nothing
-    * downstream owned the release). Pass cache=true — and own the
-    * [[unpersist]] — when (a) the query projects ONLY `_corrupt_record`
-    * ([[corruptRows]] alone; Spark disallows corrupt-record-only queries
-    * on raw scans), or (b) the pipeline reads the scan more than once
-    * (stats + fan-out, SURVEY §3.1 — gzip members are non-splittable, so
-    * re-scanning is the expensive path). [[goodRows]] is safe uncached:
-    * its filter references `_corrupt_record` together with data columns,
-    * which forces the parser to populate it despite column pruning. */
+    * UNCACHED: a long-lived session issuing many scans would otherwise
+    * accumulate one orphaned InMemoryRelation per call. A caller that
+    * reads the scan more than once caches it and owns the release
+    * ([[normalizeInventory]]); so does one that projects ONLY
+    * `_corrupt_record` ([[corruptRows]] alone), which Spark rejects on
+    * a raw scan.
+    *
+    * Column pruning: by default the CSV reader tokenizes only the
+    * columns a query reads, and flags a SHORT row (`"bad","row"`) in
+    * `_corrupt_record` only when the query reads a column the row
+    * lacks. A query over every column of [[goodRows]] (a cached scan,
+    * a full collect) drops the row; a count, a narrow projection, an
+    * aggregate or an observation over this scan takes it as good.
+    * `wholeRow = true` parses every column of every row (the per-read
+    * `columnPruning=false`), so `_corrupt_record` is right whatever
+    * sits above the scan; it stays off for the plain re-reads, which
+    * it would slow. */
   def readS3Inventory(spark: SparkSession, path: String,
-                      cache: Boolean = false): DataFrame = {
-    val scan = spark.read
+                      wholeRow: Boolean = false): DataFrame = {
+    val reader = spark.read
       .schema(s3InventorySchema)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .option("quote", "\"")
-      .csv(path)
-    if (cache) scan.cache() else scan
+    (if (wholeRow) reader.option("columnPruning", "false") else reader).csv(path)
   }
 
-  /** Release an inventory scan a caller opted into caching
-    * (`cache = true` on [[readS3Inventory]]; nothing else unpersists
-    * it). No-op on the uncached default. */
-  def unpersist(inv: DataFrame): Unit = { inv.unpersist(); () }
+  /** The good-row predicate: parsed cleanly and carries a key. The one
+    * statement of it, for [[goodRows]]' filter and for observations
+    * taken over the raw scan. */
+  val isGood: Column = col("_corrupt_record").isNull && col("Key").isNotNull
 
   /** Decoded, typed view of the good rows: URL-decoded key (F1), boolean
     * multipart flag (P13), replicated flag, parsed timestamp. */
   def goodRows(inv: DataFrame): DataFrame =
-    inv.filter(col("_corrupt_record").isNull && col("Key").isNotNull)
+    inv.filter(isGood)
       .drop("_corrupt_record")
       .withColumn("Key", Fns.plusDecode(col("Key")))
       .withColumn("IsMultipartUploaded", Fns.boolFlag(col("IsMultipartUploaded")))
@@ -194,10 +200,10 @@ object InventoryReader {
                          format: String = "parquet",
                          bucketPartitioned: Boolean = false): NormalizeResult = {
     require(targetShardBytes > 0, "targetShardBytes must be positive")
-    // cache=true: the one materialization serves good rows, the corrupt
+    // cached: the one materialization serves good rows, the corrupt
     // quarantine AND the width estimate; released on EVERY path (a
     // failed write must not orphan the scan in a long-lived session).
-    val raw = readS3Inventory(spark, inventoryGlob, cache = true)
+    val raw = readS3Inventory(spark, inventoryGlob).cache()
     try {
       val good = goodRows(raw)
       val est = good.agg(
@@ -238,21 +244,18 @@ object InventoryReader {
       // produces per-dir file counts unrelated to the round-robin
       // estimate, and an audit must describe the real output
       NormalizeResult(n, nCorrupt, countDataFiles(spark, outDir), outDir)
-    } finally unpersist(raw)
+    } finally { raw.unpersist(); () }
   }
 
   /** S2 (JSON variant) — the same inventory schema as newline-delimited
     * JSON (docs/Schema.txt:37-38 declares fileFormat "json"). Corrupt
-    * lines quarantine identically; same uncached-by-default lifecycle. */
-  def readS3InventoryJson(spark: SparkSession, path: String,
-                          cache: Boolean = false): DataFrame = {
-    val scan = spark.read
+    * lines quarantine identically; uncached, like [[readS3Inventory]]. */
+  def readS3InventoryJson(spark: SparkSession, path: String): DataFrame =
+    spark.read
       .schema(s3InventorySchema)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .json(path)
-    if (cache) scan.cache() else scan
-  }
 
   /** §4 ingest normalization, bucket-partitioned layout: one hive-style
     * dir per bucket (partition pruning on reads). A thin wrapper over

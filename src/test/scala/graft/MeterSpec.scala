@@ -39,6 +39,17 @@ class MeterSpec extends SparkSpec {
     assert(c.jobs.isEmpty && c.stages.isEmpty, s"jobs ${c.jobs}, stages ${c.stages}")
   }
 
+  test("an unlabelled job carries the call site of its action") {
+    val (_, c) = Meter.measure(spark)(sleepyJob(1, 1))
+    assert(c.jobs.size == 1 && c.jobs.head.description.isEmpty, s"jobs: ${c.jobs}")
+    assert(c.jobs.head.callSite.startsWith("count at MeterSpec.scala:"), s"jobs: ${c.jobs}")
+    // AQE runs a shuffle's map stage as a job of its own, on a pool thread
+    val (_, q) = Meter.measure(spark)(
+      spark.range(100).groupBy(org.apache.spark.sql.functions.col("id") % 3).count().collect())
+    assert(q.jobs.size >= 2 && q.jobs.forall(_.callSite.startsWith("collect at MeterSpec.scala:")),
+      s"jobs: ${q.jobs}")
+  }
+
   test("Meter is the only place that attaches a Spark listener") {
     val sites = sourcesMatching("addSparkListener\\(")
     assert(sites.map(_.getName) == Seq("Meter.scala"),

@@ -14,7 +14,7 @@ class InventoryReaderSpec extends SparkSpec {
     TestFixtures.writeS3InventoryGz(dir, "shard-0",
       TestFixtures.defaultInventoryRows,
       malformedLines = Seq("\"too\",\"short\",\"row\""))
-    val raw = InventoryReader.readS3Inventory(spark, s"$dir/*.csv.gz", cache = true)
+    val raw = InventoryReader.readS3Inventory(spark, s"$dir/*.csv.gz").cache()
     val good = InventoryReader.goodRows(raw)
     assert(good.count() == 7)
     assert(InventoryReader.corruptRows(raw).count() == 1)
@@ -29,6 +29,25 @@ class InventoryReaderSpec extends SparkSpec {
     val repl = good.filter($"Key" === "at-5mb.bin")
       .select("Replicated").as[Int].head()
     assert(repl == 1)
+  }
+
+  test("a short row is corrupt to an aggregate over the raw scan only when parsed whole") {
+    val dir = tmpDir("inv_short")
+    TestFixtures.writeS3InventoryGz(dir, "shard-0",
+      TestFixtures.defaultInventoryRows,
+      malformedLines = Seq("\"too\",\"short\",\"row\""))
+    val glob = s"$dir/*.csv.gz"
+    def split(raw: org.apache.spark.sql.DataFrame) =
+      raw.agg(count_if($"_corrupt_record".isNotNull), count_if(InventoryReader.isGood))
+        .as[(Long, Long)].head()
+    // the ListProducer pass: observed over the raw scan, parsed whole
+    assert(split(InventoryReader.readS3Inventory(spark, glob, wholeRow = true)) == ((1L, 7L)))
+    // pruned, the reader tokenizes only Key and the short row passes
+    // as good: the hazard wholeRow exists for
+    assert(split(InventoryReader.readS3Inventory(spark, glob)) == ((0L, 8L)))
+    // a query reading every column flags it either way
+    assert(InventoryReader.goodRows(InventoryReader.readS3Inventory(spark, glob))
+      .collect().length == 7)
   }
 
   test("azure inventory: garbage Content-Length quarantines to null (F13)") {
@@ -53,21 +72,38 @@ class InventoryReaderSpec extends SparkSpec {
 }
 
 class ListProducerJobSpec extends SparkSpec {
+  import scala.jdk.CollectionConverters._
 
-  test("manifest -> inventory -> histogram + fanout -> job.json, end to end") {
-    val root = tmpDir("lpj")
+  /** Spark jobs of one run: the fan-out write's shuffle map stage and
+    * its result stage. Nothing else runs a job. */
+  private val RunJobs = 2
+
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  private def tree(path: String) = mapper.readTree(new java.io.File(path))
+  private def keys(node: com.fasterxml.jackson.databind.JsonNode) =
+    node.fieldNames().asScala.toSeq
+
+  /** Two shards under `root`/inventory (7 good rows and one short
+    * malformed row, then 2 good rows) and their manifest. */
+  private def fixture(root: String): String = {
     val invDir = s"$root/inventory"
     TestFixtures.writeS3InventoryGz(invDir, "shard-0",
       TestFixtures.defaultInventoryRows,
       malformedLines = Seq("\"bad\",\"row\""))
     TestFixtures.writeS3InventoryGz(invDir, "shard-1",
       TestFixtures.defaultInventoryRows.take(2))
-    val manifestPath = TestFixtures.writeManifest(root, Seq(
+    TestFixtures.writeManifest(root, Seq(
       ("shard-0.csv.gz", 1L, "x"), ("shard-1.csv.gz", 1L, "y")))
+  }
 
-    val res = ListProducerJob.run(spark, manifestPath, s"$invDir/*.csv.gz",
+  private def run(root: String, manifestPath: String) =
+    ListProducerJob.run(spark, manifestPath, s"$root/inventory/*.csv.gz",
       s"$root/job.json", s"$root/queue", dstBucket = "dstb",
       queues = 2, batchSize = 3)
+
+  test("manifest -> inventory -> histogram + fanout -> job.json, end to end") {
+    val root = tmpDir("lpj")
+    val res = run(root, fixture(root))
 
     assert(res.totalObjects == 9) // 7 + 2
     assert(res.corruptRows == 1)
@@ -83,6 +119,44 @@ class ListProducerJobSpec extends SparkSpec {
     // >5e9 object excluded from the largest bucket: shard0's 6e9 row
     assert(stats.getAs[Long]("totalObjectsSub5TB") == 8)
     assert(job.select("job_info.queue_num").first().getLong(0) == 2L)
+  }
+
+  test("one scan feeding one write: the run is the fan-out write's jobs") {
+    val root = tmpDir("lpj_jobs")
+    val (res, cost) = Meter.measure(spark)(run(root, fixture(root)))
+    assert(cost.jobs.size == RunJobs, s"jobs: ${cost.jobs.map(_.callSite)}")
+    // the observed counts are what the write landed
+    val landed = spark.read.json(s"$root/queue")
+    assert(res.messages == landed.count() && res.messages >= 3)
+    assert(landed.agg(sum("n_objects")).first().getLong(0) == res.totalObjects)
+  }
+
+  test("job.json is the manifest in its key order plus statistics and job_info") {
+    val root = tmpDir("lpj_doc")
+    val manifestPath = fixture(root)
+    run(root, manifestPath)
+    val manifest = tree(manifestPath)
+    val job = tree(s"$root/job.json")
+    assert(Seq("sourceBucket", "destinationBucket", "fileFormat", "files")
+      .forall(k => keys(manifest).contains(k)))
+    assert(keys(job) == keys(manifest) ++ Seq("statistics", "job_info"))
+    assert(keys(manifest).forall(k => job.get(k) == manifest.get(k)))
+    assert(keys(job.get("statistics")) ==
+      "totalObjects" +: ListProducerJob.BucketNames.map(_._1))
+    assert(keys(job.get("job_info")) == Seq("src_type", "queue_url_prefix",
+      "queue_num", "message_body_max_num", "dst_bucket"))
+    assert(job.get("job_info").get("dst_bucket").asText == "dstb")
+  }
+
+  test("an inventory of corrupt rows only: zero statistics, no messages") {
+    val root = tmpDir("lpj_corrupt")
+    TestFixtures.writeS3InventoryGz(s"$root/inventory", "shard-0", Nil,
+      malformedLines = Seq("\"bad\",\"row\"", "\"too\",\"short\",\"row\""))
+    val manifestPath = TestFixtures.writeManifest(root, Seq(("shard-0.csv.gz", 1L, "x")))
+    assert(run(root, manifestPath) == ListProducerJob.Result(0, 2, 0))
+    val stats = tree(s"$root/job.json").get("statistics")
+    assert(keys(stats).map(k => stats.get(k).asLong) ==
+      Seq.fill(1 + ListProducerJob.BucketNames.size)(0L))
   }
 }
 
@@ -247,19 +321,25 @@ class StatefulDedupSpec extends SparkSpec {
 class AzureDiffJobSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Jobs of a first, enqueuing `runWithDiff` over a parsed diff: the
+    * totals aggregate (3), the queue write, which observes how many
+    * events it enqueued (3), and the ledger write (1). */
+  private val EnqueueJobs = 7
+
+  private val diffCsv =
+    """Storage-Account,Name,Creation-Time,Last-Modified,Etag,Content-Length,Variance
+      |sa1,blob/new.bin,2021-01-01T00:00:00Z,2021-01-02T00:00:00Z,0xA,100,New
+      |sa1,blob/upd.bin,2021-01-01T00:00:00Z,2021-01-03T00:00:00Z,0xB,200,update
+      |sa1,blob/del.bin,2021-01-01T00:00:00Z,2021-01-04T00:00:00Z,0xC,300,Delete
+      |sa1,blob/bad.bin,2021-01-01T00:00:00Z,2021-01-05T00:00:00Z,0xD,garbage,New""".stripMargin
+
   test("diff csv -> events -> ledger-dedup -> queue, idempotent across runs") {
     // a plain local root and the same kind of root `file:`-qualified: the
     // second run must find the first run's ledger under either spelling
     for (scheme <- Seq("", "file:")) {
       val local = tmpDir("azdiff")
       val root = scheme + local
-      val csv =
-        """Storage-Account,Name,Creation-Time,Last-Modified,Etag,Content-Length,Variance
-          |sa1,blob/new.bin,2021-01-01T00:00:00Z,2021-01-02T00:00:00Z,0xA,100,New
-          |sa1,blob/upd.bin,2021-01-01T00:00:00Z,2021-01-03T00:00:00Z,0xB,200,update
-          |sa1,blob/del.bin,2021-01-01T00:00:00Z,2021-01-04T00:00:00Z,0xC,300,Delete
-          |sa1,blob/bad.bin,2021-01-01T00:00:00Z,2021-01-05T00:00:00Z,0xD,garbage,New""".stripMargin
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$local/diff.csv"), csv)
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$local/diff.csv"), diffCsv)
 
       val r1 = graft.exec.AzureDiffJob.run(spark, s"$root/diff.csv",
         s"$root/ledger", s"$root/queue", queues = 2, batchSize = 2)
@@ -278,6 +358,17 @@ class AzureDiffJobSpec extends SparkSpec {
       assert(spark.read.json(s"$root/queue").agg(sum("n_objects")).first().getLong(0) == 4)
     }
   }
+
+  test("an enqueuing run counts its events on the queue write, with no job before it") {
+    val root = tmpDir("azdiff_jobs")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$root/diff.csv"), diffCsv)
+    val diff = spark.read.option("header", "true").csv(s"$root/diff.csv")
+    val (r, cost) = Meter.measure(spark)(graft.exec.AzureDiffJob.runWithDiff(
+      spark, diff, s"$root/ledger", s"$root/queue", queues = 2, batchSize = 2))
+    assert(r.enqueued == 4 && r.skipped == 0)
+    val sites = cost.jobs.map(_.callSite)
+    assert(!sites.exists(_.startsWith("count at")) && sites.size == EnqueueJobs, s"jobs: $sites")
+  }
 }
 
 class SourceVariantsSpec extends SparkSpec {
@@ -292,7 +383,7 @@ class SourceVariantsSpec extends SparkSpec {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/inv.json"), lines.mkString("\n"))
     val raw = graft.sources.InventoryReader.readS3InventoryJson(
-      spark, s"$dir/inv.json", cache = true)
+      spark, s"$dir/inv.json").cache()
     val good = graft.sources.InventoryReader.goodRows(raw)
     assert(good.count() == 2)
     assert(graft.sources.InventoryReader.corruptRows(raw).count() == 1)
@@ -539,7 +630,7 @@ class NormalizeInventorySpec extends SparkSpec {
     val back = spark.read.parquet(res.outDir)
     assert(back.count() == 10)
     val raw = graft.sources.InventoryReader.readS3Inventory(
-      spark, s"$invDir/*.csv.gz", cache = true)
+      spark, s"$invDir/*.csv.gz").cache()
     val expect = graft.sources.InventoryReader.goodRows(raw)
     assert(back.exceptAll(expect).isEmpty && expect.exceptAll(back).isEmpty)
     raw.unpersist()

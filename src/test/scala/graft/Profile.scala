@@ -68,7 +68,7 @@ object Profile {
           val ms = if (j.endMs > 0) j.endMs - j.startMs else -1L
           if (j.endMs > 0) prevEnd = math.max(prevEnd, j.endMs)
           println(f"  job=${j.id}%5d ${ms}%6dms gap=${gap}%5dms tasks=${j.tasks}%4d " +
-            j.description.take(90))
+            f"${j.callSite.take(60)}%-60s ${j.description.take(90)}")
         }
         spark.catalog.clearCache()
       }
