@@ -119,6 +119,5 @@ final case class VersionedKeyedStore(dir: String) extends KeyedStore {
   }
 
   def read(spark: SparkSession): Option[DataFrame] =
-    if (graft.sinks.VersionedStore.currentEpoch(dir) == 0L) None
-    else Some(graft.sinks.VersionedStore.read(spark, dir))
+    graft.sinks.VersionedStore.readCurrent(spark, dir)
 }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sinks.{DataSkipping, Sinks, VersionedStore}
+import graft.sinks.{DataSkipping, VersionedStore}
 
 /** The MVCC [[VersionedStore]] as a DataSource V2 TABLE — the SQL
   * surface of the store family: any snapshot is addressable without
@@ -194,11 +194,9 @@ private[connectors] final case class VStoreScanBuilder(
           .filter(op => statType(op.dt)).getOrElse(return false)
       case _ => return false
     }
-    if (VersionedStore.hasEvolution(path, epoch)) return false
-    val committed = VersionedStore.commits(path)
-    val allPlain = VersionedStore.snapshotChains(path, committed, epoch)
-      .forall(_._2.isPlain)
-    if (!allPlain) return false
+    val view = VersionedStore.listRoot(path)
+    if (view.evolutions.exists(_ <= epoch) ||
+        !VersionedStore.plainAt(view.commits, epoch)) return false
     AggregatePushDownUtils.getSchemaForPushedAggregation(
       agg, fullSchema, Set.empty, Nil) match {
       case Some(sch) => aggOps = Some(ops); aggSchema = Some(sch); true
@@ -238,11 +236,11 @@ private[connectors] final case class VStoreScan(path: String, epoch: Long,
   /** The snapshot's serving chains, resolved ONCE at plan time from
     * the commit log (vacuum watermark honored like every read). */
   private lazy val chains: Seq[(Int, graft.sinks.VersionedStore.Chain)] = {
-    val (committed, _, _) =
+    val (view, _, _) =
       VersionedStore.resolveSnapshot(path, Some(epoch), Some(epoch))(
         (e, wm) => s"graft-vstore epoch $e is below the vacuum watermark $wm",
         (e, cur) => s"graft-vstore epoch $e is beyond current epoch $cur")
-    VersionedStore.snapshotChains(path, committed, epoch).toSeq
+    VersionedStore.snapshotChains(path, view.commits, epoch).toSeq
       .filter(_._2.paths.nonEmpty).sortBy(_._1)
   }
 
@@ -326,32 +324,10 @@ private[connectors] final case class VStoreScan(path: String, epoch: Long,
   override def filter(filters: Array[Filter]): Unit =
     runtime = filters
 
-  /** ONE pooled listing pass over every planned generation directory,
-    * shared by [[planInputPartitions]] (names) and [[plannedBytes]]
-    * (lengths) — these were two more SERIAL O(dirs) walks. */
-  private lazy val dirListings: Map[String, (Seq[String], Long)] = {
-    val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    val dirs = plannedSelected.flatMap(_._2.paths).distinct
-    VersionedStore.parallelMap(dirs) { d =>
-      val p = new Path(d)
-      val parts = p.getFileSystem(conf).listStatus(p)
-        .filter(f => Sinks.isPartFile(f.getPath))
-      d -> ((parts.map(_.getPath.toString).sorted.toSeq,
-        parts.map(_.getLen).sum))
-    }.toMap
-  }
-
-  private def filesOf(dirs: Seq[String]): Seq[String] =
-    dirs.flatMap { d =>
-      dirListings.get(d).map(_._1).getOrElse {
-        // defensive: a dir outside the planned set still LISTS —
-        // returning empty would silently lose rows
-        val p = new Path(d)
-        p.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
-          .listStatus(p).map(_.getPath).filter(Sinks.isPartFile)
-          .map(_.toString).sorted.toSeq
-      }
-    }
+  /** The part files of generations, as their resolving listing
+    * returned them. */
+  private def filesOf(gens: Seq[VersionedStore.Gen]): Seq[String] =
+    gens.flatMap(_.files.map(_.getPath.toString))
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = {
@@ -387,7 +363,7 @@ private[connectors] final case class VStoreScan(path: String, epoch: Long,
   override def planInputPartitions(): Array[InputPartition] =
     selected.map { case (_, ch) =>
       if (ch.isPlain)
-        BucketPartition(filesOf(ch.base.flatMap(_._2).toSeq)): InputPartition
+        BucketPartition(filesOf(ch.gens)): InputPartition
       else {
         val keyFields = keys.map(k => fullSchema(k))
         MorChainPartition(
@@ -401,8 +377,7 @@ private[connectors] final case class VStoreScan(path: String, epoch: Long,
     VStoreReaderFactory(required, aggOps, limit)
 
   private lazy val plannedBytes: Long =
-    plannedSelected.flatMap(_._2.paths).distinct
-      .map(d => dirListings.get(d).map(_._2).getOrElse(0L)).sum
+    plannedSelected.flatMap(_._2.gens).distinctBy(_.dir).map(_.bytes).sum
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): java.util.OptionalLong =
       java.util.OptionalLong.of(plannedBytes)

@@ -75,8 +75,9 @@ private[connectors] final class VStoreMicroBatchStream(
       VersionedStore.heartbeatSubscriber(path, id, epoch))
 
   override def initialOffset(): Offset = {
-    val wm = VersionedStore.retentionWatermark(path)
-    val e = startingEpoch.getOrElse(VersionedStore.currentEpoch(path))
+    val view = VersionedStore.listRoot(path)
+    val wm = view.watermark
+    val e = startingEpoch.getOrElse(view.current)
     require(e >= wm,
       s"graft-vstore stream: startingEpoch $e is below the vacuum " +
         s"retention watermark $wm — per-epoch change files may be gone; " +
@@ -135,7 +136,8 @@ private[connectors] final class VStoreMicroBatchStream(
     // facts lacking the new column, so a folding subscriber would
     // build an incomplete replica while believing it has full facts.
     // Fail loudly instead (Delta CDF's posture on schema change).
-    val evolved = VersionedStore.evolutionEpochsIn(path, s, e)
+    val view = VersionedStore.listRoot(path)
+    val evolved = view.evolutions.filter(ep => ep > s && ep <= e)
     if (evolved.nonEmpty)
       throw new UnsupportedOperationException(
         s"graft-vstore stream: epoch ${evolved.head} evolved the store " +
@@ -143,7 +145,7 @@ private[connectors] final class VStoreMicroBatchStream(
           "start and would silently drop the new column(s). Restart the " +
           "subscription (optionally bootstrapping from a batch snapshot " +
           "at the evolved epoch) to pick up the new schema")
-    VersionedStore.commits(path)
+    view.commits
       .filter(c => c.epoch > s && c.epoch <= e)
       .flatMap { c =>
         val base = c.kind.split("@")(0)

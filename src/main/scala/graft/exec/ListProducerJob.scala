@@ -47,12 +47,12 @@ object ListProducerJob {
     val manifest = Sinks.readJsonTree(manifestPath)
     require(manifest.isObject, s"$manifestPath: the manifest is not a JSON object")
 
-    // observed BEFORE the good-row filter, so the scan is parsed whole
-    // (see readS3Inventory): the corrupt count and the histogram over
-    // the good rows come from the one pass
+    // observed BEFORE the good-row filter (the scan parses every row
+    // whole, see readS3Inventory): the corrupt count and the histogram
+    // over the good rows come from the one pass
     val scanned = Observation()
     val sent = Observation()
-    val raw = InventoryReader.readS3Inventory(spark, inventoryGlob, wholeRow = true)
+    val raw = InventoryReader.readS3Inventory(spark, inventoryGlob)
     val scanStats = count_if(col("_corrupt_record").isNotNull).as("corrupt") +:
       SizeHistogram.columns(col("Size"), BucketNames.map(_._2), InventoryReader.isGood)
     val inv = InventoryReader.goodRows(raw.observe(scanned, scanStats.head, scanStats.tail: _*))

@@ -187,7 +187,6 @@ object DataSkipping {
                    schema: StructType)
       : Option[(org.apache.spark.sql.DataFrame, StagedStats)] = {
     import org.apache.spark.sql.functions._
-    if (sys.props.get("graft.cstats.observe").contains("off")) return None
     val fields = schema.fields.filter(f => supported(f.dataType)).toSeq
     val pairs = for (b <- touched; f <- fields) yield (b, f)
     if (pairs.isEmpty || pairs.size > MaxObservePairs) return None

@@ -26,19 +26,13 @@ import org.apache.spark.sql.types.StructType
   * on top, so the index can only skip provably-empty generations,
   * never change a result. */
 private[graft] final class GenStatsFileIndex(
-    fs: FileSystem, genDirs: Seq[String], schema: StructType)
+    fs: FileSystem, gens: Seq[VersionedStore.Gen], schema: StructType)
     extends FileIndex {
 
-  // one pooled listing round at construction (the same driver-side
-  // metadata the plain multi-path parquet read would have paid)
+  // the part files come from the generation resolver's own listing:
+  // the index lists nothing
   private val perGen: Seq[(Path, Seq[FileStatus])] =
-    VersionedStore.parallelMap(genDirs) { g =>
-      val p = new Path(g)
-      val files = fs.listStatus(p).toSeq
-        .filter(st => Sinks.isPartFile(st.getPath))
-        .sortBy(_.getPath.getName)
-      (p, files)
-    }
+    gens.map(g => (new Path(g.dir), g.files))
 
   override def rootPaths: Seq[Path] = perGen.map(_._1)
   override def partitionSchema: StructType = StructType(Nil)
@@ -116,13 +110,16 @@ private[graft] final class GenStatsFileIndex(
 }
 
 private[graft] object GenStatsFileIndex {
-  /** The plain-chain read: one V1 parquet relation whose file listing
-    * is this index — filter pushdown, vectorized reading, row-group
-    * stats and key blooms all behave exactly as `spark.read.parquet`,
-    * plus the generation-level skip. */
-  def readPlain(spark: SparkSession, fs: FileSystem, genDirs: Seq[String],
-                schema: StructType): DataFrame = {
-    val index = new GenStatsFileIndex(fs, genDirs, schema)
+  /** A read of resolved generations (non-empty): one V1 parquet
+    * relation whose file listing is this index — filter pushdown,
+    * vectorized reading, row-group stats, key blooms and
+    * `input_file_name()` all behave exactly as `spark.read.parquet`,
+    * plus the generation-level skip. Columns of `schema` a file lacks
+    * read as null. */
+  def read(spark: SparkSession, gens: Seq[VersionedStore.Gen],
+           schema: StructType): DataFrame = {
+    val (fs, _) = Sinks.fsOf(gens.head.dir)
+    val index = new GenStatsFileIndex(fs, gens, schema)
     val relation = HadoopFsRelation(index, partitionSchema = StructType(Nil),
       dataSchema = schema, bucketSpec = None, new ParquetFileFormat,
       options = Map.empty)(spark)

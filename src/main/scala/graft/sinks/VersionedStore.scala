@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash}
 import org.apache.spark.sql.expressions.Window
@@ -113,13 +113,22 @@ object VersionedStore {
   final case class VacuumReport(deletedGens: Long, keptGens: Long,
                                 watermark: Long)
 
+  /** A committed generation directory with the part files its one
+    * resolving listing ([[resolveGeneration]]) returned, in name order:
+    * every later consumer (scans, byte sizes, footers, export) reads
+    * these instead of listing the directory again. */
+  private[graft] final case class Gen(dir: String, files: Seq[FileStatus]) {
+    def bytes: Long = files.map(_.getLen).sum
+  }
+
   /** One bucket's serving chain at a snapshot: the newest base
     * generation at or below the epoch (None = bucket never had a
     * base; inner None = the base is `_EMPTY`), plus the committed
     * delta generations after it, in epoch order. */
-  private[graft] final case class Chain(base: Option[(Long, Option[String])],
-                                        deltas: Seq[(Long, String)]) {
-    def paths: Seq[String] = base.flatMap(_._2).toSeq ++ deltas.map(_._2)
+  private[graft] final case class Chain(base: Option[(Long, Option[Gen])],
+                                        deltas: Seq[(Long, Gen)]) {
+    def gens: Seq[Gen] = base.flatMap(_._2).toSeq ++ deltas.map(_._2)
+    def paths: Seq[String] = gens.map(_.dir)
     def isPlain: Boolean = deltas.isEmpty
   }
 
@@ -157,6 +166,17 @@ object VersionedStore {
     }
   }
 
+  /** Per bucket, the epochs of its serving chain at `asOf`: one fold
+    * of the commit log, no filesystem access. */
+  private def servingAt(committed: Seq[Commit], asOf: Long,
+                        track: Int => Boolean = _ => true): Serving =
+    committed.iterator.takeWhile(_.epoch <= asOf)
+      .foldLeft(Map.empty: Serving)(serve(_, _, track))
+
+  /** Does every bucket serve a plain (delta-free) chain at `asOf`? */
+  private[graft] def plainAt(committed: Seq[Commit], asOf: Long): Boolean =
+    servingAt(committed, asOf).values.forall(_._2.isEmpty)
+
   // ------------------------------------------------------------ markers
 
   /** The commit LOG is bounded: [[vacuum]] writes a `_floors-<wm>`
@@ -165,25 +185,50 @@ object VersionedStore {
     * `_commit-*` markers at or below the watermark — so log size is
     * O(epochs since retention), not O(store lifetime) (the Delta
     * checkpoint + log-truncation shape). A crash between checkpoint
-    * write and truncation leaves both; the merge below prefers the
+    * write and truncation leaves both; [[listRootOnce]]'s merge prefers the
     * real marker (its bucket list is a superset of the checkpoint's
     * floor subset, and per-bucket resolution is a max-epoch reduce,
     * so the overlap is harmless). */
-  private[graft] def commits(root: String): Seq[Commit] = {
-    // a commit-log read racing VACUUM's checkpoint truncation can list
-    // a `_commit-e` (or the superseded `_floors-v`) and find it GONE by
-    // the marker read — `getOrElse("")` here used to fabricate a
-    // BUCKET-LESS commit, silently dropping every chain whose only
-    // commit it was (the round-15 triple stress caught a follower
-    // reading 197/200 rows). A listed-but-absent marker now means
-    // "truncated under us": RE-LIST — the new `_floors` checkpoint is
-    // written BEFORE any delete, so a fresh listing always carries the
-    // full resolution metadata and the retry converges.
+  private[graft] def commits(root: String): Seq[Commit] = listRoot(root).commits
+
+  /** One listing of the store root, and what every store call reads
+    * off it: the commit log, the retention watermark, the schema
+    * markers and which markers exist. It is the only root listing
+    * outside [[vacuum]] and [[subscriberFloor]]; an absent root reads
+    * as an empty store. Marker bodies are read only for names the
+    * listing returned. */
+  private[graft] final case class RootListing(fs: FileSystem, dir: Path,
+      commits: Seq[Commit], names: Set[String], watermark: Long) {
+    def current: Long = commits.lastOption.map(_.epoch).getOrElse(0L)
+    /** Epochs carrying a `_schema-E` evolution marker, ascending. */
+    def evolutions: Seq[Long] =
+      names.toSeq.collect { case SchemaRe(e) => e.toLong }.sorted
+    /** The row-schema DDL in force at `epoch`: the newest evolution
+      * marker at or below it, else the base `_schema`. */
+    def schemaAsOf(epoch: Long): Option[String] =
+      evolutions.filter(_ <= epoch).lastOption
+        .flatMap(e => readMarker(fs, new Path(dir, f"_schema-$e%07d")))
+        .orElse(if (names("_schema")) readMarker(fs, new Path(dir, "_schema"))
+          else None)
+    def schemaAt(epoch: Long): String = schemaAsOf(epoch).getOrElse(
+      sys.error(s"versioned store has no _schema marker: $dir"))
+  }
+
+  /** [[RootListing]] of `root`. A commit-log read racing VACUUM's
+    * checkpoint truncation can list a `_commit-e` (or the superseded
+    * `_floors-v`) and find it GONE by the marker read — `getOrElse("")`
+    * here used to fabricate a BUCKET-LESS commit, silently dropping
+    * every chain whose only commit it was (the round-15 triple stress
+    * caught a follower reading 197/200 rows). A listed-but-absent
+    * marker now means "truncated under us": RE-LIST — the new `_floors`
+    * checkpoint is written BEFORE any delete, so a fresh listing always
+    * carries the full resolution metadata and the retry converges. */
+  private[graft] def listRoot(root: String): RootListing = {
     var attempt = 0
     while (true) {
       attempt += 1
-      commitsOnce(root) match {
-        case Some(cs) => return cs
+      listRootOnce(root) match {
+        case Some(l) => return l
         case None if attempt < 10 => Thread.sleep(10L * attempt)
         case None => sys.error(s"commit log kept vanishing under " +
           s"$attempt listings (runaway concurrent vacuum?): $root")
@@ -205,7 +250,7 @@ object VersionedStore {
     * and, within one mtime tick, the same timestamp — so the key is
     * (store nonce, path, length, mtime). The nonce is the name of the
     * `_nonce-<uuid>` marker written once at store creation, taken from
-    * the root listing [[commitsOnce]] does anyway (zero extra fs ops);
+    * the root listing [[listRootOnce]] does anyway (zero extra fs ops);
     * a rebuilt store gets a fresh one. Presence still comes from the
     * live listing on every call, so vacuum truncation and racing
     * writers keep their exact semantics; only the redundant re-read of
@@ -231,12 +276,19 @@ object VersionedStore {
     }
   }
 
-  /** One listing-consistent attempt at the commit log; None = a marker
+  /** One listing-consistent attempt at [[listRoot]]; None = a marker
     * this very listing returned read as ABSENT (concurrent vacuum
-    * truncation — caller re-lists). */
-  private def commitsOnce(root: String): Option[Seq[Commit]] = {
+    * truncation — caller re-lists). The watermark is the larger of the
+    * `_vacuum` marker and the newest `_floors-*` checkpoint name: the
+    * checkpoint is create-only (it cannot be lost in a rename window),
+    * so the guard survives a crash mid-`_vacuum`-rewrite. */
+  private def listRootOnce(root: String): Option[RootListing] = {
     val (fs, dir) = fsOf(root)
-    if (!fs.exists(dir)) return Some(Seq.empty)
+    val stats =
+      try fs.listStatus(dir).toSeq
+      catch { case _: java.io.FileNotFoundException =>
+        return Some(RootListing(fs, dir, Seq.empty, Set.empty, 0L))
+      }
     def parse(epoch: Long, body: String): Commit = {
       val parts = body.split(";", 3)
       val bs =
@@ -246,22 +298,22 @@ object VersionedStore {
       val ts = if (parts.length < 3) 0L else parts(2).trim.toLong
       Commit(epoch, parts(0), bs, ts)
     }
-    val stats = fs.listStatus(dir).toSeq
+    val names = stats.map(_.getPath.getName).toSet
     // racing creators may each leave one; any deterministic pick works
-    val nonce = stats.map(_.getPath.getName)
-      .filter(NonceRe.matches).minOption.getOrElse("")
-    val floorCommits = stats
-      .flatMap(st => st.getPath.getName match {
-        case FloorsRe(w) => Some((w.toLong, st.getPath)); case _ => None
-      }).sortBy(_._1).lastOption.toSeq
-      .flatMap { case (_, p) =>
-        readMarker(fs, p).getOrElse(return None) // vanished: re-list
-          .linesIterator.filter(_.nonEmpty)
-          .map { line =>
-            val Array(e, body) = line.split(";", 2)
-            parse(e.toLong, body)
-          }
-      }
+    val nonce = names.filter(NonceRe.matches).minOption.getOrElse("")
+    val floors = stats.flatMap(st => st.getPath.getName match {
+      case FloorsRe(w) => Some((w.toLong, st)); case _ => None
+    }).sortBy(_._1).lastOption
+    // checkpoints are create-only and immutable like commit markers,
+    // so their bodies share the cache
+    val floorCommits = floors.toSeq.flatMap { case (_, st) =>
+      cachedCommitBody(fs, nonce, st).getOrElse(return None) // vanished: re-list
+        .linesIterator.filter(_.nonEmpty)
+        .map { line =>
+          val Array(e, body) = line.split(";", 2)
+          parse(e.toLong, body)
+        }
+    }
     val markerCommits = stats.flatMap { st =>
       st.getPath.getName match {
         case CommitRe(e) =>
@@ -291,12 +343,15 @@ object VersionedStore {
     val byEpoch = scala.collection.mutable.LinkedHashMap.empty[Long, Commit]
     floorCommits.foreach(c => byEpoch(c.epoch) = c)
     markerCommits.foreach(c => byEpoch(c.epoch) = c)
-    Some(byEpoch.values.toSeq.sortBy(_.epoch))
+    val marked =
+      if (!names("_vacuum")) 0L
+      else readMarker(fs, new Path(dir, "_vacuum")).map(_.trim.toLong).getOrElse(0L)
+    Some(RootListing(fs, dir, byEpoch.values.toSeq.sortBy(_.epoch), names,
+      math.max(marked, floors.map(_._1).getOrElse(0L))))
   }
 
   /** Latest committed epoch (0 when the store is empty/new). */
-  def currentEpoch(root: String): Long =
-    commits(root).lastOption.map(_.epoch).getOrElse(0L)
+  def currentEpoch(root: String): Long = listRoot(root).current
 
   /** The newest epoch whose commit timestamp is at or below
     * `tsMillis` — Delta's `TIMESTAMP AS OF` resolution. Commit stamps
@@ -320,21 +375,8 @@ object VersionedStore {
   }
 
   /** Vacuum watermark: reads below it fail fast (their generations may
-    * be gone). 0 when never vacuumed. Derived from BOTH the `_vacuum`
-    * marker and the newest `_floors-*` checkpoint name: the checkpoint
-    * is create-only (it cannot be lost in a rename window), so the
-    * guard survives a crash mid-`_vacuum`-rewrite. */
-  def retentionWatermark(root: String): Long = {
-    val (fs, dir) = fsOf(root)
-    val marked =
-      readMarker(fs, new Path(dir, "_vacuum")).map(_.trim.toLong).getOrElse(0L)
-    val floors =
-      if (!fs.exists(dir)) 0L
-      else fs.listStatus(dir).flatMap(_.getPath.getName match {
-        case FloorsRe(w) => Some(w.toLong); case _ => None
-      }).maxOption.getOrElse(0L)
-    math.max(marked, floors)
-  }
+    * be gone). 0 when never vacuumed ([[listRootOnce]] derives it). */
+  def retentionWatermark(root: String): Long = listRoot(root).watermark
 
   /** Small auxiliary-marker surface for follower state that lives
     * inside a store directory (e.g. [[graft.streaming.ViewStream]]'s
@@ -726,7 +768,9 @@ object VersionedStore {
     * or the current epoch unchanged when nothing matched. */
   def delete(keys: DataFrame, root: String, tsMillis: Long = -1L): Long = {
     val keyCols = keyColsOf(root)
-    writeEpoch(keys.select(castToStoreKeys(root, keys, keyCols): _*), keyCols,
+    val view = listRoot(root)
+    writeEpoch(keys.select(castToStoreKeys(view.schemaAt(view.current), keys,
+        keyCols): _*), keyCols,
       root, nBuckets = 8, delete = true, tag = "", tsMillis = tsMillis)
   }
 
@@ -737,9 +781,9 @@ object VersionedStore {
     * a delete would no-op, a lookup would return empty. A pure-delete
     * batch skips [[mergeSchemas]] (its schema is just the keys), so
     * the cast is the only type fence on that path. */
-  private def castToStoreKeys(root: String, frame: DataFrame,
+  private def castToStoreKeys(storeDdl: String, frame: DataFrame,
                               keyCols: Seq[String]): Seq[Column] = {
-    val store = StructType.fromDDL(schemaAsOf(root, currentEpoch(root)))
+    val store = StructType.fromDDL(storeDdl)
     keyCols.map { kc =>
       val dt = store(kc).dataType
       val given = frame.schema(kc).dataType
@@ -900,7 +944,7 @@ object VersionedStore {
     // On the fastUnique path this runs AFTER the staged-output
     // empty-batch detection (round-16 ADVICE): an empty FIRST batch on
     // a brand-new store must not leave a dangling `_schema` with zero
-    // commits — schemaAsOfOpt's fallback would pin the store's schema
+    // commits — the base `_schema` fallback would pin the store's schema
     // and a later first real batch with an additively wider shape
     // would error without evolve=true. Deferring it is safe: nothing
     // staged is reader-visible before the commit marker lands.
@@ -955,8 +999,8 @@ object VersionedStore {
     * needed compaction). */
   def compact(spark: SparkSession, root: String,
               buckets: Seq[Int] = Seq.empty, tsMillis: Long = -1L): Long = {
-    val committed = commits(root)
-    val cur = committed.lastOption.map(_.epoch).getOrElse(0L)
+    val view = listRoot(root)
+    val (committed, cur) = (view.commits, view.current)
     if (cur == 0L) return 0L
     val chains = snapshotChains(root, committed, cur)
     val cand = chains.filter { case (b, ch) =>
@@ -964,9 +1008,9 @@ object VersionedStore {
     }
     if (cand.isEmpty) return cur
     val keyCols = keyColsOf(root)
-    val (fs, dir) = fsOf(root)
+    import view.{dir, fs}
     val n = bucketCount(fs, dir, 8)
-    val ddl = schemaAsOf(root, cur)
+    val ddl = view.schemaAt(cur)
     val w = EpochWrite(spark, fs, dir, root, keyCols, tag = "", n, committed,
       cur + 1L, pmod(hash(keyCols.map(col): _*), lit(n)), Some(ddl))
     val touched = cand.keys.toSeq.sorted
@@ -989,7 +1033,7 @@ object VersionedStore {
     val committed = commits(root)
     val cur = committed.lastOption.map(_.epoch).getOrElse(0L)
     if (cur == 0L) return 0L
-    val cand = committed.foldLeft(Map.empty: Serving)(serve(_, _)).collect {
+    val cand = servingAt(committed, cur).collect {
       case (b, (_, ds)) if ds.length >= maxDeltas => b
     }.toSeq.sorted
     if (cand.isEmpty) cur else compact(spark, root, cand, tsMillis)
@@ -1021,58 +1065,12 @@ object VersionedStore {
   /** Name+type schema DDL, nullability-normalized. */
   private def ddlOf(schema: StructType): String = normalized(schema).toDDL
 
-  private def schemaAsOfOpt(fs: FileSystem, dir: Path,
-                            epoch: Long): Option[String] = {
-    val marker =
-      if (!fs.exists(dir)) None
-      else fs.listStatus(dir).flatMap(_.getPath.getName match {
-          case SchemaRe(e) if e.toLong <= epoch => Some(e.toLong)
-          case _ => None
-        }).maxOption
-        .flatMap(e => readMarker(fs, new Path(dir, f"_schema-$e%07d")))
-    marker.orElse(readMarker(fs, new Path(dir, "_schema")))
-  }
-
-  /** Has any schema evolution landed at or below `epoch`? Generations
-    * written before an additive evolution lack the new columns, so a
-    * footer-answered aggregate over such a snapshot could silently
-    * miscount — callers that trust footers (the DSv2 aggregate
-    * pushdown) must decline when this is true. */
-  /** Epochs in (afterExclusive, uptoInclusive] carrying a
-    * schema-evolution marker — the change-feed stream's fence: a
-    * subscriber whose row schema was pinned at stream start must fail
-    * LOUDLY when an evolved epoch enters a micro-batch, or its
-    * emitted facts would silently lack the new columns (one listing,
-    * no data read). */
-  private[graft] def evolutionEpochsIn(root: String, afterExclusive: Long,
-                                       uptoInclusive: Long): Seq[Long] = {
-    val (fs, dir) = fsOf(root)
-    if (!fs.exists(dir)) return Seq.empty
-    fs.listStatus(dir).flatMap(_.getPath.getName match {
-      case SchemaRe(e) =>
-        val ep = e.toLong
-        if (ep > afterExclusive && ep <= uptoInclusive) Some(ep) else None
-      case _ => None
-    }).toSeq.sorted
-  }
-
-  private[graft] def hasEvolution(root: String, epoch: Long): Boolean = {
-    val (fs, dir) = fsOf(root)
-    fs.exists(dir) && fs.listStatus(dir).exists(_.getPath.getName match {
-      case SchemaRe(e) => e.toLong <= epoch
-      case _ => false
-    })
-  }
-
   /** The row-schema DDL in force at snapshot `epoch`: the newest
     * evolution marker at or below it, else the store's base schema —
     * every read path resolves through this, so a snapshot predating a
     * column addition never shows the column. */
-  def schemaAsOf(root: String, epoch: Long): String = {
-    val (fs, dir) = fsOf(root)
-    schemaAsOfOpt(fs, dir, epoch).getOrElse(
-      sys.error(s"versioned store has no _schema marker: $root"))
-  }
+  def schemaAsOf(root: String, epoch: Long): String =
+    listRoot(root).schemaAt(epoch)
 
   /** Validate a batch's row schema against the store's and produce the
     * epoch's target DDL. Every existing column must be present with an
@@ -1119,8 +1117,9 @@ object VersionedStore {
 
   /** The prelude of both write shapes ([[writeEpoch]], [[deltaApplyImpl]]):
     * the tag and reserved-column checks (`opCol`, the batch's op column,
-    * is exempt), then the store directory, `_keycols` and `_nbuckets`
-    * (created on first write), the commit log and the next epoch. */
+    * is exempt), then one root listing, the store directory, `_keycols`
+    * and `_nbuckets` (created on first write), the commit log, the next
+    * epoch and the schema in force. */
   private def beginWrite(batch: DataFrame, keyCols: Seq[String], root: String,
                          nBuckets: Int, tag: String,
                          opCol: Option[String]): EpochWrite = {
@@ -1129,16 +1128,17 @@ object VersionedStore {
     val payloadCols = batch.columns.filterNot(c => opCol.contains(c))
     require(!payloadCols.contains("_bucket") && !payloadCols.contains(OpField),
       s"versioned store reserves '_bucket' and '$OpField'; rename the input's")
-    val (fs, dir) = fsOf(root)
-    fs.mkdirs(dir)
-    writeMarker(fs, new Path(dir, "_keycols"), keyCols.mkString(","),
-      replace = false)
+    val view = listRoot(root)
+    import view.{dir, fs}
+    if (!view.names("_keycols")) {
+      fs.mkdirs(dir)
+      writeMarker(fs, new Path(dir, "_keycols"), keyCols.mkString(","),
+        replace = false)
+    }
     val n = bucketCount(fs, dir, nBuckets)
-    val committed = commits(root)
-    val cur = committed.lastOption.map(_.epoch).getOrElse(0L)
-    EpochWrite(batch.sparkSession, fs, dir, root, keyCols, tag, n, committed,
-      cur + 1L, pmod(hash(keyCols.map(col): _*), lit(n)),
-      schemaAsOfOpt(fs, dir, cur))
+    EpochWrite(batch.sparkSession, fs, dir, root, keyCols, tag, n,
+      view.commits, view.current + 1L, pmod(hash(keyCols.map(col): _*), lit(n)),
+      view.schemaAsOf(view.current))
   }
 
   /** The schema fence of a write whose epoch schema is `targetDdl`:
@@ -1151,7 +1151,8 @@ object VersionedStore {
     * or clears. */
   private def writeSchemaFence(w: EpochWrite, targetDdl: String): Unit = {
     import w.{dir, epoch, fs}
-    writeMarker(fs, new Path(dir, "_schema"), targetDdl, replace = false)
+    if (w.storeDdl.isEmpty)
+      writeMarker(fs, new Path(dir, "_schema"), targetDdl, replace = false)
     val schemaMarker = new Path(dir, f"_schema-$epoch%07d")
     // never touch a schema marker whose epoch a RACING writer already
     // committed — it is theirs; our own collision resolves (and for an
@@ -1177,11 +1178,15 @@ object VersionedStore {
 
   /** The data files a [[generationWriter]] staged under `staging` for
     * bucket `b`, in name order (none when the bucket got no rows). */
-  private def stagedParts(fs: FileSystem, staging: Path, b: Int): Array[Path] = {
-    val staged = new Path(staging, s"_bucket=$b")
-    if (!fs.exists(staged)) Array.empty
-    else fs.listStatus(staged).map(_.getPath).filter(isPartFile).sortBy(_.getName)
-  }
+  private def stagedParts(fs: FileSystem, staging: Path, b: Int): Array[Path] =
+    listOrEmpty(fs, new Path(staging, s"_bucket=$b"))
+      .map(_.getPath).filter(isPartFile).sortBy(_.getName)
+
+  /** A directory's listing, empty when the directory does not exist —
+    * one round trip where an existence probe and a listing were two. */
+  private def listOrEmpty(fs: FileSystem, dir: Path): Array[FileStatus] =
+    try fs.listStatus(dir)
+    catch { case _: java.io.FileNotFoundException => Array.empty }
 
   /** ONE staging job regardless of touched-bucket count (each bucket
     * co-located into one task; AQE never coalesces an explicit
@@ -1242,8 +1247,7 @@ object VersionedStore {
     // one listing replaces the caller's validation aggregation job. An
     // empty set means an empty batch: clean up, commit nothing.
     val touched: Seq[Int] = touchedHint.getOrElse {
-      if (!fs.exists(staging)) Seq.empty
-      else fs.listStatus(staging).toSeq.map(_.getPath.getName)
+      listOrEmpty(fs, staging).toSeq.map(_.getPath.getName)
         .collect { case s if s.startsWith("_bucket=") =>
           s.stripPrefix("_bucket=").toInt }.sorted
     }
@@ -1362,7 +1366,6 @@ object VersionedStore {
     val w = beginWrite(batch, keyCols, root, nBuckets, tag, opCol)
     import w.{bucketExpr, epoch, spark, storeDdl}
 
-    val snapChains = snapshotChains(root, w.committed, Long.MaxValue)
     // one materialization; every later collect is ≤ n small ints
     val mat = batch.withColumn("_bucket", bucketExpr).localCheckpoint()
 
@@ -1403,6 +1406,9 @@ object VersionedStore {
         if (delete) (null: DataFrame, mat, Seq.empty[Int], buckets)
         else (mat, null: DataFrame, buckets, Seq.empty[Int])
     }
+    // only the buckets the batch can touch resolve their chains
+    val snapChains = snapshotChains(root, w.committed, Long.MaxValue,
+      only = Some((upsertBuckets ++ delCandBuckets).toSet))
     // a delete only rewrites buckets where a key is ACTUALLY present —
     // a batch of absent keys must not commit a pointless epoch (nor
     // rewrite untouched buckets at scale); the presence probe is one
@@ -1504,39 +1510,39 @@ object VersionedStore {
 
   /** Per bucket, the serving CHAIN at snapshot `asOf`: newest base
     * generation ≤ asOf plus the delta generations after it. One pass
-    * over the commit list; existence/`_EMPTY` probes run only for the
-    * buckets materialized (restrict with `only` — a point lookup
-    * probes its key buckets, never the whole layout). */
+    * over the commit list; generation listings ([[resolveGeneration]])
+    * run only for the buckets materialized (restrict with `only` — a
+    * point lookup lists its key buckets, never the whole layout). */
   private[graft] def snapshotChains(root: String, committed: Seq[Commit],
                              asOf: Long,
                              only: Option[Set[Int]] = None): Map[Int, Chain] = {
     val (fs, dir) = fsOf(root)
-    val state = committed.iterator.takeWhile(_.epoch <= asOf)
-      .foldLeft(Map.empty: Serving)((m, c) =>
-        serve(m, c, b => only.forall(_.contains(b))))
-    // existence/_EMPTY probes fan out on the driver pool: on an
+    val state = servingAt(committed, asOf, b => only.forall(_.contains(b)))
+    // generation listings fan out on the driver pool: on an
     // object store each is a round trip, and a wide snapshot resolves
     // O(buckets) of them
     parallelMap(state.toSeq) { case (b, (base, dsDesc)) =>
-      def resolve(e: Long): Option[String] = resolveGeneration(fs, dir, b, e)
+      def resolve(e: Long): Option[Gen] = resolveGeneration(fs, dir, b, e)
       b -> Chain(base.map(e => (e, resolve(e))),
         dsDesc.reverse.map(e => e -> resolve(e).getOrElse(
           sys.error(s"delta generation has no data files: bucket $b epoch $e"))))
     }.toMap
   }
 
-  /** A committed generation's directory, None for an `_EMPTY` one:
-    * ONE listing instead of two existence probes (round-14: each probe
-    * is a round trip on an object store; a snapshot resolves O(buckets)
-    * of these). A generation without `_SUCCESS` fails loudly. */
+  /** A committed generation with its part files, None for an `_EMPTY`
+    * one: ONE listing, the only one any read makes of the directory
+    * (each is a round trip on an object store; a snapshot resolves
+    * O(buckets) of these). A generation without `_SUCCESS` fails
+    * loudly. */
   private def resolveGeneration(fs: FileSystem, dir: Path, b: Int,
-                                e: Long): Option[String] = {
+                                e: Long): Option[Gen] = {
     val gen = genDir(dir, b, e)
-    val names =
-      try fs.listStatus(gen).map(_.getPath.getName).toSet
-      catch { case _: java.io.FileNotFoundException => Set.empty[String] }
+    val stats = listOrEmpty(fs, gen)
+    val names = stats.map(_.getPath.getName).toSet
     require(names.contains("_SUCCESS"), s"committed generation missing: $gen")
-    if (names.contains("_EMPTY")) None else Some(gen.toString)
+    if (names.contains("_EMPTY")) None
+    else Some(Gen(gen.toString, stats.filter(st => isPartFile(st.getPath))
+      .sortBy(_.getPath.getName).toSeq))
   }
 
   /** One epoch's generation FILES per touched bucket — the streaming
@@ -1593,33 +1599,31 @@ object VersionedStore {
     * exceed [[DeltaBroadcastMaxBytes]] the read falls back to the
     * windowed merge over base ⊕ deltas (hash-shuffles those buckets —
     * correct, just not the fast shape; compaction restores it). */
-  private def readChains(spark: SparkSession, keyCols: Seq[String],
+  private def readChains(spark: SparkSession, keyCols: => Seq[String],
                          ddl: String, chains: Iterable[Chain],
                          keyFilter: Option[Column] = None): DataFrame = {
     val target = StructType.fromDDL(ddl)
-    val plainPaths =
-      chains.filter(_.isPlain).flatMap(_.base.flatMap(_._2)).toSeq.sorted
+    val plainGens =
+      chains.filter(_.isPlain).flatMap(_.base.flatMap(_._2)).toSeq.sortBy(_.dir)
     val morChains = chains.filterNot(_.isPlain).toSeq
     def filtered(df: DataFrame): DataFrame =
       keyFilter.map(df.filter).getOrElse(df)
-    // plain chains read through the stats-aware FileIndex: any filter
-    // the CALLER later applies (read(...).filter(range)) reaches
-    // listFiles as a data filter and prunes whole generations from
-    // their _cstats manifests at plan time — the default read path
-    // data-skips with no special API (round-14; DataSkippingSpec and
-    // q226 pin the selected-file count)
+    // every generation reads through the stats-aware FileIndex over
+    // the files its resolving listing returned: any filter the CALLER
+    // later applies (read(...).filter(range)) reaches listFiles as a
+    // data filter and prunes whole generations from their _cstats
+    // manifests at plan time — the default read path data-skips with
+    // no special API (round-14; DataSkippingSpec and q226 pin the
+    // selected-file count)
     val plain =
-      if (plainPaths.isEmpty) None
-      else {
-        val (fs, _) = Sinks.fsOf(plainPaths.head)
-        Some(filtered(GenStatsFileIndex.readPlain(spark, fs, plainPaths,
-          target)))
-      }
+      if (plainGens.isEmpty) None
+      else Some(filtered(GenStatsFileIndex.read(spark, plainGens, target)))
     val mor =
       if (morChains.isEmpty) None
       else {
-        val basePaths = morChains.flatMap(_.base.flatMap(_._2)).sorted
-        val deltaPaths = morChains.flatMap(_.deltas.map(_._2)).sorted
+        val keys = keyCols // read only when a chain needs the merge
+        val baseGens = morChains.flatMap(_.base.flatMap(_._2)).sortBy(_.dir)
+        val deltaGens = morChains.flatMap(_.deltas.map(_._2)).sortBy(_.dir)
         val withOp =
           StructType(target.fields :+ StructField(OpField, StringType))
         // the key predicate (a point lookup's) is applied to the RAW
@@ -1629,30 +1633,25 @@ object VersionedStore {
         // here it reaches PushedFilters (row-group stats + bloom
         // skipping), and it commutes with newest-wins resolution
         // because it constrains exactly the resolution keys
-        val deltas = filtered(spark.read.schema(withOp).parquet(deltaPaths: _*))
+        val deltas = filtered(GenStatsFileIndex.read(spark, deltaGens, withOp))
           .withColumn("_gen_epoch",
             regexp_extract(input_file_name(), "/g(\\d{7})/", 1).cast("long"))
-        val deltaBytes = parallelMap(deltaPaths) { g =>
-          val (fs, p) = fsOf(g)
-          fs.listStatus(p).filter(st => isPartFile(st.getPath))
-            .map(_.getLen).sum
-        }.sum
-        if (basePaths.isEmpty || deltaBytes <= DeltaBroadcastMaxBytes) {
-          val w = Window.partitionBy(keyCols.map(col): _*)
+        val deltaBytes = deltaGens.map(_.bytes).sum
+        if (baseGens.isEmpty || deltaBytes <= DeltaBroadcastMaxBytes) {
+          val w = Window.partitionBy(keys.map(col): _*)
             .orderBy(col("_gen_epoch").desc)
           val live = deltas.withColumn("_rn", row_number().over(w))
             .filter(col("_rn") === 1 &&
               (col(OpField).isNull || col(OpField) =!= "delete"))
             .select(target.fieldNames.toSeq.map(col): _*)
-          if (basePaths.isEmpty) Some(live)
+          if (baseGens.isEmpty) Some(live)
           else {
-            val base =
-              filtered(spark.read.schema(target).parquet(basePaths: _*))
-            val dKeys = deltas.select(keyCols.map(col): _*).distinct()
+            val base = filtered(GenStatsFileIndex.read(spark, baseGens, target))
+            val dKeys = deltas.select(keys.map(col): _*).distinct()
             // null-safe: a null key must supersede itself, exactly as
             // the window's partitionBy grouped nulls together
             val cond =
-              keyCols.map(k => base(k) <=> dKeys(k)).reduce(_ && _)
+              keys.map(k => base(k) <=> dKeys(k)).reduce(_ && _)
             Some(base.join(broadcast(dKeys), cond, "left_anti")
               .unionByName(live))
           }
@@ -1660,11 +1659,11 @@ object VersionedStore {
           // fallback: delta volume rivals the base — one windowed
           // merge over base ⊕ deltas (base rows carry a null op)
           val baseScan =
-            filtered(spark.read.schema(withOp).parquet(basePaths: _*))
+            filtered(GenStatsFileIndex.read(spark, baseGens, withOp))
               .withColumn("_gen_epoch",
                 regexp_extract(input_file_name(), "/g(\\d{7})/", 1)
                   .cast("long"))
-          val w = Window.partitionBy(keyCols.map(col): _*)
+          val w = Window.partitionBy(keys.map(col): _*)
             .orderBy(col("_gen_epoch").desc)
           Some(baseScan.unionByName(deltas)
             .withColumn("_rn", row_number().over(w))
@@ -1689,24 +1688,23 @@ object VersionedStore {
     * `beyond(to, cur)` are the caller's error texts. */
   private[graft] def resolveSnapshot(root: String, from: Option[Long],
       to: Option[Long])(below: (Long, Long) => String,
-      beyond: (Long, Long) => String): (Seq[Commit], Long, Long) = {
-    val committed = commits(root)
-    val cur = committed.lastOption.map(_.epoch).getOrElse(0L)
+      beyond: (Long, Long) => String): (RootListing, Long, Long) = {
+    val view = listRoot(root)
+    val cur = view.current
     val (f, t) = (from.getOrElse(cur), to.getOrElse(cur))
-    val wm = retentionWatermark(root)
-    require(f >= wm, below(f, wm))
+    require(f >= view.watermark, below(f, view.watermark))
     require(t <= cur, beyond(t, cur))
-    (committed, f, t)
+    (view, f, t)
   }
 
   /** [[resolveSnapshot]] of a one-epoch read, its errors worded
-    * `<what> <epoch> is ...`: the commit log and the resolved epoch. */
+    * `<what> <epoch> is ...`: the root listing and the resolved epoch. */
   private def snapshotAt(root: String, what: String,
-                         epoch: Option[Long]): (Seq[Commit], Long) = {
-    val (committed, e, _) = resolveSnapshot(root, epoch, epoch)(
+                         epoch: Option[Long]): (RootListing, Long) = {
+    val (view, e, _) = resolveSnapshot(root, epoch, epoch)(
       (e, wm) => s"$what $e is below the vacuum retention watermark $wm",
       (e, cur) => s"$what $e is beyond current epoch $cur")
-    (committed, e)
+    (view, e)
   }
 
   /** Time-travel read: the exact store contents as of `epoch`, under
@@ -1718,17 +1716,30 @@ object VersionedStore {
     * (those generations may be gone) and above the current epoch
     * (nothing committed to serve). */
   def readAsOf(spark: SparkSession, root: String, epoch: Long): DataFrame = {
-    val (committed, _) = snapshotAt(root, "asOf epoch", Some(epoch))
-    val ddl = schemaAsOf(root, epoch)
-    val chains = snapshotChains(root, committed, epoch).values
-      .filter(_.paths.nonEmpty)
-    if (chains.isEmpty) emptyFrameOf(spark, ddl)
-    else readChains(spark, keyColsOf(root), ddl, chains)
+    val (view, e) = snapshotAt(root, "asOf epoch", Some(epoch))
+    readAt(spark, root, view, e)
   }
 
   /** The current snapshot ([[readAsOf]] at [[currentEpoch]]). */
   def read(spark: SparkSession, root: String): DataFrame =
-    readAsOf(spark, root, currentEpoch(root))
+    readCurrent(spark, root).getOrElse(readAsOf(spark, root, 0L))
+
+  /** The current snapshot, None while the store has no commit — off
+    * the one root listing either way. */
+  private[graft] def readCurrent(spark: SparkSession,
+                                 root: String): Option[DataFrame] = {
+    val (view, e) = snapshotAt(root, "asOf epoch", None)
+    Option.when(e > 0L)(readAt(spark, root, view, e))
+  }
+
+  private def readAt(spark: SparkSession, root: String, view: RootListing,
+                     epoch: Long): DataFrame = {
+    val ddl = view.schemaAt(epoch)
+    val chains = snapshotChains(root, view.commits, epoch).values
+      .filter(_.paths.nonEmpty)
+    if (chains.isEmpty) emptyFrameOf(spark, ddl)
+    else readChains(spark, keyColsOf(root), ddl, chains)
+  }
 
   /** [[readAsOf]] addressed by wall-clock instead of epoch — Delta's
     * `TIMESTAMP AS OF`: serves the newest epoch committed at or before
@@ -1758,20 +1769,20 @@ object VersionedStore {
     * generations. */
   def lookup(spark: SparkSession, root: String, keys: DataFrame,
              epoch: Long = Long.MaxValue): DataFrame = {
-    val (committed, e) = snapshotAt(root, "lookup epoch",
+    val (view, e) = snapshotAt(root, "lookup epoch",
       Option.when(epoch != Long.MaxValue)(epoch))
     val keyCols = keyColsOf(root)
     val n = requireBucketCount(root)
-    val ddl = schemaAsOf(root, e)
+    val ddl = view.schemaAt(e)
     val storeSchema = StructType.fromDDL(ddl)
     val keyFields = keyCols.map(kc => storeSchema(kc))
     // collect WITHOUT distinct: a projected local frame folds to a
     // LocalRelation (zero jobs), while .distinct() would force an
     // aggregate job; the dedup is driver math over driver-small keys
     val keyRows = keys
-      .select(castToStoreKeys(root, keys, keyCols): _*).collect().distinct
+      .select(castToStoreKeys(ddl, keys, keyCols): _*).collect().distinct
     val buckets = keyBuckets(keyRows.toSeq, keyFields, n)
-    val chains = snapshotChains(root, committed, e, only = Some(buckets.toSet))
+    val chains = snapshotChains(root, view.commits, e, only = Some(buckets.toSet))
       .values.filter(_.paths.nonEmpty)
     if (chains.isEmpty) emptyFrameOf(spark, ddl)
     else {
@@ -1828,9 +1839,9 @@ object VersionedStore {
   private[graft] def probeForKeysWithExactness(
       spark: SparkSession, root: String,
       keys: DataFrame, resolveMor: Boolean = true): (DataFrame, Boolean) = {
-    val committed = commits(root)
-    val cur = committed.lastOption.map(_.epoch).getOrElse(0L)
-    val ddl = schemaAsOf(root, cur)
+    val view = listRoot(root)
+    val (committed, cur) = (view.commits, view.current)
+    val ddl = view.schemaAt(cur)
     val keyCols = keyColsOf(root)
     // ONE NARROW job: `keys` frames are distinct-by-construction in
     // every caller (batch ids, aggregated gram keys), so limit+collect
@@ -1839,7 +1850,7 @@ object VersionedStore {
     // every micro-batch; the round-16 bench caught it). A caller
     // passing duplicates just falls to the large path early, or
     // pushes a redundant-but-sound predicate — never a wrong result.
-    val probeRows = keys.select(castToStoreKeys(root, keys, keyCols): _*)
+    val probeRows = keys.select(castToStoreKeys(ddl, keys, keyCols): _*)
       .limit(1001).collect()
     if (probeRows.isEmpty) return (emptyFrameOf(spark, ddl), true)
     if (probeRows.length <= 1000) {
@@ -1881,10 +1892,9 @@ object VersionedStore {
     * schema; `_EMPTY` generations read as zero rows. */
   private def readChainsRaw(spark: SparkSession, ddl: String,
                             chains: Iterable[Chain]): DataFrame = {
-    val target = StructType.fromDDL(ddl)
-    val paths = chains.flatMap(_.paths).toSeq.distinct.sorted
-    if (paths.isEmpty) emptyFrameOf(spark, ddl)
-    else spark.read.schema(target).parquet(paths: _*)
+    val gens = chains.flatMap(_.gens).toSeq.distinctBy(_.dir).sortBy(_.dir)
+    if (gens.isEmpty) emptyFrameOf(spark, ddl)
+    else GenStatsFileIndex.read(spark, gens, StructType.fromDDL(ddl))
   }
 
   /** DATA-SKIPPING read: the snapshot's rows with `colName` in
@@ -1905,9 +1915,9 @@ object VersionedStore {
     * regardless of how much the manifest pruned. */
   def readPruned(spark: SparkSession, root: String, colName: String,
                  lo: Any, hi: Any, epoch: Long = Long.MaxValue): DataFrame = {
-    val (committed, e) = snapshotAt(root, "readPruned epoch",
+    val (view, e) = snapshotAt(root, "readPruned epoch",
       Option.when(epoch != Long.MaxValue)(epoch))
-    val ddl = schemaAsOf(root, e)
+    val ddl = view.schemaAt(e)
     val schema = StructType.fromDDL(ddl)
     require(schema.fieldNames.contains(colName),
       s"no such column: $colName (schema [$ddl])")
@@ -1915,7 +1925,7 @@ object VersionedStore {
     val loS = DataSkipping.renderBound(dt, lo)
     val hiS = DataSkipping.renderBound(dt, hi)
     val (fs, _) = fsOf(root)
-    val chains = snapshotChains(root, committed, e).values
+    val chains = snapshotChains(root, view.commits, e).values
       .filter(_.paths.nonEmpty)
     // chain survives iff ANY generation's stats overlap (or are
     // absent) — stats fan out on the driver pool like every other
@@ -2023,28 +2033,29 @@ object VersionedStore {
     * ([[resolveGeneration]], one listing) and cached. */
   def history(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    val committed = commits(root)
-    val wm = retentionWatermark(root)
-    val (fs, dir) = fsOf(root)
+    val view = listRoot(root)
+    import view.{dir, fs}
+    val (committed, wm) = (view.commits, view.watermark)
     val deltaEpochs = committed.filter(c => isDeltaKind(c.kind))
       .map(_.epoch).toSet
     val genPath =
-      scala.collection.mutable.Map.empty[(Int, Long), Option[String]]
-    def resolveGen(b: Int, e: Long): Option[String] =
+      scala.collection.mutable.Map.empty[(Int, Long), Option[Gen]]
+    def resolveGen(b: Int, e: Long): Option[Gen] =
       genPath.getOrElseUpdate((b, e), resolveGeneration(fs, dir, b, e))
     // fold forward ONCE: per epoch, each bucket's serving chain
     val epochChains: Seq[(Commit, Serving)] =
       committed.zip(committed.scanLeft(Map.empty: Serving)(serve(_, _)).tail)
     // ---- plain (delta-free) serving entries: footer-counted
     val readable = epochChains.filter(_._1.epoch >= wm)
-    val plainGens: Seq[String] = readable.flatMap(_._2.collect {
+    val plainGens: Seq[Gen] = readable.flatMap(_._2.collect {
       case (b, (Some(e), Nil)) => resolveGen(b, e)
     }.flatten).distinct
-    def genKey(g: String): String = new Path(g).toUri.getPath
+    def genKey(g: Gen): String = new Path(g.dir).toUri.getPath
+    // the schema the history's scans read through: the current epoch's
+    lazy val ddl = view.schemaAt(view.current)
     val fromFooters: Map[String, Option[Long]] =
       parallelMap(plainGens) { g =>
-        val files = fs.listStatus(new Path(g)).map(_.getPath).filter(isPartFile)
-        val counts: Seq[Option[Long]] = files.toSeq.map { p =>
+        val counts: Seq[Option[Long]] = g.files.map(_.getPath).map { p =>
           try {
             val in = org.apache.parquet.hadoop.util.HadoopInputFile
               .fromPath(p, fs.getConf)
@@ -2058,7 +2069,7 @@ object VersionedStore {
     val bad = plainGens.filter(g => fromFooters(genKey(g)).isEmpty)
     val scanned: Map[String, Long] =
       if (bad.isEmpty) Map.empty
-      else spark.read.parquet(bad: _*)
+      else GenStatsFileIndex.read(spark, bad, StructType.fromDDL(ddl))
         .groupBy(input_file_name().as("f")).count()
         .as[(String, Long)].collect().toSeq
         .map { case (f, n) => (new Path(f).getParent.toUri.getPath, n) }
@@ -2081,14 +2092,12 @@ object VersionedStore {
     val netByBucketEpoch: Map[(Int, Long), Long] =
       if (chainGens.isEmpty) Map.empty
       else {
-        val paths = chainGens
-          .flatMap { case (b, e, _) => resolveGen(b, e) }.distinct.sorted
-        val ddl = schemaAsOf(root,
-          committed.lastOption.map(_.epoch).getOrElse(0L))
+        val gens = chainGens.flatMap { case (b, e, _) => resolveGen(b, e) }
+          .distinct.sortBy(_.dir)
         val withOp = StructType(
           StructType.fromDDL(ddl).fields :+ StructField(OpField, StringType))
         val segDf = chainGens.toDF("_b", "_gen_epoch", "_seg")
-        val events = spark.read.schema(withOp).parquet(paths: _*)
+        val events = GenStatsFileIndex.read(spark, gens, withOp)
           .withColumn("_b",
             regexp_extract(input_file_name(), "/b(\\d{5})/", 1).cast("int"))
           .withColumn("_gen_epoch",
@@ -2157,24 +2166,22 @@ object VersionedStore {
     * number of files published. */
   def exportSnapshot(spark: SparkSession, root: String, epoch: Long,
                      dest: String): Long = {
-    val (committed, _) = snapshotAt(root, "export epoch", Some(epoch))
-    val (fs, dir) = fsOf(root)
+    val (view, _) = snapshotAt(root, "export epoch", Some(epoch))
+    import view.{dir, fs}
     val (dfs0, destPath) = fsOf(dest)
     dfs0.delete(destPath, true)
     dfs0.mkdirs(destPath)
-    val chains = snapshotChains(root, committed, epoch)
+    val chains = snapshotChains(root, view.commits, epoch)
     // (source file, flat destination file) pairs — metadata only
     val pairs: Seq[(String, String)] = chains.toSeq.flatMap {
       case (b, ch) if ch.isPlain => ch.base.flatMap(_._2).toSeq.flatMap { gen =>
-        fs.listStatus(new Path(gen)).map(_.getPath)
-          .filter(isPartFile).sortBy(_.getName)
-          .map(p => (p.toString, new Path(destPath,
-            f"b$b%05d-${new Path(gen).getName}-${p.getName}").toString))
+        gen.files.map(_.getPath).map(p => (p.toString, new Path(destPath,
+          f"b$b%05d-${new Path(gen.dir).getName}-${p.getName}").toString))
       }
       case _ => Seq.empty
     }
     Sinks.copyFiles(spark, pairs)
-    val ddl = schemaAsOf(root, epoch)
+    val ddl = view.schemaAt(epoch)
     // delta'd buckets: COMPACT-THEN-COPY (round-15) — their resolved
     // rows are materialized by one write job over only those chains,
     // but PER BUCKET (key-clustered and bloomed like any base
@@ -2355,18 +2362,19 @@ object VersionedStore {
                 images: Boolean = false): DataFrame = {
     require(fromEpoch <= toEpoch,
       s"changelog range is reversed: $fromEpoch > $toEpoch")
-    val (committed, _, _) =
+    val (view, _, _) =
       resolveSnapshot(root, Some(fromEpoch), Some(toEpoch))(
         (e, wm) => s"changelog from-epoch $e is below the vacuum watermark $wm",
         (e, cur) => s"changelog to-epoch $e beyond current $cur")
     val keyCols = keyColsOf(root)
 
+    val committed = view.commits
     val changedBuckets = committed
       .filter(c => c.epoch > fromEpoch && c.epoch <= toEpoch)
       .flatMap(_.buckets).distinct.sorted
     // both sides conform to the TO-epoch schema (the Delta-CDF
     // convention): columns added in (from, to] show null old images
-    val ddl = schemaAsOf(root, toEpoch)
+    val ddl = view.schemaAt(toEpoch)
     def side(asOf: Long): DataFrame = {
       val chains =
         snapshotChains(root, committed, asOf, Some(changedBuckets.toSet))

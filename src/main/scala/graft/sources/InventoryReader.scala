@@ -44,25 +44,21 @@ object InventoryReader {
     * `_corrupt_record` ([[corruptRows]] alone), which Spark rejects on
     * a raw scan.
     *
-    * Column pruning: by default the CSV reader tokenizes only the
-    * columns a query reads, and flags a SHORT row (`"bad","row"`) in
-    * `_corrupt_record` only when the query reads a column the row
-    * lacks. A query over every column of [[goodRows]] (a cached scan,
-    * a full collect) drops the row; a count, a narrow projection, an
-    * aggregate or an observation over this scan takes it as good.
-    * `wholeRow = true` parses every column of every row (the per-read
-    * `columnPruning=false`), so `_corrupt_record` is right whatever
-    * sits above the scan; it stays off for the plain re-reads, which
-    * it would slow. */
-  def readS3Inventory(spark: SparkSession, path: String,
-                      wholeRow: Boolean = false): DataFrame = {
-    val reader = spark.read
+    * Every row is parsed whole (the per-read `columnPruning=false`):
+    * a column-pruned CSV scan tokenizes only the columns a query reads
+    * and flags a SHORT row (`"bad","row"`) in `_corrupt_record` only
+    * when the query reads a column the row lacks, so a count, a narrow
+    * projection, an aggregate or an observation over the scan would
+    * take the row as good. Whole-row parsing keeps `_corrupt_record`
+    * right whatever sits above the scan. */
+  def readS3Inventory(spark: SparkSession, path: String): DataFrame =
+    spark.read
       .schema(s3InventorySchema)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .option("quote", "\"")
-    (if (wholeRow) reader.option("columnPruning", "false") else reader).csv(path)
-  }
+      .option("columnPruning", "false")
+      .csv(path)
 
   /** The good-row predicate: parsed cleanly and carries a key. The one
     * statement of it, for [[goodRows]]' filter and for observations

@@ -34,11 +34,16 @@ object CountingFs {
   // ledger-probe asymptote pins discriminate on parquet opens so
   // metadata cadence can't mask a data-path regression
   val parquetOpens = new java.util.concurrent.atomic.AtomicInteger(0)
+  // existence probes: a HEAD request each on an object store.
+  // RawLocalFileSystem answers `exists` from java.io.File without
+  // going through getFileStatus, so they need their own counter
+  val existsCalls = new java.util.concurrent.atomic.AtomicInteger(0)
   def writeOps: Int = creates.get() + mkdirs.get() + renames.get() +
     deletes.get()
-  def allOps: Int = writeOps + statusCalls.get() + opens.get()
+  def allOps: Int = writeOps + statusCalls.get() + opens.get() +
+    existsCalls.get()
   def reset(): Unit = {
-    statusCalls.set(0); opens.set(0); bytesRead.set(0L)
+    statusCalls.set(0); opens.set(0); bytesRead.set(0L); existsCalls.set(0)
     creates.set(0); mkdirs.set(0); renames.set(0); deletes.set(0)
     bytesWritten.set(0L); parquetOpens.set(0)
   }
@@ -94,6 +99,11 @@ class CountingFs extends RawLocalFileSystem {
   override def getFileStatus(p: Path): FileStatus = {
     if (!inList.get()) CountingFs.statusCalls.incrementAndGet()
     super.getFileStatus(p)
+  }
+
+  override def exists(p: Path): Boolean = {
+    CountingFs.existsCalls.incrementAndGet()
+    super.exists(p)
   }
 
   override def listStatus(p: Path): Array[FileStatus] = {

@@ -40,12 +40,10 @@ class InventoryReaderSpec extends SparkSpec {
     def split(raw: org.apache.spark.sql.DataFrame) =
       raw.agg(count_if($"_corrupt_record".isNotNull), count_if(InventoryReader.isGood))
         .as[(Long, Long)].head()
-    // the ListProducer pass: observed over the raw scan, parsed whole
-    assert(split(InventoryReader.readS3Inventory(spark, glob, wholeRow = true)) == ((1L, 7L)))
-    // pruned, the reader tokenizes only Key and the short row passes
-    // as good: the hazard wholeRow exists for
-    assert(split(InventoryReader.readS3Inventory(spark, glob)) == ((0L, 8L)))
-    // a query reading every column flags it either way
+    // every scan is parsed whole: an aggregate that reads only Key
+    // still flags the short row (a column-pruned scan read (0, 8))
+    assert(split(InventoryReader.readS3Inventory(spark, glob)) == ((1L, 7L)))
+    // and so does a query reading every column
     assert(InventoryReader.goodRows(InventoryReader.readS3Inventory(spark, glob))
       .collect().length == 7)
   }
