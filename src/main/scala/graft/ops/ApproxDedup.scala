@@ -54,6 +54,13 @@ object ApproxDedup {
     * corpus — the per-run [[requireBoundedBlocks]] scan (and, worse,
     * re-deriving the blocking expression behind it) disappears from
     * the steady-state plan. */
+  /** The fewest partitions the edit-distance kernels run on, whatever
+    * the vocabulary's size estimate. At ~30 ms CPU per input KB, a
+    * vocabulary the optimizer under-sizes would otherwise run its whole
+    * variant join on one core; on a truly tiny vocabulary the floor
+    * costs a few hash-agg states of a few KB each. */
+  private[graft] val EditKernelMinPartitions = 4
+
   /** Edit-distance-1 similarity join over a distinct-string table —
     * SymSpell's deletion-neighborhood blocking (Garbe's symmetric
     * delete algorithm; the lossless-blocking argument is classical):
@@ -90,10 +97,13 @@ object ApproxDedup {
     // 5 s CPU from a 150 KB vocabulary, round-17 profile), so 4 KB/task
     // ≈ 100+ ms of real CPU per task; a vocabulary below ~one task's
     // worth no longer fans out to full core count just to duplicate
-    // hash-agg state. Production vocabularies saturate the clamp.
+    // hash-agg state. Production vocabularies saturate the clamp. The
+    // estimate can be far too low (a vocabulary exploded from a small
+    // scan reads as the scan), so the count never drops below
+    // [[EditKernelMinPartitions]].
     val w0 = words.select(col(wordCol).cast("string").as("_w"))
       .filter(col("_w").isNotNull)
-    val par = Parallelism.boundedCount(w0, 4 * 1024L)
+    val par = Parallelism.boundedCount(w0, 4 * 1024L, EditKernelMinPartitions)
     val w = w0
       .repartition(par, col("_w"))
       .distinct()
@@ -130,7 +140,9 @@ object ApproxDedup {
       val base = df.select(col(c).cast("string").as(out))
         .filter(col(out).isNotNull)
       deletionVariants(
-        base.repartition(Parallelism.boundedCount(base, 4 * 1024L), col(out))
+        base.repartition(
+          Parallelism.boundedCount(base, 4 * 1024L, EditKernelMinPartitions),
+          col(out))
           .distinct(),
         out, "_v")
     }

@@ -26,18 +26,26 @@ import org.apache.spark.sql.DataFrame
 private[graft] object Parallelism {
 
   /** Partition count for a forced repartition of `df`: size estimate
-    * divided by `targetBytes`, clamped to [1, defaultParallelism].
+    * divided by `targetBytes`, clamped to [minPartitions,
+    * defaultParallelism] (the floor itself capped at defaultParallelism).
     * An unknown/absurd estimate (> 1 TB — Catalyst's "no stats"
     * posture is Long.MaxValue-ish) falls back to full parallelism:
     * better to over-parallelize a frame we cannot size than to
-    * serialize a genuinely large one. */
-  def boundedCount(df: DataFrame, targetBytes: Long): Int = {
+    * serialize a genuinely large one.
+    *
+    * The estimate can also be far too LOW: without CBO a generator or
+    * a projection over a small scan is sized from the scan, so a frame
+    * that explodes to megabytes may read as a few bytes. A CPU-dense
+    * caller passes `minPartitions` so that no estimate serializes its
+    * kernel on one core. */
+  def boundedCount(df: DataFrame, targetBytes: Long, minPartitions: Int = 1): Int = {
     val par = df.sparkSession.sparkContext.defaultParallelism
+    val floor = math.max(1, math.min(minPartitions, par))
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (est <= 0 || est > BigInt(1L << 40)) par
     else {
       val want = ((est + targetBytes - 1) / targetBytes).toLong
-      math.max(1L, math.min(par.toLong, want)).toInt
+      math.max(floor.toLong, math.min(par.toLong, want)).toInt
     }
   }
 }

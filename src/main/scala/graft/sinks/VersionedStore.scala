@@ -1,7 +1,7 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1358,6 +1358,24 @@ object VersionedStore {
     writer.partitionBy("_bucket")
   }
 
+  /** A set of bucket ids in [0, n) as ⌈n/64⌉ named long aggregates
+    * (observed metrics are longs): mask `_bucketsI` ORs bit j of every
+    * row whose bucket is 64·I + j. */
+  private def bucketMasks(bucket: Column, n: Int): Seq[Column] =
+    (0 until (n + 63) / 64).map { i =>
+      bit_or(when(bucket >= 64 * i && bucket < 64 * (i + 1),
+        call_function("shiftleft", lit(1L), bucket - 64 * i))).as(s"_buckets$i")
+    }
+
+  /** The bucket ids packed by [[bucketMasks]] (a missing or null mask,
+    * as over no rows, holds none), ascending. */
+  private def maskedBuckets(masks: Map[String, Long], n: Int): Seq[Int] =
+    for {
+      i <- 0 until (n + 63) / 64
+      m = masks.getOrElse(s"_buckets$i", 0L)
+      j <- 0 until 64 if (m >>> j & 1L) == 1L
+    } yield 64 * i + j
+
   private def writeEpoch(batch: DataFrame, keyCols: Seq[String], root: String,
                          nBuckets: Int, delete: Boolean, tag: String,
                          opCol: Option[String] = None,
@@ -1366,8 +1384,15 @@ object VersionedStore {
     val w = beginWrite(batch, keyCols, root, nBuckets, tag, opCol)
     import w.{bucketExpr, epoch, spark, storeDdl}
 
-    // one materialization; every later collect is ≤ n small ints
-    val mat = batch.withColumn("_bucket", bucketExpr).localCheckpoint()
+    // one materialization; every later collect is ≤ n small ints. A
+    // plain upsert or delete observes its bucket set on it, so no
+    // discovery job follows
+    val bucketed = batch.withColumn("_bucket", bucketExpr)
+    val bucketSet = Observation()
+    val masks = bucketMasks(col("_bucket"), w.n)
+    val mat = (if (opCol.isDefined) bucketed
+      else bucketed.observe(bucketSet, masks.head, masks.tail: _*))
+      .localCheckpoint()
 
     // normalize the three write shapes to: upsert rows (null = none)
     // + the full remove-key set (every batch key anti-joins out; the
@@ -1401,8 +1426,11 @@ object VersionedStore {
           probe.getSeq[Int](2).sorted,
           probe.getSeq[Int](3).toSeq)
       case None =>
-        val buckets = mat.select("_bucket").distinct()
-          .collect().map(_.getInt(0)).toSeq
+        val seen = Sinks.observed(bucketSet, s"the epoch-$epoch batch of $root")
+        // AQE drops an observation only along with the whole output
+        require(seen.nonEmpty || mat.isEmpty,
+          s"no bucket set observed on the epoch-$epoch batch of $root")
+        val buckets = maskedBuckets(seen, w.n)
         if (delete) (null: DataFrame, mat, Seq.empty[Int], buckets)
         else (mat, null: DataFrame, buckets, Seq.empty[Int])
     }

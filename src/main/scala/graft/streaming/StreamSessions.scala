@@ -6,22 +6,33 @@ import org.apache.spark.sql.{DataFrame, GraftSessionShim, SparkSession}
   *
   * A stateful stream's state-store partition count is pinned from
   * `spark.sql.shuffle.partitions` when its checkpoint is created, and
-  * every micro-batch thereafter reads and writes one state file per
-  * partition per batch (plus its maintenance snapshots) — so a count
-  * inherited from the host session's corpus-scale parallelism
-  * multiplies per-batch FIXED I/O and task count with no data to
-  * spread. Round-17 profile: the two-batch stats stream (q49) paid
-  * 1144 fs ops and 32 near-empty state tasks per batch at 32 session
-  * cores; the identical stream at 8 state partitions pays ~a quarter.
-  * The stateless foreachBatch maintainers hit the same wall through
-  * their per-batch aggregations.
+  * every micro-batch thereafter loads, writes and commits one state
+  * store per partition (plus its maintenance snapshots), whether or not
+  * the partition holds a row. So the count is never inherited from the
+  * host session's corpus-scale parallelism (round-17 profile: the
+  * two-batch stats stream, q49, paid 1144 fs ops and 32 near-empty
+  * state tasks per batch at 32 session cores, about four times its
+  * cost at 8; the stateless foreachBatch maintainers hit the same wall
+  * through their per-batch aggregations). Nor does one fixed count fit
+  * every stream; each count comes from the query's own state bound:
+  *
+  *  - a query whose live state has a small known bound passes its
+  *    count to [[microBatch]]. The monitor's stats stream
+  *    ([[TaskPipeline.runStatsJob]]) keeps at most 11 window rows (a
+  *    10-minute watermark over 1-minute windows), so it plans on one
+  *    partition; at 8, its near-empty state tasks took about half of
+  *    each batch;
+  *  - a query whose state grows with its keys (the sketch streams
+  *    [[HistStream]], [[FreqStream]], [[StreamDistinct]],
+  *    [[SketchStream]]), and every other stream builder, keeps the
+  *    default [[StatePartitions]].
   *
   * Two session shapes, both CLONES of the caller's session:
   *
   *  - [[microBatch]]: every graft stream builder plans against it —
-  *    shuffle partitions = [[StatePartitions]], AQE as the host has it;
+  *    shuffle partitions as above, AQE as the host has it;
   *  - [[step]]: the maintainer steps ([[TrainStream]], [[LmStream]],
-  *    [[ReplicaStream]]) run on it — the same, with AQE off.
+  *    [[ReplicaStream]]) run on it — [[StatePartitions]], AQE off.
   *
   * A clone copies the parent's RUNTIME SQL conf (overrides set after
   * the session was built, such as `spark.graft.store.validateUnique`,
@@ -36,8 +47,9 @@ import org.apache.spark.sql.{DataFrame, GraftSessionShim, SparkSession}
   */
 object StreamSessions {
 
-  /** State/shuffle partition count of every streaming plan and
-    * maintainer step: sized to micro-batch volume, not cluster width. */
+  /** State/shuffle partition count of a streaming plan whose state
+    * grows with its keys, and of every maintainer step: sized to
+    * micro-batch volume, not cluster width. */
   val StatePartitions = 8
 
   private val AqeKey = "spark.sql.adaptive.enabled"
@@ -49,8 +61,13 @@ object StreamSessions {
     clone
   }
 
-  def microBatch(spark: SparkSession): SparkSession =
-    cloneWith(spark, PartitionsKey -> StatePartitions.toString)
+  /** A clone that plans a stream on `partitions` state/shuffle
+    * partitions (taken by a new checkpoint only). */
+  def microBatch(spark: SparkSession,
+                 partitions: Int = StatePartitions): SparkSession = {
+    require(partitions >= 1, s"state partitions must be >= 1: $partitions")
+    cloneWith(spark, PartitionsKey -> partitions.toString)
+  }
 
   /** `batch` bound to a session that plans a maintainer step: AQE off
     * and micro-batch shuffle sizing. Every frame of a step is

@@ -121,6 +121,19 @@ object TaskPipeline {
       .start()
   }
 
+  /** The stats query's event-time bounds: 1-minute tumbling windows,
+    * held open 10 minutes for late rows. */
+  private val StatsWindowMinutes = 1
+  private val StatsLatenessMinutes = 10
+
+  /** State/shuffle partitions of a NEW stats checkpoint. The watermark
+    * evicts each window once it closes more than the lateness behind the
+    * newest event time, so at most lateness / width + 1 = 11 window rows
+    * are ever live. One partition holds them; each further partition
+    * would only add a fixed per-batch state-store load, delta file and
+    * commit (8 partitions took ~half of every stats batch). */
+  private[graft] val StatsStatePartitions = 1
+
   /** T4 — incremental monitor→stat aggregation: watermarked 1-minute
     * tumbling windows over the success/failure log, upserted per batch.
     * Late rows inside the watermark are aggregated correctly — the
@@ -131,11 +144,26 @@ object TaskPipeline {
     runStatsJob(spark, logDir, graft.connectors.ParquetStore(statDir), checkpoint)
 
   /** Connector-trait variant: the stat table is any
-    * [[graft.connectors.KeyedStore]] (DynamoDB/Delta in production). */
+    * [[graft.connectors.KeyedStore]] (DynamoDB/Delta in production).
+    *
+    * A new checkpoint plans its window state on
+    * [[StatsStatePartitions]] (one) partition; a resumed checkpoint
+    * keeps the count it was created with (older ones hold 8), with the
+    * same stat rows either way.
+    * Each batch is one state-store job and the store's upsert, under
+    * the label `stats batch <id>`. */
   def runStatsJob(spark: SparkSession, logDir: String,
                   store: graft.connectors.KeyedStore,
-                  checkpoint: String): StreamingQuery = {
-    val log = StreamSessions.microBatch(spark).readStream
+                  checkpoint: String): StreamingQuery =
+    runStatsJob(spark, logDir, store, checkpoint, StatsStatePartitions)
+
+  /** [[runStatsJob]] with the state partition count of a new checkpoint
+    * given (a spec builds a checkpoint at the former default with it). */
+  private[graft] def runStatsJob(spark: SparkSession, logDir: String,
+                                 store: graft.connectors.KeyedStore,
+                                 checkpoint: String,
+                                 partitions: Int): StreamingQuery = {
+    val log = StreamSessions.microBatch(spark, partitions).readStream
       .schema(StructType(Seq(
         StructField("Key", StringType),
         StructField("Size", LongType),
@@ -144,8 +172,8 @@ object TaskPipeline {
       .parquet(logDir)
       .withColumn("event_time", timestamp_seconds(col("replication_time")))
     log
-      .withWatermark("event_time", "10 minutes")
-      .groupBy(window(col("event_time"), "1 minute"))
+      .withWatermark("event_time", s"$StatsLatenessMinutes minutes")
+      .groupBy(window(col("event_time"), s"$StatsWindowMinutes minute"))
       .agg(
         sum(when(col("ok") === 1, col("Size")).otherwise(0L)).as("success_size"),
         sum(when(col("ok") === 1, 1L).otherwise(0L)).as("success_num"),

@@ -1,7 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
 import org.apache.spark.sql.functions._
-import graft.ops.ApproxDedup
+import graft.ops.{ApproxDedup, Parallelism}
 
 /** SymSpell deletion-neighborhood edit-distance join: losslessness vs
   * brute force on adversarial perturbations, exactness of the
@@ -24,6 +25,30 @@ class EditDistJoinSpec extends SparkSpec {
       a <- distinct; b <- distinct
       if a < b && lev(a, b) == 1
     } yield (a, b)).toSet
+  }
+
+  test("an under-estimated vocabulary still spreads the kernel over its floor") {
+    // 3,000 words exploded from a one-row scan: without CBO the frame
+    // is sized from the scan, a few bytes, while it holds ~20 KB
+    val vocab = spark.range(1)
+      .select(explode(sequence(lit(0L), lit(2999L))).as("i"))
+      .select(concat(lit("word"), col("i").cast("string")).as("w"))
+    val est = vocab.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(est < 4096 && vocab.count() == 3000,
+      s"the frame must read as under one 4 KB task, estimate $est")
+    assert(Parallelism.boundedCount(vocab, 4 * 1024L) == 1)
+    val par = spark.sparkContext.defaultParallelism
+    val floor = math.min(ApproxDedup.EditKernelMinPartitions, par)
+    assert(Parallelism.boundedCount(vocab, 4 * 1024L, minPartitions = 64) == par,
+      "the floor is capped at the session's parallelism")
+    // the join's keyed repartition takes the kernel's floor
+    val pairs = ApproxDedup.editDistance1Pairs(vocab, "w")
+    val counts = pairs.queryExecution.optimizedPlan.collect {
+      case r: RepartitionByExpression => r.numPartitions
+    }
+    assert(counts.nonEmpty && counts.forall(_ == floor), counts)
+    assert(pairs.filter(col("word_a") === "word1" && col("word_b") === "word10")
+      .count() == 1)
   }
 
   test("lossless vs brute force on perturbed vocabulary") {

@@ -260,6 +260,85 @@ class TaskPipelineSpec extends SparkSpec {
     assert(labels.exists(_.startsWith("executor")) && labels.exists(_.startsWith("stats")))
   }
 
+  /** Appends (Key, Size, ok, replication_time) rows to a monitor log. */
+  private def landLog(logDir: String, rows: (String, Long, Int, Long)*): Unit =
+    rows.toDF("Key", "Size", "ok", "replication_time")
+      .write.mode("append").parquet(logDir)
+
+  test("a new stats checkpoint holds one state partition; an 8-partition one resumes at 8") {
+    val root = tmpDir("statsparts")
+    val logDir = s"$root/log"
+    def instances(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
+      q.lastProgress.stateOperators.map(_.numStateStoreInstances).toSet.toSeq match {
+        case Seq(n) => n
+        case ns => fail(s"one state operator expected, got instances $ns")
+      }
+    // a store that runs each batch frame once: the metric sums every
+    // execution of the state stage
+    def store(name: String) = graft.connectors.VersionedKeyedStore(s"$root/$name")
+    def statRows(name: String): Seq[(Long, Long, Long, Long, Long)] =
+      store(name).read(spark).get.select("start_time", "success_size",
+        "success_num", "failed_size", "failed_num")
+        .as[(Long, Long, Long, Long, Long)].collect().toSeq.sorted
+    landLog(logDir, ("k1", 100L, 1, 30L), ("k2", 50L, 0, 45L), ("k3", 10L, 1, 90L))
+
+    // batch 1: a new checkpoint on the default path, and one built at
+    // the former default of 8 partitions
+    val one = TaskPipeline.runStatsJob(spark, logDir, store("stat1"), s"$root/ckpt1")
+    val eight = TaskPipeline.runStatsJob(spark, logDir, store("stat8"), s"$root/ckpt8",
+      partitions = graft.streaming.StreamSessions.StatePartitions)
+    try {
+      one.processAllAvailable()
+      eight.processAllAvailable()
+      assert(instances(one) == 1)
+      assert(instances(eight) == 8)
+    } finally eight.stop()
+
+    // batch 2 (a late-within-watermark row included): the 8-partition
+    // checkpoint resumes on the default path and keeps its count
+    landLog(logDir, ("k4", 7L, 1, 40L), ("k5", 20L, 0, 200L))
+    val resumed = TaskPipeline.runStatsJob(spark, logDir, store("stat8"), s"$root/ckpt8")
+    try {
+      one.processAllAvailable()
+      resumed.processAllAvailable()
+      assert(instances(one) == 1)
+      assert(instances(resumed) == 8)
+    } finally { one.stop(); resumed.stop() }
+    assert(statRows("stat1") == Seq(
+      (0L, 107L, 2L, 50L, 1L), (60L, 10L, 1L, 0L, 0L), (180L, 0L, 0L, 20L, 1L)))
+    assert(statRows("stat8") == statRows("stat1"))
+  }
+
+  test("a stats batch is its state-store job and the store's upsert, one state task") {
+    val root = tmpDir("statsjobs")
+    val logDir = s"$root/log"
+    val stat = graft.connectors.VersionedKeyedStore(s"$root/stat")
+    landLog(logDir, ("k1", 100L, 1, 30L), ("k2", 50L, 0, 45L), ("k3", 10L, 1, 90L))
+    val q = TaskPipeline.runStatsJob(spark, logDir, stat, s"$root/ckpt")
+    def drain(): Seq[Meter.Job] = {
+      val jobs = Meter.measure(spark)(q.processAllAvailable())._2.jobs
+      assert(jobs.forall(_.description.matches("stats batch \\d+")),
+        jobs.map(_.description))
+      jobs
+    }
+    try {
+      // into an empty store: the state-store job (the batch's
+      // materialization) and the staging write
+      val first = drain()
+      // a batch that rewrites a stored window adds the snapshot read's
+      // AQE stage; the bucket set rides the materialization (no
+      // discovery job)
+      landLog(logDir, ("k4", 7L, 1, 40L), ("k5", 20L, 0, 200L))
+      val second = drain()
+      assert(Seq(first, second).map(_.size) == Seq(2, 3),
+        Seq(first, second).map(_.map(j => (j.callSite, j.tasks))))
+      // one state task, not 8: no stats batch plans more than 8 tasks
+      assert(Seq(first, second).forall(_.map(_.tasks).sum <= 8),
+        Seq(first, second).map(_.map(_.tasks)))
+    } finally q.stop()
+    assert(stat.read(spark).get.count() == 3)
+  }
+
   test("streaming stats job: watermarked window agg upserts the stat store") {
     val root = tmpDir("stats")
     val logDir = s"$root/log"

@@ -655,13 +655,39 @@ class VersionedStoreSpec extends SparkSpec {
     VersionedStore.upsert(rows(1L to 200L, _ * 10), Seq("k"), root, nBuckets = 16)
     val jobs = countJobs(
       VersionedStore.upsert(rows(1L to 200L, _ * 10 + 1), Seq("k"), root))
-    // checkpoint + touched-collect + snapshot-read + staged write (AQE
-    // may stage the shuffle) — a constant handful, NOT O(buckets); the
-    // mutable store's old driver loop would have run >= 16 jobs here
-    assert(jobs <= 8,
+    // the checkpoint (which observes the touched buckets), then the
+    // staged write with its AQE stages — measured 5, NOT O(buckets);
+    // the mutable store's old driver loop would have run >= 16 jobs here
+    assert(jobs <= 5,
       s"upsert must be a constant number of jobs, got $jobs for 16 buckets")
     assert(VersionedStore.read(spark, root).as[(Long, Long)]
       .collect().toSeq.sorted == (1L to 200L).map(k => (k, k * 10 + 1)).sorted)
+  }
+
+  test("an upsert or delete epoch observes its buckets: no discovery job") {
+    val root = tmpDir("vstore_nodiscovery") + "/store"
+    VersionedStore.upsert(rows(1L to 40L, _ * 10), Seq("k"), root, nBuckets = 8)
+    val up = Meter.measure(spark)(
+      VersionedStore.upsert(rows(Seq(3L, 5L), _ * 10 + 1), Seq("k"), root))._2.jobs
+    val del = Meter.measure(spark)(
+      VersionedStore.delete(Seq(7L).toDF("k"), root))._2.jobs
+    // the materialization, then the staging write's jobs (AQE stages
+    // the snapshot read) — no `_bucket` collect between them
+    assert(up.head.callSite.startsWith("localCheckpoint at "), up.map(_.callSite))
+    assert(!up.exists(_.callSite.startsWith("collect at ")), up.map(_.callSite))
+    assert(up.size == 5, up.map(_.callSite))
+    // a delete's only collects are its key-presence probe
+    assert(del.size == 9, del.map(_.callSite))
+    assert(VersionedStore.read(spark, root).as[(Long, Long)].collect().toMap ==
+      (1L to 40L).filterNot(_ == 7L).map(k =>
+        k -> (if (k == 3L || k == 5L) k * 10 + 1 else k * 10)).toMap)
+
+    // past 64 buckets the set spans several masks: every bucket lands
+    val wide = tmpDir("vstore_widemask") + "/store"
+    VersionedStore.upsert(rows(1L to 300L, _ * 10), Seq("k"), wide, nBuckets = 130)
+    VersionedStore.upsert(rows(1L to 300L by 2, _ * 10 + 1), Seq("k"), wide)
+    assert(VersionedStore.read(spark, wide).as[(Long, Long)].collect().toMap ==
+      (1L to 300L).map(k => k -> (if (k % 2 == 1) k * 10 + 1 else k * 10)).toMap)
   }
 
   test("a store rebuilt at the same path in one mtime tick reads its own commits") {
