@@ -18,6 +18,21 @@ import org.apache.spark.sql.functions._
   * Verdict order mirrors the reference's check sequence: missing
   * destination first (etag_app.py:92-96), then size, then mtime, then
   * etag, else ok.
+  *
+  * [[apply]] is a lazy plan: each of its callers runs one action over
+  * it, so materializing it would only add a job. [[doubleCheck]] is
+  * eager: like the reference, which reads the properties once and
+  * reports that one verdict set as counters and as result files, it
+  * reads the three inventories once, when it is called, and every
+  * action on its frame ([[summary]], [[resultRows]] through
+  * [[graft.sinks.Sinks.writePartitionedCsv]], a count) reads those
+  * rows. Its verdicts are therefore a point-in-time snapshot: an
+  * inventory that changes after the call changes neither the counters
+  * nor the result files, so the two always agree. The rows are a
+  * `localCheckpoint` (executor memory and disk, lineage truncated: a
+  * lost executor fails the later action instead of re-reading the
+  * inventories); Spark's `ContextCleaner` releases them once the
+  * returned frame is unreachable.
   */
 object Verification {
 
@@ -52,7 +67,9 @@ object Verification {
     * change between the first read and the check). Here both reads are
     * property snapshots: verdicts that agree pass through; verdicts
     * that differ flag `flapping` (the retry class — re-verify next
-    * cycle instead of alarming). One extra key-partitioned join. */
+    * cycle instead of alarming). One extra key-partitioned join.
+    * Eager: returns the materialized verdict rows (the point-in-time
+    * contract above). */
   def doubleCheck(src: DataFrame, dstFirst: DataFrame, dstSecond: DataFrame,
                   keyCol: String): DataFrame = {
     val v1 = apply(src, dstFirst, keyCol)
@@ -62,6 +79,7 @@ object Verification {
       .withColumn("final_verdict",
         when(col("verdict") === col("verdict_recheck"), col("verdict"))
           .otherwise(lit("flapping")))
+      .localCheckpoint()
   }
 
   /** A11 — result-class rollup (etag_app.py:219-222 success/error

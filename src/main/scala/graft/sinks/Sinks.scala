@@ -317,8 +317,12 @@ object Sinks {
       else None
     val merged = existing match {
       case Some(cur) =>
-        cur.join(batch.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
-          .unionByName(batch)
+        // the anti-join keys and the union both read the batch: run it
+        // once (a stateful foreachBatch frame would run its state stage
+        // twice)
+        val once = batch.localCheckpoint()
+        cur.join(once.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
+          .unionByName(once)
       case None => batch
     }
     val old = new Path(storeDir + ".old")

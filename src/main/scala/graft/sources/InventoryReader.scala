@@ -121,11 +121,13 @@ object InventoryReader {
   def validateChecksums(spark: SparkSession, manifest: DataFrame,
                         stagingRoot: String): DataFrame = {
     val named = manifest.withColumn("file_name", substring_index(col("key"), "/", -1))
-    val collisions = named.groupBy("file_name").count()
-      .filter(col("count") > 1).limit(3).collect()
+    // a manifest lists at most thousands of files: find repeated
+    // basenames on the driver, not in a shuffle
+    val collisions = named.select("file_name").collect().map(_.getString(0))
+      .groupBy(identity).collect { case (n, ns) if ns.length > 1 => n }.take(3)
     require(collisions.isEmpty,
       "validateChecksums: manifest keys collide on basename (" +
-        collisions.map(_.get(0)).mkString(", ") +
+        collisions.mkString(", ") +
         ") — flat staging cannot distinguish them; mirror key paths instead")
     val actual = spark.read.format("binaryFile").load(stagingRoot)
       .select(

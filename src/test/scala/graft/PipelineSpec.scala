@@ -309,6 +309,24 @@ class TaskPipelineSpec extends SparkSpec {
     assert(statRows("stat8") == statRows("stat1"))
   }
 
+  test("a ParquetStore stats batch runs its state stage once") {
+    val root = tmpDir("statsonce")
+    val logDir = s"$root/log"
+    landLog(logDir, ("k1", 100L, 1, 30L))
+    val q = TaskPipeline.runStatsJob(spark, logDir, s"$root/stat", s"$root/ckpt")
+    try {
+      q.processAllAvailable()
+      // the second batch finds the store and upserts into it
+      landLog(logDir, ("k2", 50L, 0, 45L), ("k3", 10L, 1, 90L))
+      q.processAllAvailable()
+      assert(q.lastProgress.stateOperators.map(_.numStateStoreInstances).toSeq == Seq(1L))
+    } finally q.stop()
+    val rows = spark.read.parquet(s"$root/stat")
+      .select("start_time", "success_size", "success_num", "failed_size", "failed_num")
+      .as[(Long, Long, Long, Long, Long)].collect().toSeq.sorted
+    assert(rows == Seq((0L, 100L, 1L, 50L, 1L), (60L, 10L, 1L, 0L, 0L)))
+  }
+
   test("a stats batch is its state-store job and the store's upsert, one state task") {
     val root = tmpDir("statsjobs")
     val logDir = s"$root/log"

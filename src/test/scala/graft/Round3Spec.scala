@@ -278,6 +278,30 @@ class ChecksumSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("part-0.csv"))
   }
+
+  test("validateChecksums over a manifest document runs one collision probe job, no shuffle") {
+    val root = tmpDir("cksum3")
+    Files.createDirectories(Paths.get(root, "inv"))
+    val files = (0 until 3).map { i =>
+      Files.writeString(Paths.get(root, "inv", s"data-$i.csv"), s"rows $i")
+      s"""{"key": "inv/data-$i.csv", "size": 6, "MD5checksum": "${hex(s"rows $i")}"}"""
+    }
+    Files.writeString(Paths.get(root, "manifest.json"),
+      files.mkString("{\"files\": [", ",\n", "]}"))
+    val manifest = InventoryReader.manifestFiles(
+      InventoryReader.readManifest(spark, s"$root/manifest.json"))
+    val (_, probe) = Meter.measure(spark) {
+      InventoryReader.validateChecksums(spark, manifest, s"$root/inv")
+    }
+    val (statuses, withStatus) = Meter.measure(spark) {
+      InventoryReader.validateChecksums(spark, manifest, s"$root/inv")
+        .groupBy("checksum_status").count().as[(String, Long)].collect().toMap
+    }
+    assert(statuses == Map("ok" -> 3L))
+    assert(probe.jobs.size == 1, probe.jobs.map(_.callSite))
+    assert(probe.shuffleBytes == 0)
+    assert(withStatus.jobs.size == 4, withStatus.jobs.map(_.callSite))
+  }
 }
 
 class RangedEtagSpec extends SparkSpec {

@@ -1,113 +1,60 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Throwaway probe main (test scope) — rewritten per verify wave.
-  * Wave: round-16 — the maintainer ledgers on the MVCC merge-on-read
-  * path: LmStream/TrainStream land batches as delta generations under
-  * tagged commits, compaction is policy, and replay/redelivery still
-  * converge to the driver-side folds. */
+  * Wave: Module IV verifies once — `doubleCheck` materializes its
+  * verdicts, which the summary and the result files then read; the
+  * probe prints each step's jobs and the comparison plan's reused
+  * exchanges. */
 object VerifyProbe {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(8)
-    import spark.implicits._
-    import graft.sinks.VersionedStore
+    val spark = GraftSession.local(4)
+    import graft.ops.Verification
+    import graft.sources.InventoryReader
 
-    val work = java.nio.file.Files.createTempDirectory("probe_r16").toString
+    val work = java.nio.file.Files.createTempDirectory("probe_verify").toString
+    val r = new scala.util.Random(7)
+    val src = (0 until 20000).map(i => (s"obj/$i", r.nextInt(1 << 20).toLong, r.nextInt(99)))
+    def inventory(name: String, flip: Int => Boolean): String = {
+      val dir = java.nio.file.Paths.get(work, name)
+      java.nio.file.Files.createDirectories(dir)
+      java.nio.file.Files.writeString(dir.resolve("data-000.csv"), src.iterator.map {
+        case (k, n, e) =>
+          Seq("b", k, n.toString, "2024-01-01T00:00:00.000Z",
+            if (flip(e)) "x%02d".format(e) else "e%02d".format(e), "STANDARD", "false", "")
+            .map(f => "\"" + f + "\"").mkString(",")
+      }.mkString("", "\n", "\n"))
+      dir.toString
+    }
+    def read(dir: String): DataFrame =
+      InventoryReader.goodRows(InventoryReader.readS3Inventory(spark, dir))
+        .select(col("Key").as("key"), col("Size").as("size"),
+          col("LastModifiedDate").as("mtime"), col("ETag").as("etag"))
+    val (s, d1, d2) = (inventory("src", _ => false), inventory("dst1", _ == 1),
+      inventory("dst2", e => e == 1 || e == 2))
 
-    // --- LmStream on the MOR ledgers: batches == driver-side fold
-    val docs = Seq(
-      (1L, "a b c a b c d"), (2L, "x y z x y"), (3L, "a b c q r s"),
-      (4L, "m n o p q r"), (5L, "a b c a b c")).toDF("doc_id", "text")
-    val lmRoot = s"$work/lm"
-    val stream = graft.streaming.LmStream("doc_id", col("text"), 2)
-    stream.bootstrap(docs.filter(col("doc_id") <= 2L), lmRoot)
-    stream.processBatch(docs.filter(col("doc_id").isin(3L, 4L)), 1L, lmRoot)
-    stream.processBatch(docs.filter(col("doc_id") === 5L), 2L, lmRoot)
-    // replay epoch 2 (checkpoint redelivery) and a late redelivery of
-    // already-landed ids at a NEW epoch: both no-ops
-    stream.processBatch(docs.filter(col("doc_id") === 5L), 2L, lmRoot)
-    stream.processBatch(docs.filter(col("doc_id").isin(3L, 5L)), 7L, lmRoot)
-    val got = stream.counts(spark, lmRoot)
-      .as[(String, String, Long)].collect().toSeq.sorted
-    val want = graft.ops.CorpusSignals.lmRawCounts(docs, col("text"), 2)
-      .as[(String, String, Long)].collect().toSeq.sorted
-    assert(got == want && want.nonEmpty, s"lm fold diverged: $got vs $want")
-    // the ledgers really are MOR vstores: delta commits present, and
-    // maintain() compacts chains back to plain
-    val kinds = VersionedStore.history(spark, s"$lmRoot/lm_counts")
-      .select("kind").as[String].collect().toSet
-    assert(kinds.exists(_.startsWith("dapply")), s"expected deltas: $kinds")
-    stream.maintain(spark, lmRoot)
-    assert(stream.counts(spark, lmRoot)
-      .as[(String, String, Long)].collect().toSeq.sorted == want,
-      "compaction must be a content no-op")
+    // the comparison plan doubleCheck checkpoints, run here on its own
+    val source = read(s)
+    val v1 = Verification(source, read(d1), "key")
+    val v2 = Verification(source, read(d2), "key").select(col("key"), col("verdict").as("r"))
+    val lazyPlan = v1.join(v2, Seq("key"))
+    lazyPlan.write.format("noop").mode("overwrite").save()
+    val plan = lazyPlan.queryExecution.executedPlan.toString
+    println(s"reused exchanges in the comparison plan: ${"ReusedExchange".r.findAllIn(plan).size}")
+    println(plan)
 
-    // --- TrainStream: stream fold == driver fold; docs ledger MOR
-    val emb = (1L to 60L).map(i =>
-      (i, Array.tabulate(4)(j => ((i + j) % 7).toFloat / 7f),
-        (i % 2).toInt)).toDF("vec_id", "embedding", "label")
-    val ts = graft.streaming.TrainStream("vec_id",
-      b => graft.ops.LinearTrainer.embeddingFeatures(b, "vec_id",
-        col("embedding")),
-      graft.ops.LinearTrainer.labelU(col("label") === 0), 1L << 24)
-    val tRoot = s"$work/train"
-    def tb(i: Long) = emb.filter(col("vec_id") % 3 === i)
-    ts.processBatch(tb(0), 0L, tRoot)
-    ts.processBatch(tb(1), 1L, tRoot)
-    ts.processBatch(tb(1), 1L, tRoot) // replay
-    ts.processBatch(tb(2), 2L, tRoot)
-    ts.processBatch(tb(0), 9L, tRoot) // late redelivery: no-op
-    val wGot = ts.weights(spark, tRoot).as[(Long, Long)].collect().toMap
-    val wWant = Seq(tb(0), tb(1), tb(2))
-      .foldLeft(Map.empty[Long, Long]) { (w, b) =>
-        graft.ops.LinearTrainer.lmsTrain(
-          graft.ops.LinearTrainer.embeddingFeatures(b, "vec_id",
-            col("embedding")),
-          b.select(col("vec_id"),
-            graft.ops.LinearTrainer.labelU(col("label") === 0).as("y_u")),
-          "vec_id", steps = 1, lrDenom = 1L << 24, initWeights = w).weights
-      }
-    assert(wGot == wWant && wWant.nonEmpty,
-      s"train fold diverged: $wGot vs $wWant")
-    val tKinds = VersionedStore.history(spark, s"$tRoot/tr_docs")
-      .select("kind").as[String].collect().toSet
-    assert(tKinds.exists(_.startsWith("dapply")),
-      s"docs ledger must be MOR: $tKinds")
-
-    // --- change-feed replica with admission control + vacuum lease
-    val src = s"$work/src"
-    VersionedStore.upsert((1L to 30L).map(k => (k, k)).toDF("k", "v"),
-      Seq("k"), src, nBuckets = 4)
-    (1 to 5).foreach(i => VersionedStore.deltaUpsert(
-      Seq((i.toLong, i * 100L)).toDF("k", "v"), Seq("k"), src))
-    val rq = graft.streaming.ReplicaStream.subscribe(spark, src,
-      s"$work/replica", s"$work/rckpt", maxEpochsPerTrigger = Some(2L))
-    try rq.processAllAvailable() finally rq.stop()
-    val repSnap = VersionedStore.read(spark, s"$work/replica")
-      .as[(Long, Long)].collect().toMap
-    val srcSnap = VersionedStore.read(spark, src)
-      .as[(Long, Long)].collect().toMap
-    assert(repSnap == srcSnap, "replica must mirror the source")
-    // the subscription left a lease; a routine head vacuum holds at it
-    VersionedStore.vacuum(src, VersionedStore.currentEpoch(src))
-    assert(VersionedStore.retentionWatermark(src) <= 6L,
-      s"lease floor: ${VersionedStore.retentionWatermark(src)}")
-
-    // --- catalog namespaces + friendly VERSION AS OF error
-    spark.conf.set("spark.sql.catalog.gprobe",
-      classOf[graft.connectors.GraftVStoreCatalog].getName)
-    spark.conf.set("spark.sql.catalog.gprobe.root", work)
-    val nsRows = spark.sql("SHOW NAMESPACES IN gprobe").collect()
-    assert(nsRows.map(_.getString(0)).toSet == Set("default"))
-    val bad = try {
-      spark.sql("SELECT * FROM gprobe.src VERSION AS OF 'oops'").collect()
-      "no-error"
-    } catch { case t: Throwable =>
-      t.getMessage + Option(t.getCause).map(_.getMessage).getOrElse("") }
-    assert(bad.contains("commit EPOCH"), s"friendly version error: $bad")
-
-    println("VERIFY_PROBE_R16 OK")
+    val (v, check) = Meter.measure(spark)(Verification.doubleCheck(read(s), read(d1), read(d2), "key"))
+    val (sum, summary) = Meter.measure(spark)(Verification.summary(v).collect())
+    val (_, write) = Meter.measure(spark) {
+      graft.sinks.Sinks.writePartitionedCsv(
+        Verification.resultRows(v, current_timestamp(), lit(0L)), s"$work/results", "result")
+    }
+    for ((n, c) <- Seq("doubleCheck" -> check, "summary" -> summary, "write" -> write))
+      println(f"$n%-12s jobs ${c.jobs.size}%2d tasks ${c.jobs.map(_.tasks).sum}%3d " +
+        f"shuffle ${c.shuffleBytes / 1e6}%.2f MB wall ${c.wallS}%.2f s")
+    println(sum.map(r => s"${r.get(0)}=${r.get(1)}").sorted.mkString(" "))
     spark.stop()
   }
 }
